@@ -12,10 +12,13 @@ chat/email/pager without coupling the job to an HTTP endpoint.
 from __future__ import annotations
 
 import json
+import logging
 from collections.abc import Callable
 from typing import Any
 
 AlertRows = list[dict[str, Any]]
+
+log = logging.getLogger(__name__)
 
 
 def format_anomaly_message(rows: AlertRows) -> str:
@@ -34,8 +37,9 @@ def slack_webhook_sink(webhook_url: str, timeout_s: float = 5.0) -> Callable[[Al
     """K6: POST the formatted alert to a Slack-style webhook.
 
     Import of ``requests``/urllib happens at call time so environments
-    without network never pay for it; failures are swallowed after one
-    attempt (alerting must never fail the streaming batch).
+    without network never pay for it. A failed delivery never fails the
+    streaming batch: it is tried once, logged as a warning with its
+    error, and counted on the returned callable's ``failures``.
     """
 
     def send(rows: AlertRows) -> None:
@@ -49,9 +53,13 @@ def slack_webhook_sink(webhook_url: str, timeout_s: float = 5.0) -> Callable[[Al
                 webhook_url, data=payload, headers={"Content-Type": "application/json"}
             )
             urlopen(req, timeout=timeout_s).read()
-        except Exception:
-            pass  # alert delivery is best-effort by design
+        except Exception as e:
+            send.failures += 1
+            log.warning(
+                "alert delivery to %s failed (%d rows): %r", webhook_url, len(rows), e
+            )
 
+    send.failures = 0
     return send
 
 

@@ -42,7 +42,10 @@ from sparktrends_spark.plans.market import (
 )
 from sparktrends_spark.plans.registry import query
 from sparktrends_spark.sources.tables import _ensure_read_confs, load_table
-from sparktrends_spark.streaming.pipeline import await_or_raise
+from sparktrends_spark.streaming.pipeline import (
+    await_or_raise,
+    start_to_completion,
+)
 from sparktrends_spark.streaming.sinks import (
     read_upserted,
     upsert_parquet_bucketed,
@@ -144,33 +147,17 @@ def run_upsert_stream(
                 return
         _self.upsert_parquet_bucketed(batch_df, table, keys=keys, version=batch_id)
 
-    spark = result.sparkSession
-    # A stateful query materializes one state-store instance per shuffle
-    # partition; a default-conf session (200) spends more time opening
-    # 400 empty HDFS-state dirs than aggregating. The partition count is
-    # baked into the query at start, so scope the override to this run
-    # and restore afterwards (values are partition-count-independent).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(prev), spark.sparkContext.defaultParallelism)),
+    # start_to_completion starts at core width: a default-conf session
+    # (200) would otherwise open one state-store instance per shuffle
+    # partition, mostly empty
+    start_to_completion(
+        result,
+        lambda writer: writer.outputMode(output_mode)
+        .foreachBatch(process)
+        .option("checkpointLocation", ckpt_dir),
+        timeout_s,
     )
-    try:
-        q = (
-            result.writeStream.outputMode(output_mode)
-            .foreachBatch(process)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            await_or_raise(q, timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return read_upserted(spark, table)
+    return read_upserted(result.sparkSession, table)
 
 
 @query(

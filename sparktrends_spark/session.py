@@ -26,10 +26,12 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def default_shuffle_partitions() -> int:
-    """Scale-dependent: local default 32 (= the bench box's core count,
-    AQE coalesces below it); production sizes partitions to 100 MB-1 GB
-    of shuffle data (guide §2.2) via SPARK_GRAFT_SHUFFLE_PARTITIONS —
-    e.g. a 100 TB shuffle wants O(100k-1M) partitions, not 32."""
+    """Scale-dependent: local default 32, a fixed width that AQE
+    coalesces below on small batch shuffles (streaming queries start
+    capped at the core count instead, see streaming/pipeline.py);
+    production sizes partitions to 100 MB-1 GB of shuffle data (guide
+    §2.2) via SPARK_GRAFT_SHUFFLE_PARTITIONS — e.g. a 100 TB shuffle
+    wants O(100k-1M) partitions, not 32."""
     return int(
         os.environ.get(
             "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS

@@ -275,6 +275,22 @@ def _source_bytes(path: str) -> int | None:
         return None
 
 
+def _fanout_floor_scale() -> float:
+    """``SPARK_GRAFT_FANOUT_FLOOR_SCALE`` (default 1), checked so a typo
+    fails naming the knob instead of as a bare ``float()`` error."""
+    raw = os.environ.get("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "1")
+    try:
+        scale = float(raw)
+    except ValueError:
+        scale = math.nan
+    if not (math.isfinite(scale) and scale >= 0):
+        raise ValueError(
+            f"SPARK_GRAFT_FANOUT_FLOOR_SCALE={raw!r}: expected a number >= 0"
+            " (0 disables the fan-out floors)"
+        )
+    return scale
+
+
 def scan_parallel(
     df: DataFrame,
     min_partitions: int | None = None,
@@ -323,7 +339,7 @@ def scan_parallel(
     target = min_partitions or spark.sparkContext.defaultParallelism
     path = source_path or getattr(df, "_sparktrends_scan_path", None)
     if min_partition_bytes and path:
-        scale = float(os.environ.get("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "1"))
+        scale = _fanout_floor_scale()
         floor = int(min_partition_bytes * scale)
         if floor > 0:
             nbytes = _source_bytes(path)

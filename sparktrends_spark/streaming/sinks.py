@@ -394,6 +394,14 @@ def upsert_parquet_bucketed(
         "version_col": version_col,
         "buckets": {},
     }
+    if int(manifest["n_buckets"]) != int(n_buckets):
+        # rows hash with n_buckets but reads probe with the manifest's
+        # count: a mismatch would split keys across buckets
+        raise ValueError(
+            f"{final}: table has {manifest['n_buckets']} buckets, this "
+            f"batch asked for {n_buckets} — rebucketing requires a "
+            "rebuild, not an append"
+        )
     # ---- schema evolution (add-column / numeric widening; see
     # _evolved_schema for the contract). The evolved schema also
     # drives the EXISTING-leaf read: touched buckets may have been

@@ -8,8 +8,11 @@ reference's anomaly computation (stock_stream.py:61-97) without
 re-reading external history each batch: O(changed symbols) per batch,
 state bounded at ``history`` rows per symbol.
 
-This is the genuinely-stateful path for when the bars table is too hot
-to re-scan per micro-batch; the default pipeline (pipeline.py) stays
+It takes a stream of finished bars (e.g. read from files), not the
+pipeline's aggregated bars: Spark rejects ``applyInPandasWithState``
+after an update-mode streaming aggregation ("not supported with
+aggregation on a streaming DataFrame"), so it cannot follow
+``streaming_minute_bars``. The pipeline (pipeline.py) therefore stays
 on the stream-static pattern.
 """
 

@@ -94,6 +94,22 @@ def test_scan_parallel_byte_floor_caps_fanout(spark, monkeypatch):
     assert disabled.rdd.getNumPartitions() == cores
 
 
+def test_malformed_fanout_floor_scale_names_the_knob(spark, monkeypatch):
+    import pytest
+
+    from sparktrends_spark.sources.tables import scan_parallel
+
+    docs = load_table(spark, SF_DIR, "documents")
+    for bad in ("1,5", "", "nan", "-1"):
+        monkeypatch.setenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", bad)
+        with pytest.raises(
+            ValueError, match=f"SPARK_GRAFT_FANOUT_FLOOR_SCALE={bad!r}"
+        ):
+            scan_parallel(docs, min_partition_bytes=1024)
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "0.5")
+    scan_parallel(docs, min_partition_bytes=1024)  # a valid value plans
+
+
 def test_source_bytes_handles_globs(tmp_path):
     from sparktrends_spark.sources.tables import _source_bytes
 

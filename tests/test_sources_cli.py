@@ -103,6 +103,30 @@ def test_alert_formatting_and_collecting_sink():
     assert "A" in msg and "vwap_5=2.0" in msg
 
 
+def test_slack_sink_counts_and_logs_failed_deliveries(caplog):
+    import logging
+    import socket
+
+    from sparktrends_spark.alerts import slack_webhook_sink
+
+    # a port that was just free and is now closed: connection refused
+    # at once, no network involved
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    send = slack_webhook_sink(f"http://127.0.0.1:{port}/hook", timeout_s=2.0)
+    rows = [{"symbol": "A", "timestamp": "t", "close": 1.0}]
+    with caplog.at_level(logging.WARNING, logger="sparktrends_spark.alerts"):
+        send(rows)  # must not raise: alerting never fails the batch
+        send(rows)
+        send([])  # nothing to deliver, not a failure
+    assert send.failures == 2
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 2
+    assert f"127.0.0.1:{port}" in warnings[0].getMessage()
+    assert "refused" in warnings[0].getMessage().lower()
+
+
 def test_cli_batch_and_meta(spark, tmp_path, capsys):
     from sparktrends_spark.cli import main
 

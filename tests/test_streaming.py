@@ -9,6 +9,7 @@ input — streaming is an incremental evaluation of the same query.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -168,6 +169,117 @@ def test_checkpoint_restart_is_idempotent(spark, trade_dir, tmp_path):
     assert key_counts.filter(F.col("count") > 1).count() == 0
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _state_partitions(query) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def _assert_pipeline_matches_batch(spark, trade_dir, tmp_path):
+    """Streamed bars == batch ``ohlcv_bars`` over every trade, and each
+    symbol's last metrics row == batch ``vwap_metrics`` over those bars."""
+    from sparktrends_spark.operators.metrics import vwap_metrics
+    from sparktrends_spark.operators.parse import parse_trade_envelope
+    from sparktrends_spark.streaming.sinks import read_upserted
+
+    bar_cols = ["symbol", "timestamp", "open", "high", "low", "close", "volume"]
+    want_bars = ohlcv_bars(parse_trade_envelope(spark.read.text(trade_dir)))
+    got_bars = read_upserted(spark, str(tmp_path / "bars"))
+    assert got_bars.select(bar_cols).orderBy("symbol", "timestamp").collect() == (
+        want_bars.select(bar_cols).orderBy("symbol", "timestamp").collect()
+    )
+
+    def last_per_symbol(df):
+        cols = ["symbol", "timestamp", "close", "vwap_5", "vol_5"]
+        return {
+            r.symbol: tuple(
+                round(v, 6) if isinstance(v, float) else v for v in r
+            )
+            for r in df.select(cols).orderBy("timestamp").collect()
+        }
+
+    assert last_per_symbol(read_upserted(spark, str(tmp_path / "metrics"))) == (
+        last_per_symbol(vwap_metrics(want_bars))
+    )
+
+
+def _run_bar_query(spark, trade_dir, tmp_path):
+    query = run_bar_pipeline(
+        streaming_minute_bars(
+            trade_stream_from_files(spark, trade_dir), watermark="2 minutes"
+        ),
+        bars_path=str(tmp_path / "bars"),
+        metrics_path=str(tmp_path / "metrics"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    query.awaitTermination(180)
+    assert not query.isActive and query.exception() is None
+    return query
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+
+
+def test_run_bar_pipeline_caps_state_store_at_core_width(
+    spark, trade_dir, tmp_path
+):
+    """A fresh checkpoint under a session wider than the cores gets one
+    state-store partition per core; the caller's conf comes back."""
+    assert spark.sparkContext.defaultParallelism == 8
+    with _shuffle_partitions(spark, 16):
+        query = _run_bar_query(spark, trade_dir, tmp_path)
+        assert spark.conf.get(_SHUFFLE_PARTITIONS) == "16"
+    assert _state_partitions(query) == {8}
+    _assert_pipeline_matches_batch(spark, trade_dir, tmp_path)
+
+
+def test_run_bar_pipeline_restart_keeps_checkpoint_width(
+    spark, trade_dir, tmp_path, monkeypatch
+):
+    """A checkpoint first created at 16 partitions (an uncapped start)
+    restarts at 16 — Spark reads the count from the offset log — and
+    lands on the same result as batch."""
+    import sparktrends_spark.streaming.pipeline as pipeline
+
+    with _shuffle_partitions(spark, 16):
+        monkeypatch.setattr(
+            pipeline, "start_at_core_width", lambda writer, _spark: writer.start()
+        )
+        first = _run_bar_query(spark, trade_dir, tmp_path)
+        assert _state_partitions(first) == {16}
+        monkeypatch.undo()
+
+        _write_frames(
+            trade_dir,
+            "b2.json",
+            [
+                _frame(
+                    [
+                        ("AAA", 14.0, 2.0, _minute_ms(3, 1)),
+                        ("CCC", 1.0, 1.0, _minute_ms(3, 20)),
+                    ]
+                )
+            ],
+        )
+        restarted = _run_bar_query(spark, trade_dir, tmp_path)
+        assert spark.conf.get(_SHUFFLE_PARTITIONS) == "16"
+    assert _state_partitions(restarted) == {16}
+    _assert_pipeline_matches_batch(spark, trade_dir, tmp_path)
+
+
 def test_dedup_within_watermark(spark, tmp_path):
     """Re-delivered duplicate trades collapse before aggregation."""
     d = tmp_path / "dup"
@@ -318,6 +430,30 @@ def test_upsert_parquet_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
     # replay the same batch: converges, still no duplicates
     upsert_parquet_bucketed(one, path, keys=("k",), n_buckets=8, version=1)
     assert read_upserted(spark, path).count() == 200
+
+
+def test_upsert_bucketed_rejects_a_different_bucket_count(spark, tmp_path):
+    """Rows hash with the caller's ``n_buckets`` and reads probe with the
+    manifest's: reopening an 8-bucket table with 4 would split keys
+    across buckets and read back duplicates, so it must fail loudly
+    and leave the table as it was."""
+    from sparktrends_spark.streaming.sinks import (
+        read_manifest,
+        read_upserted,
+        upsert_parquet_bucketed,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.range(100).select(F.col("id").alias("k"), F.lit(0).alias("v"))
+    upsert_parquet_bucketed(base, path, keys=("k",), n_buckets=8, version=0)
+    before = read_manifest(path)
+    update = spark.range(100).select(F.col("id").alias("k"), F.lit(1).alias("v"))
+    with pytest.raises(ValueError, match="table has 8 buckets.*asked for 4"):
+        upsert_parquet_bucketed(update, path, keys=("k",), n_buckets=4, version=1)
+    assert read_manifest(path) == before
+    out = read_upserted(spark, path)
+    assert out.count() == 100 and out.select("k").distinct().count() == 100
+    assert {r.v for r in out.select("v").distinct().collect()} == {0}
 
 
 def test_upsert_bucketed_writes_one_file_per_leaf(spark, tmp_path):

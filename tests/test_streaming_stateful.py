@@ -162,97 +162,3 @@ def test_stream_stream_interval_join(spark, tmp_path):
     )
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1 and rows[0].symbol == "A"
-
-
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _with_rocksdb(spark):
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    return prev
-
-
-def _restore_provider(spark, prev):
-    if prev is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    import pytest
-
-    pytest.importorskip("google.protobuf")  # TWS control channel dep
-    from sparktrends_spark.streaming.stateful_v2 import running_totals
-
-    prev = _with_rocksdb(spark)
-    d = tmp_path / "tw"
-    d.mkdir()
-    _write(d, "b0.json", [_bar("A", 0, 10.0, 1.0), _bar("A", 1, 12.0, 3.0)])
-    _write(d, "b1.json", [_bar("A", 2, 11.0, 2.0), _bar("B", 0, 5.0, 7.0)])
-
-    out = str(tmp_path / "out")
-    totals = running_totals(_bar_stream(spark, str(d)))
-    (
-        totals.writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: write_batch_partitioned(b, i, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(180)
-    )
-    _restore_provider(spark, prev)
-    rows = spark.read.parquet(out).collect()
-    # batch 0 emits A(2, 4.0); batch 1 emits A(3, 6.0) and B(1, 7.0):
-    # cumulative state carried across micro-batches
-    final = {}
-    for r in sorted(rows, key=lambda r: r.n_total):
-        final[r.symbol] = (r.n_total, r.volume_total)
-    assert final["A"] == (3, 6.0)
-    assert final["B"] == (1, 7.0)
-    a_emits = sorted((r.n_total, r.volume_total) for r in rows if r.symbol == "A")
-    assert a_emits == [(2, 4.0), (3, 6.0)]
-
-
-def test_transform_with_state_ttl_dedup(spark, tmp_path):
-    import pytest
-
-    pytest.importorskip("google.protobuf")  # TWS control channel dep
-    from pyspark.sql import functions as F
-
-    from sparktrends_spark.streaming.stateful_v2 import ttl_dedup_counts
-
-    prev = _with_rocksdb(spark)
-    d = tmp_path / "dd"
-    d.mkdir()
-    _write(d, "b0.json", [_bar("A", 0, 10.0, 1.0), _bar("A", 0, 10.0, 1.0)])
-    _write(d, "b1.json", [_bar("A", 0, 10.0, 1.0), _bar("C", 0, 2.0, 1.0)])
-
-    keyed = _bar_stream(spark, str(d)).select(
-        F.concat_ws("|", "symbol", F.col("timestamp").cast("string"), "close")
-        .alias("dedup_key")
-    )
-    out = str(tmp_path / "out")
-    (
-        ttl_dedup_counts(keyed, ttl_ms=3_600_000)
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: write_batch_partitioned(b, i, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(180)
-    )
-    _restore_provider(spark, prev)
-    rows = spark.read.parquet(out).collect()
-    by_key_batch = {(r.dedup_key, r.batch_id): (r.n_new, r.n_dupes) for r in rows}
-    a_key = next(k for k, _ in by_key_batch if k.startswith("A|"))
-    # batch 0: first occurrence kept, in-batch duplicate counted
-    assert by_key_batch[(a_key, 0)] == (1, 1)
-    # batch 1: cross-batch replay fully deduped by state
-    assert by_key_batch[(a_key, 1)] == (0, 1)
-    c_key = next(k for k, _ in by_key_batch if k.startswith("C|"))
-    assert by_key_batch[(c_key, 1)] == (1, 0)
