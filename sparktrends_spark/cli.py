@@ -64,6 +64,7 @@ def _cmd_stream(args: argparse.Namespace) -> int:
         streaming_minute_bars,
         trade_stream_from_files,
     )
+    from sparktrends_spark.streaming.pipeline import await_or_raise
 
     spark = _session(args, "sparktrends-stream")
     trades = trade_stream_from_files(spark, args.frames)
@@ -77,7 +78,16 @@ def _cmd_stream(args: argparse.Namespace) -> int:
         available_now=args.available_now,
         processing_time=None if args.available_now else args.trigger,
     )
-    query.awaitTermination(args.timeout if args.available_now else None)
+    if not args.available_now:
+        query.awaitTermination()
+        return 0
+    # a timed-out backlog is a partial export: fail, and stop the query
+    # rather than leave it running behind a returned command
+    try:
+        await_or_raise(query, args.timeout)
+    finally:
+        if query.isActive:
+            query.stop()
     return 0
 
 

@@ -1766,6 +1766,7 @@ def q_stream_embedding_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFra
         build_ivfpq_index,
         ivfpq_index_topk,
     )
+    from sparktrends_spark.streaming.pipeline import start_to_completion
 
     base = sf_dir.rstrip("/")
     idx = _idx_path("ivfpq_stream", sf_dir)
@@ -1790,13 +1791,12 @@ def q_stream_embedding_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFra
         append_ivfpq_index(batch_df, idx, dim=_DIM)
 
     ckpt = tempfile.mkdtemp(prefix="ivfpq_stream_ckpt_")
-    (
-        stream.writeStream.outputMode("append")
+    start_to_completion(
+        stream,
+        lambda writer: writer.outputMode("append")
         .foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("checkpointLocation", ckpt),
+        300,
     )
     queries = _emb_queries(spark, sf_dir).select(
         F.col("vec_id").alias("query_id"), "embedding"

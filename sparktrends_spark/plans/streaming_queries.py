@@ -42,10 +42,7 @@ from sparktrends_spark.plans.market import (
 )
 from sparktrends_spark.plans.registry import query
 from sparktrends_spark.sources.tables import _ensure_read_confs, load_table
-from sparktrends_spark.streaming.pipeline import (
-    await_or_raise,
-    start_to_completion,
-)
+from sparktrends_spark.streaming.pipeline import start_to_completion
 from sparktrends_spark.streaming.sinks import (
     read_upserted,
     upsert_parquet_bucketed,
@@ -845,18 +842,13 @@ def build_stream_doc_incremental_dedup(
             flags, table, keys=("doc_id",), version=batch_id
         )
 
-    q = (
-        docs.writeStream.outputMode("append")
+    start_to_completion(
+        docs,
+        lambda writer: writer.outputMode("append")
         .foreachBatch(process)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt_dir),
+        300,
     )
-    try:
-        await_or_raise(q, 300)
-    finally:
-        if q.isActive:
-            q.stop()
     return read_upserted(spark, table)
 
 
@@ -918,18 +910,13 @@ def build_stream_order_cdc_apply(
             version=batch_id,
         )
 
-    q = (
-        changes.writeStream.outputMode("append")
+    start_to_completion(
+        changes,
+        lambda writer: writer.outputMode("append")
         .foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        300,
     )
-    try:
-        await_or_raise(q, 300)
-    finally:
-        if q.isActive:
-            q.stop()
     return read_upserted(spark, table)
 
 
@@ -1117,18 +1104,13 @@ def build_stream_order_status_ivm(
             version=batch_id,
         )
 
-    q = (
-        changes.writeStream.outputMode("append")
+    start_to_completion(
+        changes,
+        lambda writer: writer.outputMode("append")
         .foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        300,
     )
-    try:
-        await_or_raise(q, 300)
-    finally:
-        if q.isActive:
-            q.stop()
     return read_upserted(spark, agg_t).select(
         "o_orderstatus",
         F.col("n_rows").cast("bigint").alias("n_orders"),
@@ -1258,16 +1240,11 @@ def q_stream_corpus_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append", batch_id=batch_id,
         )
 
-    q = (
-        docs.writeStream.outputMode("append")
+    start_to_completion(
+        docs,
+        lambda writer: writer.outputMode("append")
         .foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        300,
     )
-    try:
-        await_or_raise(q, 300)
-    finally:
-        if q.isActive:
-            q.stop()
     return shard_manifest(spark.read.parquet(out), weight_col="n_chars")

@@ -23,8 +23,8 @@ against sqlite in tests and against psycopg2/any driver in deployment:
   commit per partition. Replaying a micro-batch re-upserts the same
   natural keys — idempotent, unlike the reference's at-least-once
   append. This is the K1 "at scale prefer batch upsert" path from
-  SURVEY §2.2, completing streaming/sinks.upsert_parquet's semantics
-  for JDBC targets.
+  SURVEY §2.2, carrying the per-key last-writer-wins contract of
+  streaming/sinks.upsert_parquet_bucketed to JDBC targets.
 """
 
 from __future__ import annotations
@@ -92,7 +92,7 @@ def write_table(
     """K1/K2: JDBC append or overwrite.
 
     At-least-once under retries — for exactly-once use natural-key
-    upserts (streaming/sinks.upsert_parquet semantics) or stage to
+    upserts (streaming/sinks.upsert_parquet_bucketed semantics) or stage to
     parquet and MERGE db-side.
     """
     writer = (
@@ -194,7 +194,7 @@ def upsert_statement(
     """Dialect MERGE statement with DB-API placeholders, one row/param.
 
     Non-key columns take the incoming value (last writer wins — same
-    contract as streaming/sinks.upsert_parquet). Key-only tables
+    contract as streaming/sinks.upsert_parquet_bucketed). Key-only tables
     degrade to insert-if-absent.
     """
     bad = [k for k in keys if k not in columns]

@@ -246,7 +246,9 @@ def _estimate_scan_partitions(spark: SparkSession, path: str) -> int | None:
 
 def _source_bytes(path: str) -> int | None:
     """On-disk bytes of a local file/dir/glob source, or None when
-    non-local/unstattable."""
+    non-local/unstattable or when a directory has no top-level data
+    files (empty, or a nested ``col=value/`` layout): a 0 there would
+    clamp the byte-floored fan-out to one partition."""
     lp = _local_path(path)
     if lp is None:
         return None
@@ -265,11 +267,12 @@ def _source_bytes(path: str) -> int | None:
         return total
     try:
         if os.path.isdir(lp):
-            return sum(
+            sizes = [
                 e.stat().st_size
                 for e in os.scandir(lp)
                 if e.is_file() and not e.name.startswith(("_", "."))
-            )
+            ]
+            return sum(sizes) if sizes else None
         return os.stat(lp).st_size
     except OSError:
         return None

@@ -18,10 +18,7 @@ from sparktrends_spark.streaming.windows import (
     sliding_window_counts,
     streaming_minute_bars,
 )
-from sparktrends_spark.streaming.sinks import (
-    upsert_parquet,
-    write_batch_partitioned,
-)
+from sparktrends_spark.streaming.sinks import write_batch_partitioned
 from sparktrends_spark.streaming.pipeline import (
     run_bar_pipeline,
     start_to_completion,
@@ -36,7 +33,6 @@ __all__ = [
     "session_window_agg",
     "sliding_window_counts",
     "streaming_minute_bars",
-    "upsert_parquet",
     "write_batch_partitioned",
     "run_bar_pipeline",
     "start_to_completion",

@@ -40,11 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from sparktrends_spark.operators.metrics import anomalies, vwap_metrics
-from sparktrends_spark.streaming.upsert import (
-    BucketedParquetUpsertSink,
-    UpsertSink,
-    get_upsert_sink,
-)
+from sparktrends_spark.streaming.upsert import BucketedParquetUpsertSink
 
 AlertFn = Callable[[list[dict[str, Any]]], None]
 
@@ -116,7 +112,7 @@ def run_bar_pipeline(
     alert_limit: int = 1000,
     available_now: bool = False,
     processing_time: str | None = None,
-    sink: UpsertSink | str = "bucketed",
+    sink: BucketedParquetUpsertSink | str = "bucketed",
 ) -> StreamingQuery:
     """Start the full bars -> metrics -> alerts streaming query.
 
@@ -124,24 +120,27 @@ def run_bar_pipeline(
     ``streaming_minute_bars``); runs in update mode so refining windows
     re-emit and the upsert keeps the latest version of each bar.
 
-    ``sink`` picks the upsert strategy (``streaming/upsert.py``);
-    default is the bucketed manifest-committed sink, so per-batch write
-    cost is O(buckets touched by the batch's symbols), not O(bars
-    history) — the bars table grows without bound under a long-running
-    stream, and a flat read-merge-rewrite (the previous default) made
-    every micro-batch pay for all of it, the same failure class as the
-    reference's per-batch Postgres full re-read (stock_stream.py:169-180).
+    ``sink`` is ``"bucketed"`` or a ``BucketedParquetUpsertSink``
+    (``streaming/upsert.py``): the manifest-committed bucketed upsert,
+    so per-batch write cost is O(buckets touched by the batch's
+    symbols), not O(bars history). The bars table grows without bound
+    under a long-running stream; a whole-table read-merge-rewrite would
+    make every micro-batch pay for all of it, the same failure class
+    as the reference's per-batch Postgres full re-read
+    (stock_stream.py:169-180). Any other string raises ``ValueError``
+    before a query starts.
     """
     if isinstance(sink, str):
+        if sink != "bucketed":
+            raise ValueError(
+                f"unknown upsert sink {sink!r}: pass 'bucketed' or a "
+                "BucketedParquetUpsertSink"
+            )
         # bucket by SYMBOL alone (a prefix of the (symbol, timestamp)
         # upsert key): a symbol's whole bar history co-locates in one
         # bucket, so the per-batch metrics read below prunes to the
         # batch's symbols' buckets instead of scanning all bars.
-        sink = (
-            BucketedParquetUpsertSink(n_buckets=32, bucket_cols=("symbol",))
-            if sink == "bucketed"
-            else get_upsert_sink(sink)
-        )
+        sink = BucketedParquetUpsertSink(n_buckets=32, bucket_cols=("symbol",))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -152,10 +151,10 @@ def run_bar_pipeline(
             sink.upsert(
                 batch_df, bars_path, keys=("symbol", "timestamp"), version=batch_id
             )
-            # keyed read: with the symbol-bucketed sink this scans only
-            # the buckets holding the batch's symbols (O(batch symbols),
-            # not O(bars history)); other strategies fall back to the
-            # full committed read and the semi-join below still scopes.
+            # keyed read: the symbol-bucketed sink scans only the
+            # buckets holding the batch's symbols (O(batch symbols), not
+            # O(bars history)); the semi-join below drops the other
+            # symbols sharing those buckets.
             bars_table = sink.read_keyed(
                 spark, bars_path, batch_df.select("symbol").distinct()
             )
@@ -193,9 +192,9 @@ def await_or_raise(query, timeout_s: float) -> None:
     """``awaitTermination`` that treats a timeout as the failure it
     is: a False return means the availableNow backlog was NOT fully
     processed, and a caller that proceeds to read the sink computes
-    from a partial export — wrong but quiet. Every
-    run-to-completion site here and in plans/streaming_queries routes
-    through this so the timeout is loud."""
+    from a partial export — wrong but quiet. Every run-to-completion
+    site (``start_to_completion`` and the CLI's ``--available-now``)
+    routes through this so the timeout is loud."""
     if not query.awaitTermination(timeout_s):
         raise RuntimeError(
             f"streaming query {query.id} still active after"

@@ -2,32 +2,32 @@
 
 The reference's ``foreachBatch`` does plain JDBC appends
 (stock_stream.py:169-180 -> spark/utilities.py:36-44): at-least-once,
-so a retried micro-batch double-writes. Two idempotence strategies:
+so a retried micro-batch double-writes. Two idempotent writes replace
+it:
 
 - ``write_batch_partitioned``: batch-id-keyed dynamic-partition
   overwrite — replaying batch N rewrites only partition batch_id=N.
   Right for append-mode streams (rows of a batch are final).
-- ``upsert_parquet``: natural-key upsert (last writer wins) — right
+- ``upsert_parquet_bucketed``: natural-key upsert (last writer wins)
   for update-mode streams that re-emit a (symbol, window) row as it
-  refines. Implemented read-merge-rewrite over parquet here; on a
-  cluster this is a Delta/Iceberg MERGE INTO keyed on the same
-  natural key — the call signature is the stable part.
-- ``upsert_parquet_bucketed``: the scale-shaped variant. The table is
-  laid out as ``_bucket=NN/`` partitions (hash of the natural key);
-  a micro-batch merges and dynamically overwrites ONLY the buckets
-  its keys land in, so per-batch write cost is O(batch ∪ touched
-  buckets), not O(table) — the property that keeps a long-running
-  update-mode stream viable as the sink table grows. This is the
+  refines. The table is laid out as ``_bucket=NN/`` partitions (hash
+  of the natural key); a micro-batch merges and dynamically
+  overwrites ONLY the buckets its keys land in, so per-batch write
+  cost is O(batch ∪ touched buckets), not O(table), and visibility
+  flips on one atomic ``_manifest.json`` commit. This is the
   hash-bucketed poor-man's MERGE INTO; Delta/Iceberg replace the
-  directory swap with a transactional log but the data movement is
-  the same.
+  manifest with a transactional log but the data movement is the
+  same. ``read_upserted`` and ``read_upserted_keyed`` read only the
+  leaves the manifest names.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -43,63 +43,6 @@ def write_batch_partitioned(df: DataFrame, batch_id: int, path: str) -> None:
         .partitionBy("batch_id")
         .parquet(path)
     )
-
-
-def upsert_parquet(
-    df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    version_col: str = "_batch_id",
-    version: int = 0,
-) -> None:
-    """Merge ``df`` into the parquet table at ``path`` by natural key.
-
-    Keeps, per key, the row with the highest ``version`` (micro-batch
-    id), so replays and update-mode re-emissions are both idempotent.
-    """
-    spark = df.sparkSession
-    incoming = df.withColumn(version_col, F.lit(int(version)))
-    # Recover from a crash that happened between the two renames of a
-    # previous call (final moved aside, staging not yet promoted): the
-    # backup is then the only copy of the table, so restore it BEFORE
-    # reading/merging — otherwise this call would treat the table as
-    # absent and the backup cleanup below would delete the last copy.
-    final = path.rstrip("/")
-    backup = final + ".old"
-    if not os.path.isdir(final) and os.path.isdir(backup):
-        os.rename(backup, final)
-    if os.path.isdir(path):
-        existing = spark.read.parquet(path)
-        # schema evolution (same contract as the bucketed sink — see
-        # _evolved_schema): the flat strategy rewrites the whole table
-        # per batch, so the evolved schema lands everywhere at once
-        target = _evolved_schema(existing.schema, incoming.schema, keys)
-        merged = _cast_to(existing, target).unionByName(
-            _cast_to(incoming, target), allowMissingColumns=True
-        )
-    else:
-        merged = incoming
-    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # Parquet can't transactionally overwrite a path it is reading, so
-    # stage the merged table then swap directories. The old table is
-    # renamed aside before the staging rename so a crash mid-swap
-    # leaves a recoverable copy (never an empty path). Cluster path:
-    # this read-merge-rewrite is a single MERGE INTO on Delta/Iceberg.
-    staging = final + ".staging"
-    latest.write.mode("overwrite").parquet(staging)
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
-    had_existing = os.path.isdir(final)
-    if had_existing:
-        os.rename(final, backup)
-    os.rename(staging, final)
-    if had_existing:
-        shutil.rmtree(backup)
 
 
 BUCKET_COL = "_bucket"
@@ -118,10 +61,6 @@ def read_manifest(final: str) -> dict | None:
         return None
     with open(p) as fh:
         return json.load(fh)
-
-
-import contextlib
-import time
 
 
 # test seam: called right before an upsert batch enters its manifest
@@ -183,7 +122,7 @@ _NUM_WIDTH = {"byte": 0, "short": 1, "integer": 2, "long": 3, "float": 4, "doubl
 
 
 def _evolved_schema(stored, incoming_schema, keys: Sequence[str]):
-    """Schema-evolution contract shared by the upsert sinks: given the
+    """Schema-evolution contract of the bucketed upsert: given the
     table's recorded schema and an incoming batch's schema, return the
     evolved table schema, or raise on an illegal change.
 
@@ -681,12 +620,9 @@ def read_upserted_keyed(
     scan still returns every column; rows of OTHER entities sharing a
     probed bucket are included (callers filter/semi-join, exactly as
     they already do) — the guarantee is no false negatives, pruned IO.
-    Falls back to the full committed read for flat tables.
     """
     final = path.rstrip("/")
-    manifest = read_manifest(final)
-    if manifest is None:
-        return read_upserted(spark, final, version_col=version_col)
+    manifest = _committed_manifest(final)
     bucket_cols = manifest.get("bucket_cols", manifest["keys"])
     n_buckets = int(manifest["n_buckets"])
     # F.hash is type-sensitive (hash(1) != hash(1L) != hash(1.0)): a
@@ -722,8 +658,7 @@ def read_upserted_keyed(
     if not hit:
         if "schema" in manifest:
             return _empty_from_manifest(spark, manifest, version_col)
-        base = read_upserted(spark, final, version_col=version_col)
-        return base.limit(0)
+        return read_upserted(spark, final, version_col=version_col).limit(0)
     leaves = _committed_leaves(final, hit)
     df = _leaf_reader(spark, final, manifest).parquet(*leaves)
     drop = [
@@ -732,31 +667,32 @@ def read_upserted_keyed(
     return df.drop(*drop)
 
 
-def read_upserted(spark, path: str, version_col: str = "_batch_id") -> DataFrame:
-    """Read a (bucketed or flat) upsert table minus sink bookkeeping.
+def _committed_manifest(final: str) -> dict:
+    manifest = read_manifest(final)
+    if manifest is None:
+        raise FileNotFoundError(
+            f"{final}: no committed {MANIFEST_NAME} — not a bucketed upsert "
+            "table, or its first batch crashed before commit; replay the "
+            "stream from its checkpoint to commit it"
+        )
+    return manifest
 
-    Bucketed tables are read through ``_manifest.json`` — ONLY the
-    committed leaf of each bucket is scanned, so a concurrent batch's
+
+def read_upserted(spark, path: str, version_col: str = "_batch_id") -> DataFrame:
+    """Read a bucketed upsert table minus sink bookkeeping.
+
+    The table is read through ``_manifest.json`` — ONLY the committed
+    leaf of each bucket is scanned, so a concurrent batch's
     staged-but-uncommitted leaves are invisible (all-old-or-all-new).
+    A directory without a manifest raises ``FileNotFoundError``.
     """
     final = path.rstrip("/")
-    manifest = read_manifest(final)
-    if manifest is not None:
-        leaves = _committed_leaves(final, manifest["buckets"])
-        if not leaves:
-            # every key deleted: empty state, schema from the manifest
-            return _empty_from_manifest(spark, manifest, version_col)
-        df = _leaf_reader(spark, final, manifest).parquet(*leaves)
-    else:
-        if any(
-            e.startswith(f"{BUCKET_COL}=") for e in os.listdir(final)
-        ):
-            raise FileNotFoundError(
-                f"{final}: bucketed upsert table has no committed "
-                f"{MANIFEST_NAME} (crashed before first commit?) — "
-                "replay the stream from its checkpoint to commit it"
-            )
-        df = spark.read.parquet(final)
+    manifest = _committed_manifest(final)
+    leaves = _committed_leaves(final, manifest["buckets"])
+    if not leaves:
+        # every key deleted: empty state, schema from the manifest
+        return _empty_from_manifest(spark, manifest, version_col)
+    df = _leaf_reader(spark, final, manifest).parquet(*leaves)
     drop = [
         c for c in (version_col, BUCKET_COL, VERSION_DIR_COL) if c in df.columns
     ]

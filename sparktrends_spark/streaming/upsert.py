@@ -1,24 +1,12 @@
-"""Swappable upsert-sink strategies (the MERGE INTO seam).
+"""The streaming upsert sink: one object that carries the bucket layout.
 
-``streaming/sinks.py`` implements keyed upsert twice over plain
-parquet (flat read-merge-rewrite, and the manifest-committed bucketed
-layout). On a cluster the same call is one ``MERGE INTO`` on a
-transactional table format (Delta/Iceberg) with a real commit log.
-This module puts one interface over all three so a pipeline is written
-against *upsert semantics* — per-key last-writer-wins at a batch
-version — and the storage strategy is deployment configuration:
-
-- ``flat``      — ``upsert_parquet``: O(table) per batch; fine for
-                  small dimension-sized tables.
-- ``bucketed``  — ``upsert_parquet_bucketed``: O(touched buckets) per
-                  batch with an atomic manifest commit; the default
-                  for growing fact tables (a streaming bars sink).
-- ``sql-merge`` — emits ANSI ``MERGE INTO`` against a catalog table;
-                  executable wherever a transactional format is
-                  configured (Delta/Iceberg on a real cluster; no such
-                  jar ships in this container, so here the class is
-                  exercised through its generated SQL and a catalog
-                  fake in tests).
+``BucketedParquetUpsertSink`` wraps ``sinks.upsert_parquet_bucketed``
+(hash-bucketed, manifest-committed, per-key last-writer-wins at the
+micro-batch version) and its keyed read. ``run_bar_pipeline`` builds
+one for its ``"bucketed"`` default; a caller that wants to observe the
+sink's calls passes a subclass instead. On a cluster the same call is
+one ``MERGE INTO`` on a transactional table format (Delta/Iceberg);
+the data movement is the same.
 
 Reference scope note: the reference's sink is an at-least-once JDBC
 append (spark/utilities.py:36-44); idempotent upsert is the fix SURVEY
@@ -29,44 +17,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
 from sparktrends_spark.streaming import sinks as _sinks
 
 
-class UpsertSink:
-    """Strategy interface: idempotent per-key upsert of one batch, and
-    the matching committed-state read."""
-
-    def upsert(
-        self, df: DataFrame, path: str, keys: Sequence[str], version: int
-    ) -> None:
-        raise NotImplementedError
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        raise NotImplementedError
-
-    def read_keyed(
-        self, spark: SparkSession, path: str, keys_df: DataFrame
-    ) -> DataFrame:
-        """Committed rows restricted (at least) to the entities in
-        ``keys_df`` — strategies with a physical index prune IO; the
-        default is the full committed read (callers filter anyway)."""
-        return self.read(spark, path)
-
-
-class FlatParquetUpsertSink(UpsertSink):
-    """Whole-table read-merge-rewrite (``upsert_parquet``). Per-batch
-    cost is O(table) — use only for tables that stay small."""
-
-    def upsert(self, df, path, keys, version):
-        _sinks.upsert_parquet(df, path, keys=keys, version=version)
-
-    def read(self, spark, path):
-        return _sinks.read_upserted(spark, path)
-
-
-class BucketedParquetUpsertSink(UpsertSink):
+class BucketedParquetUpsertSink:
     """Hash-bucketed manifest-committed upsert
     (``upsert_parquet_bucketed``): per-batch cost is O(touched
     buckets), not O(table) — the shape that keeps a long-running
@@ -75,11 +29,9 @@ class BucketedParquetUpsertSink(UpsertSink):
     def __init__(
         self,
         n_buckets: int = 32,
-        retain_history: int = 0,
         bucket_cols: Sequence[str] | None = None,
     ):
         self.n_buckets = int(n_buckets)
-        self.retain_history = int(retain_history)
         self.bucket_cols = list(bucket_cols) if bucket_cols else None
 
     def upsert(self, df, path, keys, version):
@@ -89,136 +41,10 @@ class BucketedParquetUpsertSink(UpsertSink):
             keys=keys,
             n_buckets=self.n_buckets,
             version=version,
-            retain_history=self.retain_history,
             bucket_cols=self.bucket_cols,
         )
 
-    def read(self, spark, path):
-        return _sinks.read_upserted(spark, path)
-
     def read_keyed(self, spark, path, keys_df):
-        # prunes to the buckets the keys hash into (manifest-routed)
+        """Committed rows of the buckets ``keys_df``'s bucket columns
+        hash into (manifest-routed; callers still filter)."""
         return _sinks.read_upserted_keyed(spark, path, keys_df)
-
-
-def merge_into_sql(
-    table: str,
-    source_view: str,
-    keys: Sequence[str],
-    columns: Sequence[str],
-    version_col: str = "_batch_id",
-) -> str:
-    """The ANSI ``MERGE INTO`` equivalent of one upsert batch —
-    last-writer-wins on the natural key, idempotent under replay via
-    the version guard (a replayed batch's version is never greater
-    than what it already committed)."""
-    for ident in [table, source_view, version_col, *keys, *columns]:
-        if not ident.replace(".", "").replace("_", "").isalnum():
-            raise ValueError(f"unsafe SQL identifier: {ident!r}")
-    on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    sets = ", ".join(
-        f"t.{c} = s.{c}" for c in [*columns, version_col] if c not in keys
-    )
-    cols = ", ".join([*keys, *[c for c in columns if c not in keys], version_col])
-    vals = ", ".join(
-        f"s.{c}" for c in [*keys, *[c for c in columns if c not in keys], version_col]
-    )
-    return (
-        f"MERGE INTO {table} t USING {source_view} s ON {on} "
-        f"WHEN MATCHED AND s.{version_col} >= t.{version_col} "
-        f"THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-    )
-
-
-def evolution_ddl(table: str, stored, incoming_schema, keys: Sequence[str]) -> list[str]:
-    """ALTER TABLE statements evolving ``table`` to accept a batch —
-    the sql-merge strategy's side of the schema-evolution contract
-    (same rules as the parquet sinks, see sinks._evolved_schema):
-    added columns -> ADD COLUMNS, numeric widening -> ALTER COLUMN
-    TYPE, key retypes/incompatible changes -> raise. A batch MISSING a
-    column needs no DDL: the MERGE lists only source columns, so the
-    target fills NULL on insert and leaves the column alone on update."""
-    target = _sinks._evolved_schema(stored, incoming_schema, keys)
-    for ident in [table, *[f.name for f in target.fields]]:
-        if not ident.replace(".", "").replace("_", "").isalnum():
-            raise ValueError(f"unsafe SQL identifier: {ident!r}")
-    stored_by = {f.name: f.dataType for f in stored.fields}
-    out = []
-    for f in target.fields:
-        if f.name not in stored_by:
-            out.append(
-                f"ALTER TABLE {table} ADD COLUMNS "
-                f"({f.name} {f.dataType.simpleString()})"
-            )
-        elif f.dataType != stored_by[f.name]:
-            out.append(
-                f"ALTER TABLE {table} ALTER COLUMN {f.name} "
-                f"TYPE {f.dataType.simpleString()}"
-            )
-    return out
-
-
-class SqlMergeUpsertSink(UpsertSink):
-    """Upsert via ``MERGE INTO`` on a catalog table — the strategy a
-    real deployment points at Delta/Iceberg. ``path`` is interpreted
-    as the catalog table name. Requires a session whose catalog
-    supports MERGE (no transactional-format jar ships in this
-    container; tests drive the generated SQL through an injected
-    executor)."""
-
-    def __init__(self, version_col: str = "_batch_id", run_sql=None):
-        self.version_col = version_col
-        self._run_sql = run_sql  # injectable for tests
-
-    def upsert(self, df, path, keys, version):
-        from pyspark.sql import functions as F
-
-        spark = df.sparkSession
-        src = df.withColumn(self.version_col, F.lit(int(version)))
-        view = f"_merge_src_{abs(hash((path, int(version)))) % 10**8}"
-        src.createOrReplaceTempView(view)
-        try:
-            cols = [c for c in df.columns]
-            sql = merge_into_sql(
-                path, view, keys, cols, version_col=self.version_col
-            )
-            if self._run_sql is not None:
-                self._run_sql(spark, sql)
-            else:
-                if not spark.catalog.tableExists(path):
-                    src.writeTo(path).create()
-                else:
-                    # evolve the target first (add/widen columns) so the
-                    # MERGE can bind every source column
-                    stored = spark.table(path).schema
-                    for ddl in evolution_ddl(path, stored, src.schema, keys):
-                        spark.sql(ddl)
-                    spark.sql(sql)
-        finally:
-            spark.catalog.dropTempView(view)
-
-    def read(self, spark, path):
-        return spark.table(path).drop(self.version_col)
-
-
-_STRATEGIES = {
-    "flat": FlatParquetUpsertSink,
-    "bucketed": BucketedParquetUpsertSink,
-    "sql-merge": SqlMergeUpsertSink,
-}
-
-
-def get_upsert_sink(name: str, **kwargs) -> UpsertSink:
-    """Resolve a strategy by name (deployment-config entry point)."""
-    try:
-        cls = _STRATEGIES[name]
-    except KeyError:
-        raise KeyError(
-            f"unknown upsert strategy {name!r}; known: {sorted(_STRATEGIES)}"
-        ) from None
-    return cls(**kwargs)
-
-
-def upsert_strategies() -> list[str]:
-    return sorted(_STRATEGIES)

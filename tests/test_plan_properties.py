@@ -396,3 +396,21 @@ def test_session_trigram_paths_single_window_exchange(spark):
     assert sum(1 for e in exchanges if "step1" in e) == 1, exchanges
     assert len(exchanges) == 2, exchanges
     assert "TakeOrderedAndProject" in plan
+
+
+def test_available_now_drive_loop_lives_in_pipeline_only():
+    """One drive loop: every run-to-completion stream goes through
+    ``streaming/pipeline.start_to_completion`` (core-width start, loud
+    timeout, stop in ``finally``). A hand-written
+    ``trigger(availableNow=True)`` elsewhere would bypass all three."""
+    from pathlib import Path
+
+    import sparktrends_spark
+
+    root = Path(sparktrends_spark.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "availableNow=True" in p.read_text()
+    )
+    assert hits == ["streaming/pipeline.py"], hits

@@ -119,3 +119,12 @@ def test_source_bytes_handles_globs(tmp_path):
     assert _source_bytes(str(tmp_path)) == 150
     assert _source_bytes(str(tmp_path / "missing-*.parquet")) is None
     assert _source_bytes("s3://bucket/x.parquet") is None
+    # no top-level data files: unknown size, not 0 (0 would clamp the
+    # byte-floored fan-out to one partition)
+    hive = tmp_path / "hive"
+    (hive / "cell=0").mkdir(parents=True)
+    (hive / "cell=0" / "part-0.parquet").write_bytes(b"z" * 70)
+    (hive / "_SUCCESS").write_bytes(b"")
+    assert _source_bytes(str(hive)) is None
+    (tmp_path / "empty").mkdir()
+    assert _source_bytes(str(tmp_path / "empty")) is None

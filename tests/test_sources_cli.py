@@ -171,6 +171,39 @@ def test_cli_stream_available_now(spark, tmp_path):
     assert spark.read.parquet(str(out / "metrics")).count() == 1
 
 
+def test_cli_stream_available_now_timeout_fails_and_stops(
+    spark, tmp_path, monkeypatch
+):
+    """A backlog that outlasts --timeout is a partial export: the command
+    fails instead of returning 0, and the query is stopped, not left
+    running."""
+    import sparktrends_spark.streaming as streaming
+    from sparktrends_spark.cli import main
+
+    class StuckQuery:
+        id = "stuck"
+        isActive = True
+        stopped = False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            self.stopped = True
+            self.isActive = False
+
+    query = StuckQuery()
+    monkeypatch.setattr(streaming, "run_bar_pipeline", lambda *a, **k: query)
+    frames = tmp_path / "frames"
+    frames.mkdir()
+    with pytest.raises(RuntimeError, match="backlog not fully processed"):
+        main([
+            "stream", "--frames", str(frames), "--out", str(tmp_path / "out"),
+            "--available-now", "--timeout", "1",
+        ])
+    assert query.stopped
+
+
 def test_kafka_wire_roundtrip(spark):
     """K7 serialization contract: to_json -> (parse chain) recovers the
     rows byte-exactly without a broker."""

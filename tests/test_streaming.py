@@ -23,7 +23,6 @@ from sparktrends_spark.streaming import (
     sliding_window_counts,
     streaming_minute_bars,
     trade_stream_from_files,
-    upsert_parquet,
     write_batch_partitioned,
 )
 
@@ -362,37 +361,6 @@ def test_sliding_and_session_windows_stream(spark, tmp_path):
     sess_rows = spark.read.parquet(sessions_out).collect()
     assert len(sess_rows) == 2
     assert sorted(r.n_events for r in sess_rows) == [1, 2]
-
-
-def test_upsert_parquet_last_writer_wins(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([("A", 1, 10.0)], "k string, ts int, v double")
-    df2 = spark.createDataFrame(
-        [("A", 1, 99.0), ("B", 2, 5.0)], "k string, ts int, v double"
-    )
-    upsert_parquet(df1, path, keys=("k", "ts"), version=0)
-    upsert_parquet(df2, path, keys=("k", "ts"), version=1)
-    rows = {(r.k, r.ts): r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {("A", 1): 99.0, ("B", 2): 5.0}
-
-
-def test_upsert_parquet_recovers_mid_swap_crash(spark, tmp_path):
-    """A crash between os.rename(final, backup) and os.rename(staging,
-    final) leaves only the backup; the next call must restore it before
-    merging instead of treating the table as absent (which would both
-    lose history and delete the backup — the sole surviving copy)."""
-    import os
-
-    path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([("A", 1, 10.0)], "k string, ts int, v double")
-    upsert_parquet(df1, path, keys=("k", "ts"), version=0)
-    # Simulate the torn swap: final moved aside, staging never promoted.
-    os.rename(path, path + ".old")
-    df2 = spark.createDataFrame([("B", 2, 5.0)], "k string, ts int, v double")
-    upsert_parquet(df2, path, keys=("k", "ts"), version=1)
-    rows = {(r.k, r.ts): r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {("A", 1): 10.0, ("B", 2): 5.0}
-    assert not os.path.isdir(path + ".old")
 
 
 def test_upsert_parquet_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
@@ -753,69 +721,65 @@ def test_bucketed_batch_n_plus_1_leaves_other_buckets_untouched(spark, tmp_path)
 
 
 def test_upsert_sink_strategy_seam(spark, tmp_path):
-    """streaming/upsert.py: flat and bucketed strategies are
-    interchangeable behind UpsertSink; both converge to last-writer-
-    wins state through the same interface."""
-    from sparktrends_spark.streaming.upsert import (
-        get_upsert_sink,
-        upsert_strategies,
-    )
+    """streaming/upsert.py: the bucketed sink converges to
+    last-writer-wins state through its upsert/read_keyed interface."""
+    from sparktrends_spark.streaming.sinks import read_upserted
+    from sparktrends_spark.streaming.upsert import BucketedParquetUpsertSink
 
-    assert upsert_strategies() == ["bucketed", "flat", "sql-merge"]
-    for name in ["flat", "bucketed"]:
-        sink = get_upsert_sink(name)
-        path = str(tmp_path / name)
-        sink.upsert(
-            spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
-            path, keys=("k",), version=0,
-        )
-        sink.upsert(
-            spark.createDataFrame([(2, 22)], "k long, v long"),
-            path, keys=("k",), version=1,
-        )
-        got = {r.k: r.v for r in sink.read(spark, path).collect()}
-        assert got == {1: 10, 2: 22}, name
+    sink = BucketedParquetUpsertSink()
+    path = str(tmp_path / "bucketed")
+    sink.upsert(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        path, keys=("k",), version=0,
+    )
+    sink.upsert(
+        spark.createDataFrame([(2, 22)], "k long, v long"),
+        path, keys=("k",), version=1,
+    )
+    assert {r.k: r.v for r in read_upserted(spark, path).collect()} == {
+        1: 10, 2: 22,
+    }
+    keyed = sink.read_keyed(
+        spark, path, spark.createDataFrame([(2,)], "k long")
+    )
+    assert {r.k: r.v for r in keyed.collect()}[2] == 22
 
 
 def test_upsert_schema_evolution_add_and_widen(spark, tmp_path):
-    """Schema-evolution contract on flat + bucketed strategies: a
-    batch may ADD a column (old rows read NULL), OMIT a column (its
-    rows store NULL), or WIDEN a numeric column; the bucketed table
-    stays readable with MIXED leaf schemas (only touched buckets are
-    rewritten), and the keyed/pruned reads agree."""
-    from sparktrends_spark.streaming.upsert import get_upsert_sink
+    """Schema-evolution contract of the bucketed sink: a batch may ADD
+    a column (old rows read NULL), OMIT a column (its rows store NULL),
+    or WIDEN a numeric column; the table stays readable with MIXED leaf
+    schemas (only touched buckets are rewritten), and the keyed/pruned
+    reads agree."""
+    from sparktrends_spark.streaming.sinks import read_upserted
+    from sparktrends_spark.streaming.upsert import BucketedParquetUpsertSink
 
-    for name in ["flat", "bucketed"]:
-        sink = get_upsert_sink(name)
-        path = str(tmp_path / name)
-        # v0: (k, v:int) — two rows landing in different buckets
-        sink.upsert(
-            spark.createDataFrame([(1, 10), (2, 20)], "k long, v int"),
-            path, keys=("k",), version=0,
-        )
-        # v1: adds `note`, widens v int->long, touches only k=2's bucket
-        sink.upsert(
-            spark.createDataFrame(
-                [(2, 22, "hi")], "k long, v long, note string"
-            ),
-            path, keys=("k",), version=1,
-        )
-        got = {r.k: (r.v, r.note) for r in sink.read(spark, path).collect()}
-        assert got == {1: (10, None), 2: (22, "hi")}, name
-        assert dict(sink.read(spark, path).dtypes)["v"] == "bigint", name
-        # v2: batch MISSING `note` and sending the old narrow v type
-        sink.upsert(
-            spark.createDataFrame([(3, 30)], "k long, v int"),
-            path, keys=("k",), version=2,
-        )
-        got = {r.k: (r.v, r.note) for r in sink.read(spark, path).collect()}
-        assert got == {1: (10, None), 2: (22, "hi"), 3: (30, None)}, name
+    sink = BucketedParquetUpsertSink()
+    path = str(tmp_path / "bucketed")
+    # v0: (k, v:int) — two rows landing in different buckets
+    sink.upsert(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v int"),
+        path, keys=("k",), version=0,
+    )
+    # v1: adds `note`, widens v int->long, touches only k=2's bucket
+    sink.upsert(
+        spark.createDataFrame([(2, 22, "hi")], "k long, v long, note string"),
+        path, keys=("k",), version=1,
+    )
+    got = {r.k: (r.v, r.note) for r in read_upserted(spark, path).collect()}
+    assert got == {1: (10, None), 2: (22, "hi")}
+    assert dict(read_upserted(spark, path).dtypes)["v"] == "bigint"
+    # v2: batch MISSING `note` and sending the old narrow v type
+    sink.upsert(
+        spark.createDataFrame([(3, 30)], "k long, v int"),
+        path, keys=("k",), version=2,
+    )
+    got = {r.k: (r.v, r.note) for r in read_upserted(spark, path).collect()}
+    assert got == {1: (10, None), 2: (22, "hi"), 3: (30, None)}
 
     # keyed read across an evolution: narrow-leaf bucket probed fine
-    sink = get_upsert_sink("bucketed")
     keyed = sink.read_keyed(
-        spark, str(tmp_path / "bucketed"),
-        spark.createDataFrame([(1,)], "k long"),
+        spark, path, spark.createDataFrame([(1,)], "k long")
     )
     rows = {r.k: (r.v, r.note) for r in keyed.collect()}
     assert rows[1] == (10, None)
@@ -1203,82 +1167,28 @@ def test_upsert_schema_evolution_decimal_widening(spark, tmp_path):
         )
 
 
-def test_sql_merge_evolution_ddl(spark):
-    """sql-merge strategy: added columns emit ADD COLUMNS, widened
-    numerics emit ALTER COLUMN TYPE, illegal changes raise — so the
-    MERGE can always bind its source columns on a real lakehouse."""
-    import pytest as _pytest
-
-    from sparktrends_spark.streaming.upsert import evolution_ddl
-
-    stored = spark.createDataFrame([(1, 10)], "k long, v int").schema
-    incoming = spark.createDataFrame(
-        [(1, 11, "x")], "k long, v long, note string"
-    ).schema
-    ddl = evolution_ddl("lake.t", stored, incoming, keys=("k",))
-    assert ddl == [
-        "ALTER TABLE lake.t ALTER COLUMN v TYPE bigint",
-        "ALTER TABLE lake.t ADD COLUMNS (note string)",
-    ]
-    # batch missing a column: no DDL needed
-    assert evolution_ddl("lake.t", incoming, stored, keys=("k",)) == [] or True
-    narrow = spark.createDataFrame([(1, 10)], "k long, v int").schema
-    assert evolution_ddl("lake.t", incoming, narrow, keys=("k",)) == []
-    bad = spark.createDataFrame([(1.0, 1)], "k double, v int").schema
-    with _pytest.raises(ValueError, match="pinned"):
-        evolution_ddl("lake.t", stored, bad, keys=("k",))
-
-
-def test_sql_merge_sink_emits_versioned_merge(spark):
-    """The MERGE INTO seam: generated SQL is the last-writer-wins
-    upsert with a replay guard; identifiers are validated."""
-    import pytest as _pytest
-
-    from sparktrends_spark.streaming.upsert import (
-        SqlMergeUpsertSink,
-        merge_into_sql,
-    )
-
-    sql = merge_into_sql(
-        "lake.bars", "src", ["symbol", "timestamp"],
-        ["symbol", "timestamp", "close"],
-    )
-    assert sql.startswith("MERGE INTO lake.bars t USING src s ON ")
-    assert "t.symbol = s.symbol AND t.timestamp = s.timestamp" in sql
-    assert "WHEN MATCHED AND s._batch_id >= t._batch_id" in sql
-    assert "WHEN NOT MATCHED THEN INSERT" in sql
-    with _pytest.raises(ValueError, match="unsafe"):
-        merge_into_sql("t; DROP TABLE x", "s", ["k"], ["k", "v"])
-
-    ran = []
-    sink = SqlMergeUpsertSink(run_sql=lambda sp, q: ran.append(q))
-    sink.upsert(
-        spark.createDataFrame([(1, 2.0)], "k long, v double"),
-        "cat.tbl", keys=("k",), version=7,
-    )
-    assert len(ran) == 1 and "MERGE INTO cat.tbl" in ran[0]
-
-
-def test_run_bar_pipeline_flat_strategy_still_works(spark, trade_dir, tmp_path):
-    """The seam keeps the flat sink selectable for small tables."""
+def test_run_bar_pipeline_rejects_unknown_sink(spark, trade_dir, tmp_path):
+    """The bucketed sink is the only upsert path: any other sink name
+    fails before a streaming query starts."""
     from sparktrends_spark.streaming.pipeline import run_bar_pipeline
-    from sparktrends_spark.streaming.sinks import read_upserted
     from sparktrends_spark.streaming.sources import trade_stream_from_files
     from sparktrends_spark.streaming.windows import streaming_minute_bars
 
-    trades = trade_stream_from_files(spark, trade_dir)
-    bars = streaming_minute_bars(trades, watermark="2 minutes")
-    query = run_bar_pipeline(
-        bars,
-        bars_path=str(tmp_path / "bars_flat"),
-        metrics_path=str(tmp_path / "metrics_flat"),
-        checkpoint_dir=str(tmp_path / "ckpt_flat"),
-        available_now=True,
-        sink="flat",
+    bars = streaming_minute_bars(
+        trade_stream_from_files(spark, trade_dir), watermark="2 minutes"
     )
-    query.awaitTermination(180)
-    assert not query.isActive
-    assert read_upserted(spark, str(tmp_path / "bars_flat")).count() > 0
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="'flat'"):
+        run_bar_pipeline(
+            bars,
+            bars_path=str(tmp_path / "bars"),
+            metrics_path=str(tmp_path / "metrics"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            available_now=True,
+            sink="flat",
+        )
+    assert {q.id for q in spark.streams.active} == active
+    assert not (tmp_path / "ckpt").exists()
 
 
 def test_read_upserted_keyed_prunes_to_entity_buckets(spark, tmp_path):
