@@ -58,8 +58,11 @@ def transient_views(*frames: DataFrame) -> Iterator[list[str]]:
     pin the drop stole (the data re-materializes once on next use
     instead of once per downstream reference — the perf cliff shrinks
     to a single recompute, and correctness is unaffected either way).
-    ``spark.sql`` analyzes eagerly, so frames built inside the block
-    stay valid after the views are gone."""
+    The re-persist covers only the frames passed in: a frame the
+    caller built FROM a view and cached inside the block can also lose
+    its pin to that cascade, and it is not restored. ``spark.sql``
+    analyzes eagerly, so frames built inside the block stay valid
+    after the views are gone."""
     spark = frames[0].sparkSession
     names = [f"_tv_{uuid.uuid4().hex}" for _ in frames]
     for df, name in zip(frames, names):

@@ -22,162 +22,4 @@ from sparktrends_spark.plans import skew  # noqa: E402,F401
 from sparktrends_spark.plans import portfolio  # noqa: E402,F401
 from sparktrends_spark.plans import profile  # noqa: E402,F401
 
-# ---------------------------------------------------------------------------
-# Registry ordering: a grading driver that samples a PREFIX of this dict
-# (observed: the first 50 entries, every round) should see a
-# representative cross-family slice — reference-parity market queries,
-# TPC-H-ish relational, joins/windows, sketch rollups, lake maintenance,
-# and the four LLM-pipeline north-star families (text dedup, text
-# analysis/curation, embedding similarity, multimodal) plus streaming,
-# skew handling, and iterative graph — not whichever families happened
-# to be imported first. Queries not named here keep their registration
-# order after the prioritized block; nothing is added or removed.
-# Displaced in round 8 (still swept + pytest-verified, families keep
-# >=2 driver rows each): priority_approx_distinct,
-# purchase_to_prior_view_asof, event_targeted_delete; late round 8
-# (making room for the new graph/clustering/basket/CMS operator
-# families): ema_daily_chunked (ema_daily still grades the recursive
-# indicators), doc_minhash_dedup_keep (pairs + incremental + spans
-# still grade MinHash dedup), embedding_dedup_keep (five embedding
-# rows remain), value_quantile_sketch_rollup (daily_user_sketch_rollup
-# + user_cms_frequency grade mergeable sketches).
-# Round 9 (recall audit + persisted serve + IVM design-point):
-# embedding_ivfpq_topk -> embedding_ivfpq_index_topk (the persisted,
-# residual-encoded successor; in-query form stays swept),
-# order_status_ivm -> order_status_ivm_small_batches (same counting
-# algebra against a table>>batch fixture — the O(delta) shape),
-# embedding_lsh_topk -> embedding_ann_recall (the recall audit grades
-# every ANN family INCLUDING lsh as exact hit counts; lsh stays swept).
-# Round 10 (index maintenance lifecycle): embedding_ivf_index_topk ->
-# embedding_ivfpq_retrain_topk (build + frozen-quantizer append +
-# staleness probe + atomic generation retrain + serve, value-hashed
-# against the fresh-build-on-full-corpus chain). The plain persisted
-# IVF serve stays swept + plan-asserted, its serve architecture is
-# graded through the IVF-PQ persisted row, and its output quality
-# through the recall audit's ivf row; similarity keeps 6 driver rows.
-# Round 11 (delete lifecycle): embedding_ivfpq_index_topk ->
-# embedding_ivfpq_delete_topk — the delete row is a strict superset of
-# the displaced one (same persisted build + probe-pruned serve, PLUS
-# tombstone anti-join at serve + physical reclaim at compact,
-# value-hashed against the full-corpus chain with deleted candidates
-# filtered before ranking, and pre/post-compact serve equality
-# raise-checked in-query). The displaced row stays swept +
-# plan-asserted; similarity keeps 6 driver rows.
-# Round 13 (the r12 verdict's rotation ask — surface round-12's
-# capabilities to the driver): embedding_topk ->
-# embedding_ivfpq_filtered_topk (brute force stays swept AND is
-# recomputed in-query as embedding_ann_recall's ground truth, so its
-# semantics remain driver-graded; similarity keeps 6 rows);
-# stream_user_heavy_hitters -> stream_embedding_ann_serve (heavy
-# hitters keep user_cms_frequency + user_heavy_hitters +
-# daily_user_sketch_rollup in the window; streaming keeps 4 rows);
-# doc_importance_sample -> corpus_shard_manifest (DSIR stays swept
-# inside corpus_curation_pipeline's graded family; the export family
-# gets its first driver row). All displaced rows stay swept with full
-# exact oracles.
-# Round 14 (the r13 verdict's rotation ask — surface round-13's
-# capabilities): embedding_ivfpq_filtered_topk ->
-# embedding_ivf_filtered_topk (filtered serve now graded on the PLAIN
-# persisted family; the IVF-PQ filtered serve stays swept AND is
-# re-exercised in-window by embedding_filtered_ann_recall's ivfpq row,
-# so both families' filtered serves remain driver-graded);
-# embedding_ann_recall -> embedding_filtered_ann_recall (the filtered
-# audit is the same exact-integer-hit-count shape over the sharper
-# contract; the unfiltered audit stays swept); embedding_neardup_topk
-# -> doc_hybrid_bm25_ann_rrf (the banded-LSH near-dup architecture
-# stays driver-graded through doc_minhash_pairs +
-# doc_incremental_dedup, and embedding_neardup/_topk stay swept; the
-# hybrid row is the retrieval shape the engine now serves). IVF-PQ
-# keeps 2 driver rows (delete + retrain); similarity keeps 6 rows.
-#
-# DISCIPLINE (r14 verdict): the graded window is FROZEN during
-# optimization rounds — the driver's round-over-round per-query
-# comparison keys on these names, so a mid-optimization rotation costs
-# one comparison per rotated row (r14 lost 3 to the r14-build
-# rotation). Rotate only in BUILD rounds, in a named commit the
-# verdict can point at. Round 15: no rotation; keys must equal
-# CORRECTNESS_r14.json's.
-_PRIORITY_ORDER = [
-    # reference-parity market core
-    # (ohlcv_rollup_hourly displaced late r8 for order_status_ivm —
-    # hierarchical rollup still benched + swept; bars/vwap/latest/
-    # anomaly keep the reference core at 5 driver rows with ema)
-    "ohlcv_bars", "vwap_metrics", "latest_metrics",
-    "anomaly_last10",
-    # recursive indicators (chunked twin displaced late r8)
-    "ema_daily",
-    # relational / TPC-H dialect; cube graded through its materialized
-    # aggregate-navigation form (late r8 — supersedes status_cube in
-    # the window: same CUBE semantics PLUS the serving slice; the
-    # plain form stays swept), plus CDC incremental view maintenance
-    "q1_pricing_summary", "q5_region_revenue",
-    "order_priority_from_cube", "returnflag_percentiles",
-    "order_status_ivm_small_batches",
-    # iterative graph + triangle analytics + basket mining (round 8)
-    "nation_pagerank", "part_triangle_top", "part_association_rules",
-    # joins
-    "events_to_orders_asof", "event_window_range_join",
-    # windows / sessions
-    "event_sessions", "sliding_event_counts",
-    # mergeable sketches: rollup + Count-Min point frequency (round 8)
-    "daily_user_sketch_rollup", "user_cms_frequency",
-    # lake maintenance / quality (incl. round-8 schema evolution and
-    # the concurrent OPTIMIZE-vs-writer CAS, graded end-to-end)
-    "event_zorder_rectangle", "order_upsert_schema_evolution",
-    "event_upsert_optimize_concurrent",
-    "events_quality_checks",
-    # profiling + portfolio analytics (late round 8): the one-scan
-    # column profiler (quality-family cousin — displaces
-    # user_activity_snapshot_diff, lake/quality keeps 4 rows) and the
-    # broadcast-factor CAPM beta (displaces doc_token_stats, text
-    # analysis keeps doc_quality + doc_lang_id)
-    "events_column_profile", "symbol_market_beta",
-    # text dedup (north star)
-    "doc_exact_dedup", "doc_minhash_pairs",
-    "doc_incremental_dedup", "doc_dup_spans",
-    # text analysis / curation (north star)
-    "doc_quality", "doc_lang_id", "doc_pii_redact",
-    "corpus_curation_pipeline", "corpus_shard_manifest",
-    # embedding similarity + clustering (north star; kmeans round 8)
-    "embedding_ivf_filtered_topk",
-    "doc_hybrid_bm25_ann_rrf",
-    "embedding_kmeans",
-    # round 9: the persisted residual-encoded IVF-PQ index (probe-
-    # pruned serve — supersedes the in-query embedding_ivfpq_topk in
-    # the window) and the per-family recall@10 audit (exact integer
-    # hit counts vs brute force, incl. the lsh row); round 10: the
-    # index maintenance lifecycle (append-drift staleness + atomic
-    # generation retrain, displacing embedding_ivf_index_topk)
-    "embedding_ivfpq_delete_topk", "embedding_ivfpq_retrain_topk",
-    "embedding_filtered_ann_recall",
-    # streaming
-    "stream_ohlcv_bars", "stream_doc_incremental_dedup",
-    "stream_embedding_ann_serve", "stream_doc_pii_redact",
-    # multimodal (north star)
-    "asset_features", "asset_jpeg_stats", "asset_mp4_frames",
-    "asset_decode_health",
-    # skew handling
-    "user_event_salted_agg", "user_heavy_hitters",
-]
-
-
-def _apply_priority_order() -> None:
-    missing = [n for n in _PRIORITY_ORDER if n not in QUERIES]
-    if missing:
-        # a bare assert compiles out under `python -O`, which would
-        # silently DROP misnamed entries from the graded window
-        raise ValueError(f"priority order names unknown queries: {missing}")
-    for d in (QUERIES, ORACLES):
-        orig = dict(d)
-        d.clear()
-        for n in _PRIORITY_ORDER:
-            if n in orig:
-                d[n] = orig[n]
-        for n, v in orig.items():
-            if n not in d:
-                d[n] = v
-
-
-_apply_priority_order()
-
 __all__ = ["QUERIES", "ORACLES", "query"]

@@ -122,15 +122,10 @@ def trades_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
         F.date_trunc("minute", F.col("ts")).alias("_bucket"),
     )
-    # 256 KB/partition floor: the JSON parse is ~µs/row, so partitions
-    # under a quarter-MB of source are pure task overhead (measured at
-    # sf0.1/local[32]: 8-wide beats 32-wide ~1.4x on every bars query;
-    # at real scale the cap never binds — guide §2.2).
     fanned = scan_parallel(
         raw,
         source_path=getattr(events, "_sparktrends_scan_path", None),
         keys=("symbol", "_bucket"),
-        min_partition_bytes=256 * 1024,
     )
     return fanned.select(
         "symbol",

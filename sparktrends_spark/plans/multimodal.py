@@ -44,23 +44,10 @@ CASE WHEN doc_id % 3 = 0 THEN 'image/png'
 """
 
 
-def _assets(
-    spark: SparkSession,
-    sf_dir: str,
-    min_partition_bytes: int | None = None,
-) -> DataFrame:
+def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashing/frame fan-out is CPU-bound: make sure the scan fans out.
-    # NO default byte floor: the codec rows (jpeg/mp4 encode+decode)
-    # downstream have the highest CPU-per-source-byte in the repo and
-    # must keep full width. Light Arrow rows (asset_features) pass
-    # their own floor — fewer, larger Arrow batches amortize the
-    # python-worker round trip (guide §4.1; measured: width 4 beat
-    # width 32 ~1.7x on asset_features at sf0.1).
     return documents_to_assets(
-        scan_parallel(
-            load_table(spark, sf_dir, "documents"),
-            min_partition_bytes=min_partition_bytes,
-        )
+        scan_parallel(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -86,12 +73,7 @@ FROM documents
 def q_asset_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction through Arrow-batched
     mapInPandas (decode stubbed -> byte-level features)."""
-    # 160 KB/partition floor (~4-wide at sf0.1): the byte-level
-    # feature pass is Arrow-cheap per row, so wide fan-outs pay more
-    # in python-worker startup than they buy (see _assets)
-    feats = extract_features(
-        _assets(spark, sf_dir, min_partition_bytes=160 * 1024)
-    )
+    feats = extract_features(_assets(spark, sf_dir))
     return feats.select(
         "asset_id", "modality", "mime_type", "n_bytes", "payload_md5", "decode_status"
     )

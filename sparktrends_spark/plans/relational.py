@@ -1916,12 +1916,7 @@ def q_event_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.catalog.refreshByPath(dest)
     delete_keys(spark, dest, "user_id", [3, 7])
     return (
-        # light aggregate downstream — byte-floor the fan-out (§2.2)
-        scan_parallel(
-            spark.read.parquet(dest),
-            source_path=dest,
-            min_partition_bytes=96 * 1024,
-        )
+        scan_parallel(spark.read.parquet(dest), source_path=dest)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparktrends_spark.plans.registry import query
+from sparktrends_spark.plans.registry import query, scratch_dir, scratch_root
 from sparktrends_spark.similarity.cosine import (
     brute_force_topk,
     hyperplanes,
@@ -31,12 +31,7 @@ _COS = (
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 64-dim dot products are CPU-bound: make sure the scan fans out.
-    # 48 KB/partition floor (~16-wide on the sf0.1 file — the measured
-    # optimum for neardup/topk; 4-wide regressed them; guide §2.2).
-    return scan_parallel(
-        load_table(spark, sf_dir, "embeddings"),
-        min_partition_bytes=48 * 1024,
-    )
+    return scan_parallel(load_table(spark, sf_dir, "embeddings"))
 
 
 def _emb_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,34 +46,16 @@ def _emb_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _idx_path(name: str, sf_dir: str) -> str:
-    """Per-query, per-user, per-PROCESS persisted-index root. Distinct
-    queries never share an on-disk index (one query's build-overwrite
-    racing another query's serve in a concurrent sweep is the r9
-    ADVICE hazard), concurrent driver/sweep processes on one host
-    never share one either (two simultaneous overwrite-builds clobber
-    each other's _temporary dirs), and the predictable world-writable
-    /tmp root is uid-suffixed so it is not shared across users. Stable
-    within a process (repeat builds are idempotent overwrites), which
-    the repeat-run sweeps rely on; an atexit hook removes the whole
-    per-process root so repeated sweep/bench/pytest runs don't
-    accumulate index trees (PIDs recycle too rarely for the old
-    self-overwriting fixed paths' boundedness to carry over)."""
+    """Per-query persisted-index root under the process's scratch root
+    (``registry.scratch_root``): distinct queries never share an
+    on-disk index (one query's build-overwrite racing another query's
+    serve in a concurrent sweep is the r9 ADVICE hazard), and a repeat
+    run in the same process overwrites it in place."""
     import os
 
-    root = f"/tmp/sparktrends_idx_u{os.getuid()}_p{os.getpid()}"
-    global _IDX_CLEANUP_REGISTERED
-    if not _IDX_CLEANUP_REGISTERED:
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _IDX_CLEANUP_REGISTERED = True
     return os.path.join(
-        root, name, os.path.basename(sf_dir.rstrip("/")) or "sf"
+        scratch_root(), name, os.path.basename(sf_dir.rstrip("/")) or "sf"
     )
-
-
-_IDX_CLEANUP_REGISTERED = False
 
 
 @query(
@@ -580,8 +557,7 @@ def q_embedding_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     without this, "top-k within a language/license class" forces a
     post-filter that breaks the top-k contract (returns < k). Oracle =
     the shared IVF chain with the same predicate applied to candidates
-    before the per-query rank. Entered swept-only in round 13 (registry
-    discipline), ROTATED INTO the graded window in round 14."""
+    before the per-query rank."""
     from sparktrends_spark.caching import persist_tracked
     from sparktrends_spark.similarity.cosine import (
         build_ivf_index,
@@ -740,9 +716,7 @@ def q_doc_hybrid_bm25_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the predicate pushed to the scan; the lexical side is the
     doc_bm25_terms dataflow (vocab-keyed shuffle join, never
     broadcast-the-vocabulary) restricted to 10 query docs' terms;
-    fusion joins two ≤ (queries x 20)-row frames. Entered swept-only
-    in round 13 (registry discipline), ROTATED INTO the graded window
-    in round 14."""
+    fusion joins two ≤ (queries x 20)-row frames."""
     from pyspark.sql import Window
 
     from sparktrends_spark.caching import persist_tracked
@@ -757,10 +731,7 @@ def q_doc_hybrid_bm25_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the doc_id-keyed joins reuse this exchange
     # (guide §2.4, see doc_tfidf_terms)
     docs = scan_parallel(
-        load_table(spark, sf_dir, "documents"),
-        keys=("doc_id",),
-        # tokenize downstream — small floor, same as text._docs
-        min_partition_bytes=32 * 1024,
+        load_table(spark, sf_dir, "documents"), keys=("doc_id",)
     )
     # LEFT join: the index (and so the label centroids) is built over
     # ALL embeddings — exactly the oracle's semantics and the
@@ -1705,9 +1676,7 @@ def q_embedding_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFra
     narrows candidates AT THE PROBED-CELL SCAN (parquet filter
     pushdown, plan-asserted in tests) before tombstone exclusion and
     ADC scoring. Oracle = the shared residual chain with the same
-    predicate applied to candidates before the per-query rank.
-    Registered swept-only (round-12 registry discipline: one new row
-    for the round's new capability, outside the graded window)."""
+    predicate applied to candidates before the per-query rank."""
     from sparktrends_spark.similarity.ivfpq_index import (
         build_ivfpq_index,
         ivfpq_index_topk,
@@ -1759,7 +1728,6 @@ def q_stream_embedding_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFra
     of raw parquet append."""
     import os
     import shutil
-    import tempfile
 
     from sparktrends_spark.similarity.ivfpq_index import (
         append_ivfpq_index,
@@ -1790,7 +1758,7 @@ def q_stream_embedding_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFra
             return
         append_ivfpq_index(batch_df, idx, dim=_DIM)
 
-    ckpt = tempfile.mkdtemp(prefix="ivfpq_stream_ckpt_")
+    ckpt = scratch_dir("ivfpq_stream_ckpt_")
     start_to_completion(
         stream,
         lambda writer: writer.outputMode("append")
@@ -1881,7 +1849,6 @@ def build_stream_embedding_ann_serve(
     corpus = scan_parallel(
         spark.read.parquet(f"{base}/embeddings*.parquet"),
         source_path=f"{base}/embeddings*.parquet",
-        min_partition_bytes=48 * 1024,
     )
     build_ivfpq_index(
         corpus, idx, dim=_DIM, n_cells=_KM_K, m=_PQ_M,
@@ -1983,12 +1950,10 @@ def build_stream_doc_hybrid_serve(
     emb = scan_parallel(
         spark.read.parquet(f"{base}/embeddings*.parquet"),
         source_path=f"{base}/embeddings*.parquet",
-        min_partition_bytes=48 * 1024,
     )
     docs = scan_parallel(
         spark.read.parquet(f"{dbase}/documents*.parquet"),
         source_path=f"{dbase}/documents*.parquet",
-        min_partition_bytes=32 * 1024,
     ).select("doc_id", "text", "lang")
     # the same LEFT-join contract as the batch hybrid row: centroids
     # train on ALL embeddings; NULL-lang rows fall to the predicate
@@ -2729,9 +2694,7 @@ def q_embedding_filtered_ann_recall(spark: SparkSession, sf_dir: str) -> DataFra
     counts are exact integers, so the statistic itself is
     value-oracled — both engines compute identical top-10 sets,
     intersections, and ratios. One row per family:
-    (family, metric, hits, total, recall). Entered swept-only in
-    round 13 (registry discipline), ROTATED INTO the graded window in
-    round 14."""
+    (family, metric, hits, total, recall)."""
     from sparktrends_spark.similarity.cosine import (
         build_ivf_index,
         ivf_index_topk,

@@ -28,7 +28,6 @@ keyed table, and watermark+update-mode bound state exactly as here.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +39,7 @@ from sparktrends_spark.plans.market import (
     _TRADES_CTE,
     trades_projection,
 )
-from sparktrends_spark.plans.registry import query
+from sparktrends_spark.plans.registry import query, scratch_dir
 from sparktrends_spark.sources.tables import _ensure_read_confs, load_table
 from sparktrends_spark.streaming.pipeline import start_to_completion
 from sparktrends_spark.streaming.sinks import (
@@ -127,8 +126,8 @@ def run_upsert_stream(
     returning None skips the batch. One drive loop serves every
     foreachBatch-upsert query, so the commit/restart contract lives in
     exactly one place."""
-    out_dir = table_dir or tempfile.mkdtemp(prefix="stream_out_")
-    ckpt_dir = ckpt_dir or tempfile.mkdtemp(prefix="stream_ckpt_")
+    out_dir = table_dir or scratch_dir("stream_out_")
+    ckpt_dir = ckpt_dir or scratch_dir("stream_ckpt_")
     table = os.path.join(out_dir, "t")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -830,8 +829,8 @@ def build_stream_doc_incremental_dedup(
         F.col("doc_id") % 2 == 1
     )
 
-    out_dir = table_dir or tempfile.mkdtemp(prefix="stream_out_")
-    ckpt_dir = ckpt_dir or tempfile.mkdtemp(prefix="stream_ckpt_")
+    out_dir = table_dir or scratch_dir("stream_out_")
+    ckpt_dir = ckpt_dir or scratch_dir("stream_ckpt_")
     table = _os.path.join(out_dir, "t")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -900,8 +899,8 @@ def build_stream_order_cdc_apply(
         .otherwise(F.lit("c"))
         .alias("op"),
     )
-    out_dir = table_dir or tempfile.mkdtemp(prefix="stream_cdc_out_")
-    ckpt = ckpt_dir or tempfile.mkdtemp(prefix="stream_cdc_ckpt_")
+    out_dir = table_dir or scratch_dir("stream_cdc_out_")
+    ckpt = ckpt_dir or scratch_dir("stream_cdc_ckpt_")
     table = os.path.join(out_dir, "t")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -1088,8 +1087,8 @@ def build_stream_order_status_ivm(
         .otherwise(F.lit("c"))
         .alias("op"),
     )
-    out_dir = table_dir or tempfile.mkdtemp(prefix="stream_ivm_out_")
-    ckpt = ckpt_dir or tempfile.mkdtemp(prefix="stream_ivm_ckpt_")
+    out_dir = table_dir or scratch_dir("stream_ivm_out_")
+    ckpt = ckpt_dir or scratch_dir("stream_ivm_ckpt_")
     base_t = os.path.join(out_dir, "orders")
     agg_t = os.path.join(out_dir, "status_agg")
 
@@ -1207,18 +1206,10 @@ def q_stream_corpus_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparktrends_spark.text.shards import shard_manifest, write_training_shards
 
     base = sf_dir.rstrip("/")
-    stage = tempfile.mkdtemp(prefix="shard_stage_")
-    out_root = tempfile.mkdtemp(prefix="shard_out_")
+    stage = scratch_dir("shard_stage_")
+    out_root = scratch_dir("shard_out_")
     out = os.path.join(out_root, "shards")
-    ckpt = tempfile.mkdtemp(prefix="shard_ckpt_")
-    # the stage dir holds a FULL corpus copy and the out dir a second
-    # one — atexit-reclaimed so repeated sweep/bench runs don't
-    # accumulate 2x corpus size in /tmp per invocation
-    import atexit
-    import shutil
-
-    for d in (stage, out_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    ckpt = scratch_dir("shard_ckpt_")
     # stage the corpus as 4 files so availableNow delivers 4 batches
     spark.read.parquet(f"{base}/documents*.parquet").repartition(4).write.mode(
         "overwrite"

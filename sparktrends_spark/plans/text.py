@@ -56,14 +56,7 @@ def _docs(
     # ``keys`` hash-partitions the fan-out (instead of round-robin) so
     # a downstream groupBy/window clustered on (a superset of) them
     # reuses this exchange (guide §2.4); only valid for source columns.
-    # 32 KB/partition floor — small, because tokenize/shingle cost per
-    # source byte is high (minhash measured fastest at ~16-20 wide on
-    # the 0.6 MB sf0.1 file; 4-wide regressed it ~25%).
-    return scan_parallel(
-        load_table(spark, sf_dir, "documents"),
-        keys=keys,
-        min_partition_bytes=32 * 1024,
-    )
+    return scan_parallel(load_table(spark, sf_dir, "documents"), keys=keys)
 
 
 @query(
@@ -95,14 +88,10 @@ def q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = d.select(
         "doc_id", exact_hash(F.col("text")).alias("content_hash")
     )
-    # 96 KB/partition floor: downstream of this exchange is only the
-    # keep-min/count aggregate — no CPU to feed, so narrow partitions
-    # are pure task overhead (guide §2.2; r14 scaling block).
     fanned = scan_parallel(
         hashed,
         source_path=getattr(d, "_sparktrends_scan_path", None),
         keys=("content_hash",),
-        min_partition_bytes=96 * 1024,
     )
     return fanned.groupBy("content_hash").agg(
         F.min("doc_id").alias("keep_id"),
@@ -521,15 +510,10 @@ def q_corpus_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score(F.col("_toks")).alias("quality"),
         exact_hash(F.col("text")).alias("content_hash"),
     ).filter((F.col("quality") >= 0.6) & F.col("lang").isin("en", "es"))
-    # 96 KB/partition floor: the tokenize/score CPU runs BELOW this
-    # exchange (on the scan side); downstream is only the dedup window
-    # + per-lang aggregate (measured at sf0.1/local[32]: 8-wide beats
-    # 32-wide ~1.5x; at real scale the cap never binds — guide §2.2).
     fanned = scan_parallel(
         scored,
         source_path=getattr(d, "_sparktrends_scan_path", None),
         keys=("content_hash",),
-        min_partition_bytes=96 * 1024,
     )
     kept = top_k_per_group(fanned, ["content_hash"], [F.asc("doc_id")], k=1)
     return kept.groupBy("lang").agg(
@@ -958,9 +942,7 @@ def q_doc_bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized postings artifact is read only at probed buckets and
     joined on term (vocab-keyed shuffle, never broadcast); doclens —
     two small ints per doc — carries the corpus stats; scores are
-    round-6 per term and DECIMAL-exact in aggregation. Registered
-    swept-only (registry discipline: new capability rows enter
-    outside the graded window)."""
+    round-6 per term and DECIMAL-exact in aggregation."""
     from sparktrends_spark.text.bm25_index import (
         build_bm25_index,
         bm25_index_topk,
@@ -2143,8 +2125,6 @@ def q_doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_DEL_CLEANUP = False
-
 
 def _dedup_index_delete_oracle() -> str:
     # identical chain to _incremental_dedup_oracle, with the takedown
@@ -2172,8 +2152,7 @@ def q_doc_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     index must be identical — raise-checked in-query; the value oracle
     is the incremental-dedup chain with the takedown set excluded from
     the index side of the candidate pairs."""
-    import os
-
+    from sparktrends_spark.plans.similarity import _idx_path
     from sparktrends_spark.text.dedup_index import (
         build_dedup_index,
         compact_dedup_index,
@@ -2182,21 +2161,8 @@ def q_doc_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _docs(spark, sf_dir)
-    # per-user, per-process path: concurrent sweep/driver processes
-    # must never share an index being overwrite-built (the r10
-    # _temporary clobber lesson), and delete+compact mutate state;
-    # atexit-reclaimed so repeated sweep/bench runs don't accumulate
-    root = f"/tmp/sparktrends_dedup_del_u{os.getuid()}_p{os.getpid()}"
-    global _DEDUP_DEL_CLEANUP
-    if not _DEDUP_DEL_CLEANUP:
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _DEDUP_DEL_CLEANUP = True
-    idx = os.path.join(
-        root, os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    # per-process path (delete+compact mutate the index in place)
+    idx = _idx_path("dedup_del", sf_dir)
     build_dedup_index(d.filter(F.col("doc_id") % 2 == 0), idx)
     delete_from_dedup_index(
         spark,
@@ -2301,14 +2267,10 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fan-out still buys their parallelism.
     d = load_table(spark, sf_dir, "documents")
     hashed = d.select("doc_id", "lang", "text", F.md5("text").alias("_chash"))
-    # 64 KB/partition floor — smaller than the selection row's: the
-    # PII regex scrub downstream of this exchange is real CPU, so keep
-    # ~10 partitions on the sf0.1 file (guide §2.2 tradeoff).
     fanned = scan_parallel(
         hashed,
         source_path=getattr(d, "_sparktrends_scan_path", None),
         keys=("_chash",),
-        min_partition_bytes=64 * 1024,
     )
     w = Window.partitionBy("_chash").orderBy("doc_id")
     dedup = (

@@ -17,7 +17,6 @@ match the DuckDB oracle's TIMESTAMP type.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -244,77 +243,26 @@ def _estimate_scan_partitions(spark: SparkSession, path: str) -> int | None:
     return max(1, partitions)
 
 
-def _source_bytes(path: str) -> int | None:
-    """On-disk bytes of a local file/dir/glob source, or None when
-    non-local/unstattable or when a directory has no top-level data
-    files (empty, or a nested ``col=value/`` layout): a 0 there would
-    clamp the byte-floored fan-out to one partition."""
-    lp = _local_path(path)
-    if lp is None:
-        return None
-    if any(ch in lp for ch in "*?["):
-        import glob as _glob
-
-        matches = _glob.glob(lp)
-        if not matches:
-            return None
-        total = 0
-        for m in matches:
-            sub = _source_bytes(m)
-            if sub is None:
-                return None
-            total += sub
-        return total
-    try:
-        if os.path.isdir(lp):
-            sizes = [
-                e.stat().st_size
-                for e in os.scandir(lp)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            ]
-            return sum(sizes) if sizes else None
-        return os.stat(lp).st_size
-    except OSError:
-        return None
-
-
-def _fanout_floor_scale() -> float:
-    """``SPARK_GRAFT_FANOUT_FLOOR_SCALE`` (default 1), checked so a typo
-    fails naming the knob instead of as a bare ``float()`` error."""
-    raw = os.environ.get("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "1")
-    try:
-        scale = float(raw)
-    except ValueError:
-        scale = math.nan
-    if not (math.isfinite(scale) and scale >= 0):
-        raise ValueError(
-            f"SPARK_GRAFT_FANOUT_FLOOR_SCALE={raw!r}: expected a number >= 0"
-            " (0 disables the fan-out floors)"
-        )
-    return scale
-
-
 def scan_parallel(
     df: DataFrame,
-    min_partitions: int | None = None,
     source_path: str | None = None,
     keys: tuple[str, ...] | None = None,
-    min_partition_bytes: int | None = None,
 ) -> DataFrame:
-    """Ensure a scan has enough partitions to use every core.
+    """Fan a narrow scan out to ``defaultParallelism`` partitions.
 
     Small single-file parquet inputs (and single row-group files, which
     ``spark.sql.files.maxPartitionBytes`` cannot split) arrive as one
-    partition, serializing any CPU-heavy projection downstream. At real
-    scale a table is thousands of splits and this is a no-op; it only
-    repartitions when the scan is narrower than the target parallelism,
-    so the round-robin shuffle costs only show up where they buy CPU.
+    partition, serializing any CPU-heavy projection downstream. This
+    repartitions only when the scan is narrower than the core count; a
+    scan that is already wide is returned unchanged, and everything
+    after the fan-out is left to AQE.
 
-    The partition count comes from Spark's split formula over local
-    file sizes when the source path is known (``load_table`` stamps it;
-    callers that projected first pass ``source_path=``), avoiding a
-    physical-planning probe per build; unknown sources keep the exact
-    ``df.rdd.getNumPartitions()`` probe.
+    ``source_path``: where the scan reads from. ``load_table`` stamps
+    it on its frames; a caller that projected first passes it. With a
+    local path the partition count comes from Spark's split formula
+    over the file sizes, which avoids a physical-planning probe per
+    build; without one the exact ``df.rdd.getNumPartitions()`` probe
+    runs.
 
     ``keys``: hash-partition the fan-out on these columns instead of
     round-robin. When a downstream groupBy/window clusters on (a
@@ -324,30 +272,10 @@ def scan_parallel(
     with enough distinct values to spread evenly (20-100x the partition
     count, guide §2.5); this fan-out only exists on narrow scans, where
     the exchange carries the same bytes either way.
-
-    ``min_partition_bytes``: byte-aware cap on the fan-out (guide §2.2,
-    §6's openCostInBytes rationale). When the source's on-disk bytes
-    are known, the target is capped at ceil(bytes / floor) so a tiny
-    input never fans out into partitions whose task-scheduling overhead
-    exceeds their compute — the r14 driver's 8-vs-32-core scaling block
-    showed exactly that on the CPU-light fan-outs. Callers size the
-    floor to their downstream CPU cost per source byte (heavy tokenize/
-    decode paths use a small floor or none; window/agg-only paths a
-    larger one). At real scale bytes/floor >> cores, the cap never
-    binds, and the plan is byte-identical to the uncapped one.
-    ``SPARK_GRAFT_FANOUT_FLOOR_SCALE`` multiplies every caller's floor
-    (0 disables the caps) for scaling experiments.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     path = source_path or getattr(df, "_sparktrends_scan_path", None)
-    if min_partition_bytes and path:
-        scale = _fanout_floor_scale()
-        floor = int(min_partition_bytes * scale)
-        if floor > 0:
-            nbytes = _source_bytes(path)
-            if nbytes is not None:
-                target = min(target, max(1, -(-nbytes // floor)))
     nparts = _estimate_scan_partitions(spark, path) if path else None
     if nparts is None:
         nparts = df.rdd.getNumPartitions()

@@ -1,10 +1,11 @@
-"""Scale-dependent configuration seams (optimization rounds).
+"""Scale-dependent configuration seams.
 
-The bench box runs local[32] over MB-scale inputs; production is a
+Local runs use a few cores over MB-scale inputs; production is a
 cluster over 100 TB. These tests pin the seams that keep the two
-honest: size-aware broadcast hints (guide §3.1) and env-overridable
-shuffle partitioning (guide §2.2) — local defaults must be unchanged,
-production values must actually take effect.
+honest: size-aware broadcast hints (guide §3.1), env-overridable
+shuffle partitioning (guide §2.2) and the narrow-scan fan-out — local
+defaults must be unchanged, production values must actually take
+effect.
 """
 
 from __future__ import annotations
@@ -71,60 +72,15 @@ def test_default_shuffle_partitions_env_override(monkeypatch):
     assert default_shuffle_partitions() == 4096
 
 
-def test_scan_parallel_byte_floor_caps_fanout(spark, monkeypatch):
-    # Byte-aware fan-out (guide §2.2): with a floor, the fan-out width
-    # is ceil(source_bytes / floor) when that is below the core count;
-    # with a floor far below the source size the cap must not bind.
+def test_scan_parallel_fans_out_to_core_count(spark):
+    # A narrow scan fans out to defaultParallelism, however small the
+    # source: no byte floor narrows it, and text._docs (the tokenize/
+    # shingle scan behind the dedup rows) gets the same width.
+    from sparktrends_spark.plans.text import _docs
     from sparktrends_spark.sources.tables import scan_parallel
 
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", raising=False)
-    docs = load_table(spark, SF_DIR, "documents")
-    nbytes = table_bytes(SF_DIR, "documents")
     cores = spark.sparkContext.defaultParallelism
-
-    capped = scan_parallel(docs, min_partition_bytes=nbytes // 2 + 1)
-    assert capped.rdd.getNumPartitions() == 2
-
-    uncapped = scan_parallel(docs, min_partition_bytes=1)
-    assert uncapped.rdd.getNumPartitions() == cores
-
-    # floor-scale 0 disables every cap (scaling experiments)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "0")
-    disabled = scan_parallel(docs, min_partition_bytes=nbytes * 10)
-    assert disabled.rdd.getNumPartitions() == cores
-
-
-def test_malformed_fanout_floor_scale_names_the_knob(spark, monkeypatch):
-    import pytest
-
-    from sparktrends_spark.sources.tables import scan_parallel
-
     docs = load_table(spark, SF_DIR, "documents")
-    for bad in ("1,5", "", "nan", "-1"):
-        monkeypatch.setenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", bad)
-        with pytest.raises(
-            ValueError, match=f"SPARK_GRAFT_FANOUT_FLOOR_SCALE={bad!r}"
-        ):
-            scan_parallel(docs, min_partition_bytes=1024)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_FLOOR_SCALE", "0.5")
-    scan_parallel(docs, min_partition_bytes=1024)  # a valid value plans
-
-
-def test_source_bytes_handles_globs(tmp_path):
-    from sparktrends_spark.sources.tables import _source_bytes
-
-    (tmp_path / "part-a.parquet").write_bytes(b"x" * 100)
-    (tmp_path / "part-b.parquet").write_bytes(b"y" * 50)
-    assert _source_bytes(str(tmp_path / "part-*.parquet")) == 150
-    assert _source_bytes(str(tmp_path)) == 150
-    assert _source_bytes(str(tmp_path / "missing-*.parquet")) is None
-    assert _source_bytes("s3://bucket/x.parquet") is None
-    # no top-level data files: unknown size, not 0 (0 would clamp the
-    # byte-floored fan-out to one partition)
-    hive = tmp_path / "hive"
-    (hive / "cell=0").mkdir(parents=True)
-    (hive / "cell=0" / "part-0.parquet").write_bytes(b"z" * 70)
-    (hive / "_SUCCESS").write_bytes(b"")
-    assert _source_bytes(str(hive)) is None
-    (tmp_path / "empty").mkdir()
-    assert _source_bytes(str(tmp_path / "empty")) is None
+    assert docs.rdd.getNumPartitions() < cores
+    assert scan_parallel(docs).rdd.getNumPartitions() == cores
+    assert _docs(spark, SF_DIR).rdd.getNumPartitions() == cores

@@ -245,6 +245,54 @@ def test_multibatch_complete_mode_totals_land_on_oracle(
     _assert_frames_equal(result, _oracle(sf_dir, "stream_event_type_totals"))
 
 
+def test_run_upsert_stream_default_dirs_live_under_scratch_root(
+    spark, split_dir
+):
+    # without ckpt_dir/table_dir the checkpoint and the sink table are
+    # made under the process's scratch root, which is removed at exit
+    from sparktrends_spark.plans.registry import scratch_root
+    from sparktrends_spark.plans.streaming_queries import (
+        run_upsert_stream,
+        stream_events,
+    )
+
+    root = scratch_root()
+    before = set(os.listdir(root))
+    agg = stream_events(spark, split_dir).groupBy("event_type").count()
+    result = run_upsert_stream(agg, keys=("event_type",), output_mode="complete")
+    assert result.count() > 0
+    made = set(os.listdir(root)) - before
+    (ckpt,) = [n for n in made if n.startswith("stream_ckpt_")]
+    (out,) = [n for n in made if n.startswith("stream_out_")]
+    assert made == {ckpt, out}
+    assert _n_batches(os.path.join(root, ckpt)) >= 1
+    assert os.path.isdir(os.path.join(root, out, "t"))
+
+
+def test_scratch_dir_is_removed_at_exit(tmp_path):
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from sparktrends_spark.plans.registry import scratch_dir\n"
+        "d = scratch_dir('probe_')\n"
+        "open(d + '/f', 'w').write('x')\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    made = out.stdout.strip().splitlines()[-1]
+    assert made.startswith(str(tmp_path) + os.sep)
+    assert os.listdir(tmp_path) == []
+
+
 def test_multibatch_pii_redact_lands_on_oracle(
     spark, sf_dir, docs_split_dir, tmp_path
 ):

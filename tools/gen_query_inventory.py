@@ -7,9 +7,11 @@ after registry changes; commit the artifact.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 
 def main() -> None:
@@ -20,8 +22,8 @@ def main() -> None:
         "",
         f"{len(QUERIES)} queries; {len(ORACLES)} carry full DuckDB value-level "
         "oracles, the rest are rows-only by design. Regenerate with "
-        "`python tools/gen_query_inventory.py`; the driver grades a sample "
-        "per round, `tools/parity_summary.py` sweeps all of them.",
+        "`python tools/gen_query_inventory.py`; `tools/parity_summary.py` "
+        "sweeps all of them.",
         "",
         "| query | verified | description |",
         "|---|---|---|",
@@ -32,7 +34,7 @@ def main() -> None:
         head = doc[0].strip() if doc else ""
         mode = "oracle" if name in ORACLES else "rows-only"
         lines.append(f"| `{name}` | {mode} | {head} |")
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(REPO_ROOT, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md: {len(QUERIES)} queries, {len(ORACLES)} oracled")
 
