@@ -222,51 +222,36 @@ def test_multibatch_heavy_hitters_land_on_oracle(spark, sf_dir, split_dir, tmp_p
 
 
 def test_multibatch_complete_mode_totals_land_on_oracle(
-    spark, sf_dir, split_dir, tmp_path
+    spark, sf_dir, split_dir
 ):
+    from sparktrends_spark.plans.registry import scratch_root
     from sparktrends_spark.plans.streaming_queries import (
         run_upsert_stream,
         stream_events,
     )
     from pyspark.sql import functions as F
 
-    ckpt = str(tmp_path / "ckpt_totals")
     ev = stream_events(spark, split_dir, max_files_per_trigger=1)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
     )
-    result = run_upsert_stream(
-        agg, keys=("event_type",), output_mode="complete", ckpt_dir=ckpt
-    ).toPandas()
-    assert _n_batches(ckpt) >= N_SPLITS
-    # complete mode re-emits the FULL state per batch; the upsert's
-    # last-writer-wins per key must converge on the exact totals
-    _assert_frames_equal(result, _oracle(sf_dir, "stream_event_type_totals"))
-
-
-def test_run_upsert_stream_default_dirs_live_under_scratch_root(
-    spark, split_dir
-):
-    # without ckpt_dir/table_dir the checkpoint and the sink table are
-    # made under the process's scratch root, which is removed at exit
-    from sparktrends_spark.plans.registry import scratch_root
-    from sparktrends_spark.plans.streaming_queries import (
-        run_upsert_stream,
-        stream_events,
-    )
-
+    # no ckpt_dir/table_dir: both defaults are made under the process's
+    # scratch root, which is removed at exit
     root = scratch_root()
     before = set(os.listdir(root))
-    agg = stream_events(spark, split_dir).groupBy("event_type").count()
-    result = run_upsert_stream(agg, keys=("event_type",), output_mode="complete")
-    assert result.count() > 0
+    result = run_upsert_stream(
+        agg, keys=("event_type",), output_mode="complete"
+    ).toPandas()
     made = set(os.listdir(root)) - before
     (ckpt,) = [n for n in made if n.startswith("stream_ckpt_")]
     (out,) = [n for n in made if n.startswith("stream_out_")]
     assert made == {ckpt, out}
-    assert _n_batches(os.path.join(root, ckpt)) >= 1
     assert os.path.isdir(os.path.join(root, out, "t"))
+    assert _n_batches(os.path.join(root, ckpt)) >= N_SPLITS
+    # complete mode re-emits the FULL state per batch; the upsert's
+    # last-writer-wins per key must converge on the exact totals
+    _assert_frames_equal(result, _oracle(sf_dir, "stream_event_type_totals"))
 
 
 def test_scratch_dir_is_removed_at_exit(tmp_path):
