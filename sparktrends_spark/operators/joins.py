@@ -2,13 +2,13 @@
 
 The reference has exactly one join (J1, greatest-n-per-group self-join,
 stock_stream.py:90-97). Everything else here is the "absent but
-implied" surface SURVEY lists: dimension enrichment (broadcast),
-semi/anti, as-of (nearest-prior-timestamp), and binned interval/range
-joins.
+implied" surface SURVEY lists: as-of (nearest-prior-timestamp) and
+binned interval/range joins. Dimension enrichment and semi/anti joins
+are plain ``DataFrame.join`` calls: Catalyst broadcasts a dimension
+whose scan it sizes under ``spark.sql.autoBroadcastJoinThreshold``, so
+a 100 TB fact table never shuffles to meet a kilobyte dimension.
 
 Scale notes:
-- ``enrich``: explicit ``F.broadcast`` on the dimension side — never
-  let a 100 TB fact table shuffle to meet a kilobyte dimension.
 - ``as_of_join``: implemented as union + per-key window (one shuffle by
   key, sequential scan within key) instead of a nested-loop join. With
   a reasonable key cardinality this scales linearly; keyless as-of
@@ -24,28 +24,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Join a fact table to a small dimension (broadcast by default)."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    return left.join(right, on=on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    return left.join(right, on=on, how="left_anti")
 
 
 def as_of_join(

@@ -9,9 +9,9 @@ sorts columns by name before hashing values.
 Queries registered with ``oracle=None`` get the driver's weaker
 rows-only check (reserved for genuinely non-SQL-expressible ops).
 
-``scratch_root``/``scratch_dir`` give queries a per-process place for
-default checkpoints, staging copies and persisted indexes that is
-removed when the process exits.
+``scratch_root``/``scratch_dir``/``scratch_path`` give queries a
+per-process place for default checkpoints, staging copies, persisted
+indexes and per-scale tables that is removed when the process exits.
 """
 
 from __future__ import annotations
@@ -66,3 +66,11 @@ def scratch_dir(prefix: str) -> str:
     checkpoint, staging copy or default table; it goes with the root
     at exit."""
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+
+
+def scratch_path(kind: str, sf_dir: str, *parts: str) -> str:
+    """A stable path under ``scratch_root()`` for a query's ``kind`` of
+    table at one scale (``<root>/<kind>/<sf>/<parts...>``), so repeat
+    runs in one process overwrite instead of piling up copies."""
+    sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    return os.path.join(scratch_root(), kind, sf, *parts)

@@ -12,10 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparktrends_spark.operators.joins import anti_join, as_of_join, enrich, semi_join
+from sparktrends_spark.operators.joins import as_of_join
 from sparktrends_spark.operators.setops import except_, intersect, union_distinct
 from sparktrends_spark.operators.topk import global_top_k, top_k_per_group
-from sparktrends_spark.plans.registry import query
+from sparktrends_spark.plans.registry import query, scratch_path
 from sparktrends_spark.sources.tables import load_table, maybe_broadcast, table_bytes
 
 
@@ -190,13 +190,12 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     joined = li.join(
-        # size-aware: orders/customer grow with scale — hint only under
-        # the cap (locally identical); above it AQE picks the strategy
+        # Catalyst sizes the customer scan itself, but estimates the
+        # orders x customer join as the product of its inputs: the
+        # size-aware hint states the join's real bytes (under the
+        # broadcast threshold only; above it AQE picks the strategy)
         maybe_broadcast(
-            orders.join(
-                maybe_broadcast(cust, table_bytes(sf_dir, "customer")),
-                F.col("o_custkey") == F.col("c_custkey"),
-            ),
+            orders.join(cust, F.col("o_custkey") == F.col("c_custkey")),
             table_bytes(sf_dir, "orders", "customer"),
         ),
         F.col("l_orderkey") == F.col("o_orderkey"),
@@ -235,8 +234,12 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     between engines (caught by the round-8 exact-string sweep)."""
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+        region, F.col("n_regionkey") == F.col("r_regionkey")
     )
+    # Only the joined dimensions carry hints: Catalyst sizes a table
+    # scan itself, but estimates a join as the product of its inputs
+    # and would pick the wrong build side for nation x region and
+    # customer x nation.
     cust = _t(spark, sf_dir, "customer").join(
         F.broadcast(nation.select("n_nationkey", "n_name")),
         F.col("c_nationkey") == F.col("n_nationkey"),
@@ -245,13 +248,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     joined = (
-        # size-aware hints: orders/customer/supplier all grow with
-        # scale factor — locally (under the cap) the plan is identical
-        # all-broadcast; at 100 TB the hints vanish and AQE chooses
-        li.join(
-            maybe_broadcast(orders, table_bytes(sf_dir, "orders")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
             maybe_broadcast(
                 cust.select("c_custkey", "c_nationkey", "n_name"),
@@ -259,10 +256,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("o_custkey") == F.col("c_custkey"),
         )
-        .join(
-            maybe_broadcast(supp, table_bytes(sf_dir, "supplier")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
     )
     return joined.groupBy("n_name").agg(
@@ -291,11 +285,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
         _t(spark, sf_dir, "orders")
         .join(
-            # customer grows with scale: size-aware hint (locally identical)
-            maybe_broadcast(
-                _t(spark, sf_dir, "customer").select("c_custkey", "c_name"),
-                table_bytes(sf_dir, "customer"),
-            ),
+            _t(spark, sf_dir, "customer").select("c_custkey", "c_name"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("c_custkey", "c_name")
@@ -318,24 +308,23 @@ JOIN region   ON n_regionkey = r_regionkey
 """,
 )
 def q_enrich_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dimension enrichment chain, every dim broadcast (SURVEY §2.4)."""
-    out = enrich(
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "o_custkey"),
-        on="o_custkey",
-        how="inner",
-    )
-    out = enrich(
-        out,
-        _t(spark, sf_dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey"),
-        on="c_nationkey",
-        how="inner",
-    )
-    out = enrich(
-        out,
-        _t(spark, sf_dir, "region").withColumnRenamed("r_regionkey", "n_regionkey"),
-        on="n_regionkey",
-        how="inner",
+    """Dimension enrichment chain (SURVEY §2.4): Catalyst broadcasts
+    every dimension from its scan size, so the fact side never
+    shuffles."""
+    out = (
+        _t(spark, sf_dir, "orders")
+        .join(
+            _t(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "o_custkey"),
+            on="o_custkey",
+        )
+        .join(
+            _t(spark, sf_dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey"),
+            on="c_nationkey",
+        )
+        .join(
+            _t(spark, sf_dir, "region").withColumnRenamed("r_regionkey", "n_regionkey"),
+            on="n_regionkey",
+        )
     )
     return out.select("o_orderkey", "o_totalprice", "c_name", "n_name", "r_name")
 
@@ -354,7 +343,7 @@ def q_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return semi_join(cust, orders, on="c_custkey")
+    return cust.join(orders, on="c_custkey", how="left_semi")
 
 
 @query(
@@ -371,7 +360,7 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return anti_join(cust, orders, on="c_custkey")
+    return cust.join(orders, on="c_custkey", how="left_anti")
 
 
 @query(
@@ -707,7 +696,7 @@ def q_segment_priority_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
             F.concat_ws(",", F.array_sort(F.collect_set("o_orderpriority"))).alias(
@@ -1144,7 +1133,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("frequency"),
             F.round(F.sum("o_totalprice"), 2).alias("monetary"),
         )
-        .join(F.broadcast(anchor))
+        .join(anchor)
         .select(
             "custkey",
             F.datediff(F.col("anchor"), F.col("_last")).alias("recency_days"),
@@ -1199,18 +1188,12 @@ def q_event_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     original table) so the graded row proves file-level skipping is
     lossless; `tests/test_partition_pruning.py` asserts it actually
     reads fewer files on the Z-ordered layout."""
-    import os
-
     from sparktrends_spark.sources.layout import scan_pruned, zorder_write
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    dest = os.path.join(
-        "/tmp/sparktrends_zorder",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events_skip",
-    )
+    dest = scratch_path("zorder", sf_dir, "events_skip")
     zorder_write(events, ["user_id", "value"], dest, n_files=8)
     return (
         scan_pruned(
@@ -1248,18 +1231,12 @@ def q_event_zorder_rectangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     file's min/max envelope tight on BOTH columns, so most files are
     skipped before any row is read — tested mechanically in
     tests/test_partition_pruning.py."""
-    import os
-
     from sparktrends_spark.sources.layout import zorder_write
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    dest = os.path.join(
-        "/tmp/sparktrends_zorder",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events",
-    )
+    dest = scratch_path("zorder", sf_dir, "events")
     zorder_write(events, ["user_id", "value"], dest, n_files=8)
     return (
         spark.read.parquet(dest)
@@ -1321,11 +1298,7 @@ def q_order_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_upserted,
     )
 
-    dest = os.path.join(
-        "/tmp/sparktrends_cdc",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "orders",
-    )
+    dest = scratch_path("cdc", sf_dir, "orders")
     if os.path.isdir(dest):
         import shutil
 
@@ -1418,9 +1391,7 @@ def q_order_status_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparktrends_spark.streaming.ivm import maintain_agg_cdc
     from sparktrends_spark.streaming.sinks import read_upserted
 
-    root = os.path.join(
-        "/tmp/sparktrends_ivm", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    root = scratch_path("ivm", sf_dir)
     base, agg = os.path.join(root, "orders"), os.path.join(root, "status_agg")
     if os.path.isdir(root):
         shutil.rmtree(root)
@@ -1500,10 +1471,7 @@ def q_order_status_ivm_small_batches(spark: SparkSession, sf_dir: str) -> DataFr
     from sparktrends_spark.streaming.ivm import maintain_agg_cdc
     from sparktrends_spark.streaming.sinks import read_upserted
 
-    root = os.path.join(
-        "/tmp/sparktrends_ivm_small",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    root = scratch_path("ivm_small", sf_dir)
     base, agg = os.path.join(root, "orders"), os.path.join(root, "status_agg")
     if os.path.isdir(root):
         shutil.rmtree(root)
@@ -1575,11 +1543,7 @@ def q_event_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparktrends_spark.sources.layout import scan_pruned
     from sparktrends_spark.sources.optimize import optimize_table
 
-    dest = os.path.join(
-        "/tmp/sparktrends_optimize",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events",
-    )
+    dest = scratch_path("optimize", sf_dir, "events")
     if os.path.isdir(dest):
         shutil.rmtree(dest)
     events = load_table(spark, sf_dir, "events").select(
@@ -1639,11 +1603,7 @@ def q_event_upsert_optimize_concurrent(spark: SparkSession, sf_dir: str) -> Data
         upsert_parquet_bucketed,
     )
 
-    dest = os.path.join(
-        "/tmp/sparktrends_optimize",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events_upsert",
-    )
+    dest = scratch_path("optimize", sf_dir, "events_upsert")
     if os.path.isdir(dest):
         shutil.rmtree(dest)
     events = load_table(spark, sf_dir, "events").select(
@@ -1749,8 +1709,8 @@ def q_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     edges = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(
             F.col("c_nationkey").alias("src"),
             F.col("s_nationkey").alias("dst"),
@@ -1796,11 +1756,7 @@ def q_order_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
         upsert_parquet_bucketed,
     )
 
-    dest = os.path.join(
-        "/tmp/sparktrends_optimize",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "orders_evolution",
-    )
+    dest = scratch_path("optimize", sf_dir, "orders_evolution")
     if os.path.isdir(dest):
         shutil.rmtree(dest)
     orders = load_table(spark, sf_dir, "orders")
@@ -1848,15 +1804,9 @@ def q_event_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     read + k md5s per (file, value) on the driver — no data IO for
     rejected files. This is the lookup shape a 100 TB event store
     needs for "find these 3 events" without partitioning by id."""
-    import os
-
     from sparktrends_spark.sources.bloom import build_bloom_index, scan_bloom
 
-    dest = os.path.join(
-        "/tmp/sparktrends_bloom",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events",
-    )
+    dest = scratch_path("bloom", sf_dir, "events")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1897,16 +1847,10 @@ def q_event_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with a broadcast membership filter; rewrite cost is
     O(files containing the keys), never O(table) — the property that
     makes a 50-user deletion request tractable on a 100 TB lake."""
-    import os
-
     from sparktrends_spark.sources.deletion import delete_keys
     from sparktrends_spark.sources.tables import scan_parallel
 
-    dest = os.path.join(
-        "/tmp/sparktrends_delete",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "events",
-    )
+    dest = scratch_path("delete", sf_dir, "events")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -2234,7 +2178,7 @@ def q_daily_user_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = events.agg(
         F.count_distinct("user_id").alias("exact_users")
     )
-    joined = merged.join(F.broadcast(exact))
+    joined = merged.join(exact)
     in_bound = (
         F.abs(F.col("_est") - F.col("exact_users"))
         / F.col("exact_users").cast("double")
@@ -2370,7 +2314,7 @@ def q_value_quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFram
         "total",
     )
     ps = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "p double")
-    tgt = ps.crossJoin(F.broadcast(sketch_row)).select(
+    tgt = ps.crossJoin(sketch_row).select(
         "p",
         F.ceil(F.col("p") * F.col("total")).cast("bigint").alias("target"),
         "_cs",
@@ -2528,7 +2472,7 @@ def q_part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         pair.join(ix, "x")
         .join(iy, "y")
-        .crossJoin(F.broadcast(n_orders))
+        .crossJoin(n_orders)
         .select(
             "x",
             "y",
@@ -2660,11 +2604,7 @@ def q_order_priority_from_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    dest = os.path.join(
-        "/tmp/sparktrends_cube",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "orders_cube",
-    )
+    dest = scratch_path("cube", sf_dir, "orders_cube")
     if os.path.isdir(dest):
         shutil.rmtree(dest)
     orders = _t(spark, sf_dir, "orders")
@@ -2821,7 +2761,7 @@ def q_event_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("c_b"),
     )
-    j = conv.crossJoin(F.broadcast(n))
+    j = conv.crossJoin(n)
     ra = F.col("c_a").cast("double") / F.col("n_a")
     rb = F.col("c_b").cast("double") / F.col("n_b")
     p = (F.col("c_a") + F.col("c_b")).cast("double") / (
@@ -2937,7 +2877,7 @@ def q_event_type_weekday_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         o.join(F.broadcast(rt), "event_type")
         .join(F.broadcast(ct), "wd")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
     )
     n_rt = rt.count()
     n_ct = ct.count()

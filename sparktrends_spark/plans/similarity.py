@@ -803,7 +803,7 @@ def q_doc_hybrid_bm25_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = (
         tf.join(dfreq, "term")
         .join(dl, "doc_id")
-        .join(F.broadcast(corp))
+        .join(corp)
         .select(
             "doc_id",
             "term",
@@ -2256,7 +2256,7 @@ def _recall_rows(fams) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("hits"))
         )
         tot = gt.agg(F.count(F.lit(1)).alias("total"))
-        row = hits.crossJoin(F.broadcast(tot)).select(
+        row = hits.crossJoin(tot).select(
             F.lit(fam_name).alias("family"),
             F.lit(metric).alias("metric"),
             F.col("hits").cast("bigint").alias("hits"),
@@ -2299,6 +2299,8 @@ def _filtered_gts(emb: DataFrame, embs: DataFrame, queries: DataFrame):
         6,
     )
     wl2 = Window.partitionBy("query_id").orderBy(F.asc("_d2"), F.asc("vec_id"))
+    # the queries stay hinted: Catalyst estimates the label-filtered
+    # corpus smaller than the query scan and would broadcast the corpus
     gt_l2 = persist_tracked(
         cv.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2533,7 +2535,7 @@ def q_embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wl2 = Window.partitionBy("query_id").orderBy(F.asc("_d2"), F.asc("vec_id"))
     gt_l2 = persist_tracked(
-        cv.crossJoin(F.broadcast(qv))
+        cv.crossJoin(qv)
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("_d2", l2)
         .withColumn("rn", F.row_number().over(wl2))

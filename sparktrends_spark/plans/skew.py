@@ -301,7 +301,7 @@ def q_user_cms_weekly_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     merged = (
-        daily.crossJoin(F.broadcast(lo))
+        daily.crossJoin(lo)
         .where(F.col("day") < F.date_add(F.col("d0"), 7))
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
@@ -310,7 +310,7 @@ def q_user_cms_weekly_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.select("user_id").where(F.col("user_id") % 11 == 0).distinct()
     )
     est = cms_estimate(merged, probes, "user_id", depth=depth, width=width)
-    win = events.crossJoin(F.broadcast(lo)).where(
+    win = events.crossJoin(lo).where(
         day < F.date_add(F.col("d0"), 7)
     )
     truth = (

@@ -39,7 +39,7 @@ from sparktrends_spark.plans.market import (
     _TRADES_CTE,
     trades_projection,
 )
-from sparktrends_spark.plans.registry import query, scratch_dir
+from sparktrends_spark.plans.registry import query, scratch_dir, scratch_path
 from sparktrends_spark.sources.tables import _ensure_read_confs, load_table
 from sparktrends_spark.streaming.pipeline import start_to_completion
 from sparktrends_spark.streaming.sinks import (
@@ -808,10 +808,7 @@ def build_stream_doc_incremental_dedup(
     )
 
     base = sf_dir.rstrip("/")
-    idx = _os.path.join(
-        "/tmp/sparktrends_stream_dedup_index",
-        _os.path.basename(base) or "sf",
-    )
+    idx = scratch_path("stream_dedup_index", sf_dir)
     # Read the same glob the stream consumes — in the multibatch tests
     # the corpus is split across documents_*.parquet files and the
     # history index must cover all of them, not just the first.

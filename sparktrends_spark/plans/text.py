@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparktrends_spark.plans.registry import query
+from sparktrends_spark.plans.registry import query, scratch_path
 from sparktrends_spark.sources.tables import load_table, scan_parallel
 from sparktrends_spark.text.analysis import (
     LANG_MARKERS,
@@ -199,7 +199,7 @@ def q_doc_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = terms.agg(F.count(F.lit(1)).alias("n_total"))
     scored = (
         terms.join(tf, "term")
-        .join(F.broadcast(n))
+        .join(n)
         .withColumn("lp", -F.log(F.col("c") / F.col("n_total")))
     )
     return scored.groupBy("doc_id").agg(
@@ -762,7 +762,7 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(n))
+        .join(n)
         .select(
             "doc_id",
             "term",
@@ -1939,7 +1939,7 @@ def q_corpus_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     kl = (
         st.join(F.broadcast(s_tot.select("source", "n_s")), "source")
         .join(t_tot, "tok")
-        .join(F.broadcast(n))
+        .join(n)
         .groupBy("source")
         .agg(F.round(F.sum(p * F.log(p / q)), 6).alias("kl_vs_corpus"))
     )
@@ -2022,11 +2022,7 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     consts = raw.agg(
         F.sum("c_r").alias("n_r"), F.count(F.lit(1)).alias("v")
-    ).join(
-        F.broadcast(
-            tgt.agg(F.coalesce(F.sum("c_t"), F.lit(0)).alias("n_t"))
-        )
-    )
+    ).join(tgt.agg(F.coalesce(F.sum("c_t"), F.lit(0)).alias("n_t")))
     ct = F.coalesce(F.col("c_t"), F.lit(0))
     lr = (
         raw.join(tgt, "tok", "left")
@@ -2107,18 +2103,13 @@ def q_doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: four band-hash equi-joins (hash joins, index side
     keyed by band hash), only 16-int signatures ride the joins, one
     small window over surviving candidates."""
-    import os
-
     from sparktrends_spark.text.dedup_index import (
         build_dedup_index,
         incremental_dedup,
     )
 
     d = _docs(spark, sf_dir)
-    idx = os.path.join(
-        "/tmp/sparktrends_dedup_index",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    idx = scratch_path("dedup_index", sf_dir)
     build_dedup_index(d.filter(F.col("doc_id") % 2 == 0), idx)
     return incremental_dedup(
         d.filter(F.col("doc_id") % 2 == 1), idx, threshold=0.7, append=False
@@ -2858,11 +2849,7 @@ def q_doc_term_lookup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    dest = os.path.join(
-        "/tmp/sparktrends_invidx",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-        "terms",
-    )
+    dest = scratch_path("invidx", sf_dir, "terms")
     if os.path.isdir(dest):
         shutil.rmtree(dest)
     d = _docs(spark, sf_dir)
@@ -2979,8 +2966,8 @@ def q_doc_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         bcnt.where(F.col("c_xy") >= 20)
         .join(ucnt.select(F.col("w").alias("w1"), F.col("c").alias("c1")), "w1")
         .join(ucnt.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2")
-        .crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(m))
+        .crossJoin(n)
+        .crossJoin(m)
         .select(
             "w1",
             "w2",

@@ -130,9 +130,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = persist_tracked(revenue)
     mx = revenue.agg(F.max("total_revenue").alias("_mx"))
     return (
-        revenue.join(F.broadcast(mx))
+        revenue.join(mx)
         .filter(F.col("total_revenue") == F.col("_mx"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("supplier_no"))
+        .join(s, F.col("s_suppkey") == F.col("supplier_no"))
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -162,11 +162,11 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(
-            F.broadcast(bad),
+            bad,
             li["l_suppkey"] == bad["s_suppkey"],
             "left_anti",
         )
-        .join(F.broadcast(keep_parts), F.col("p_partkey") == F.col("l_partkey"))
+        .join(keep_parts, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -200,7 +200,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(
-            F.broadcast(p.filter(F.col("p_brand") == "Brand#3")),
+            p.filter(F.col("p_brand") == "Brand#3"),
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .join(F.broadcast(thresh), F.col("_pk") == F.col("l_partkey"))
@@ -251,7 +251,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_bk") == F.col("l_orderkey"),
         )
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(F.sum("l_quantity").alias("sum_qty"))
     )
@@ -278,7 +278,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes them below the join so neither scan reads unmatched rows."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+    j = li.join(p, F.col("p_partkey") == F.col("l_partkey"))
     arm = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
         & F.col("p_size").between(1, smax)
@@ -323,7 +323,7 @@ def q22_idle_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     return (
-        c.join(F.broadcast(avg_bal))
+        c.join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("_avg"))
         .join(urgent, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy("c_nationkey")
@@ -365,7 +365,7 @@ def heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pq.join(pt, "l_partkey")
         .filter(F.col("sq") > 0.2 * F.col("tq"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("s_suppkey", "s_name")
         .agg(F.count(F.lit(1)).alias("n_parts"))
     )
@@ -388,7 +388,7 @@ def customer_order_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     return (
-        o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        o.join(c, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey")
         .agg(
             F.bool_or(F.col("o_orderpriority") == "1-URGENT").alias(

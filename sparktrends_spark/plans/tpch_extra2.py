@@ -7,9 +7,11 @@ completes the 22-query dialect surface the reference never had
 conditional aggregation, multi-way snowflake joins).
 
 Scale notes common to the family: nation/region/supplier/part are
-dimensions → broadcast; lineitem⋈orders is the one large-large join and
-shuffles on the order key only once per query; year extraction happens
-before aggregation so the shuffle carries (key, year) not timestamps.
+dimensions → broadcast (Catalyst sizes their scans itself; only a
+joined dimension frame carries a hint); lineitem⋈orders is the one
+large-large join and shuffles on the order key only once per query;
+year extraction happens before aggregation so the shuffle carries
+(key, year) not timestamps.
 """
 
 from __future__ import annotations
@@ -69,11 +71,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Suppliers in REGION_1 (dimension chain, broadcast to the fact agg).
     reg_supp = (
-        s.join(
-            F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey")
-        )
+        s.join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(r.filter(F.col("r_name") == "REGION_1")),
+            r.filter(F.col("r_name") == "REGION_1"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select("s_suppkey", "s_name", "n_name")
@@ -106,9 +106,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("_pk") == F.col("l_partkey"))
             & (F.col("unit_cost") == F.col("_min_cost")),
         )
-        .join(
-            F.broadcast(keep_parts), F.col("p_partkey") == F.col("l_partkey")
-        )
+        .join(keep_parts, F.col("p_partkey") == F.col("l_partkey"))
         .select("s_name", "n_name", "p_partkey", "p_type", "unit_cost")
     )
 
@@ -206,10 +204,12 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("1997-12-31").cast("timestamp_ntz"),
             )
         )
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(n1), F.col("_snk") == F.col("s_nationkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(n1, F.col("_snk") == F.col("s_nationkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
+        # the one hint left: without it the plan is the same joins, but
+        # Catalyst orders the inferred nation scan filters differently
         .join(F.broadcast(n2), F.col("_cnk") == F.col("c_nationkey"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
@@ -270,11 +270,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _t(spark, sf_dir, "region")
 
     cust_nation = c.join(
-        F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey")
+        n, F.col("n_nationkey") == F.col("c_nationkey")
     ).join(
-        F.broadcast(r.filter(F.col("r_name") == "REGION_1")),
+        r.filter(F.col("r_name") == "REGION_1"),
         F.col("r_regionkey") == F.col("n_regionkey"),
     ).select("c_custkey")
+    # nation stays hinted: on small tables supplier is the smaller
+    # side, and Catalyst would build the hash table on it instead
     supp_nation = s.join(
         F.broadcast(
             n.select(
@@ -287,7 +289,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(
-            F.broadcast(p.filter(F.col("p_type") == "ECONOMY")),
+            p.filter(F.col("p_type") == "ECONOMY"),
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .join(
@@ -345,6 +347,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     n = _t(spark, sf_dir, "nation")
 
+    # nation stays hinted: on small tables supplier is the smaller
+    # side, and Catalyst would build the hash table on it instead
     supp_nation = s.join(
         F.broadcast(
             n.select(
@@ -362,7 +366,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.filter(F.col("l_quantity") > 0)
         .join(
-            F.broadcast(p.filter(F.col("p_name").like("%_5%"))),
+            p.filter(F.col("p_name").like("%_5%")),
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .join(F.broadcast(supp_nation), F.col("s_suppkey") == F.col("l_suppkey"))
@@ -428,8 +432,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
+        .join(n, F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.round(
@@ -534,7 +538,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
         )
         .join(
-            F.broadcast(p.select("p_partkey", "p_type")),
+            p.select("p_partkey", "p_type"),
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .agg(
@@ -617,7 +621,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_order.filter(F.col("supp_late"))
         .join(order_stats, F.col("_ok") == F.col("l_orderkey"))
         .filter((F.col("n_suppliers") > 1) & (F.col("n_late") == 1))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )
@@ -667,7 +671,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparktrends_spark.caching import persist_tracked
 
     nat_supp = s.join(
-        F.broadcast(n.filter(F.col("n_name") == "NATION_7")),
+        n.filter(F.col("n_name") == "NATION_7"),
         F.col("n_nationkey") == F.col("s_nationkey"),
     ).select("s_suppkey")
     supply = persist_tracked(
@@ -683,7 +687,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("value_dec").cast("double").alias("_total")
     )
     return (
-        supply.crossJoin(F.broadcast(total))
+        supply.crossJoin(total)
         .filter(F.col("value_dec").cast("double") > 0.001 * F.col("_total"))
         .select(
             "l_partkey",
@@ -740,7 +744,7 @@ def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     gear = p.filter(F.col("p_name").like("%gear%")).select("p_partkey")
     ps = (
         li.filter(F.year("l_shipdate") == 1996)
-        .join(F.broadcast(gear), F.col("p_partkey") == F.col("l_partkey"))
+        .join(gear, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("qty_ps"))
     )
@@ -748,8 +752,8 @@ def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ps.withColumn("qty_part", F.sum("qty_ps").over(w))
         .filter(F.col("qty_ps") > 0.5 * F.col("qty_part"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .select("s_name", "n_name")
         .distinct()
     )

@@ -490,7 +490,7 @@ def _with_cell_sims(
             F.col(vec_col).alias("_v"),
             norm(vec_col).alias("_nv"),
         )
-        .crossJoin(F.broadcast(cent_row))
+        .crossJoin(cent_row)
         .withColumn("_sims", F.expr(sims_sql))
     )
 
@@ -547,6 +547,8 @@ def _rank_probed(
         F.col(vec_col).alias("_qv"),
         norm(vec_col).alias("_nq"),
     )
+    # qv is hinted although it is only the caller's query batch: a
+    # createDataFrame batch is an RDD scan Catalyst cannot size
     scored = (
         assigned.join(F.broadcast(probes), on="cell")
         .filter(F.col(cand_id) != F.col(query_id))
@@ -1424,6 +1426,7 @@ def lsh_topk(
         F.col(vec_col).alias("_cvec"),
         norm(vec_col).alias("_nc"),
     )
+    # caller-supplied frames: an RDD-backed batch has no size estimate
     scored = (
         cand_pairs.join(F.broadcast(cv), on=cand_id)
         .join(F.broadcast(qv), on=query_id)

@@ -693,6 +693,7 @@ def ivfpq_index_topk(
     )
     rr = (
         cand.join(vecs, id_col)
+        # q comes from the caller's query batch, which Catalyst may not size
         .join(F.broadcast(q), query_id_col)
         .select(query_id_col, id_col, d2.alias("d2"))
     )

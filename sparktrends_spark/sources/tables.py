@@ -118,22 +118,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def table_bytes(sf_dir: str, *names: str) -> int | None:
     """Total on-disk bytes of the named testdata tables, or None when
-    any source is non-local/unstattable (the caller then makes no
-    size claim and leaves strategy choice to AQE)."""
+    any source is non-local/unstattable or is a directory whose size
+    its top level does not show (empty, or a nested ``col=value/``
+    layout) — the caller then makes no size claim and leaves strategy
+    choice to AQE."""
     total = 0
     for name in names:
         lp = _local_path(f"{sf_dir.rstrip('/')}/{name}.parquet")
         if lp is None:
             return None
         try:
-            if os.path.isdir(lp):
-                total += sum(
-                    e.stat().st_size
-                    for e in os.scandir(lp)
-                    if e.is_file() and not e.name.startswith(("_", "."))
-                )
-            else:
+            if not os.path.isdir(lp):
                 total += os.stat(lp).st_size
+                continue
+            entries = [
+                e for e in os.scandir(lp) if not e.name.startswith(("_", "."))
+            ]
+            if not entries or any(e.is_dir() for e in entries):
+                return None
+            total += sum(e.stat().st_size for e in entries if e.is_file())
         except OSError:
             return None
     return total
@@ -141,20 +144,18 @@ def table_bytes(sf_dir: str, *names: str) -> int | None:
 
 def maybe_broadcast(df: DataFrame, nbytes: int | None) -> DataFrame:
     """Broadcast hint iff the frame's source bytes are known and under
-    ``SPARK_GRAFT_BROADCAST_CAP`` (default 10m — Spark's own
-    autoBroadcastJoinThreshold default).
+    the session's ``spark.sql.autoBroadcastJoinThreshold`` (``-1``
+    disables it, as it disables Catalyst's own size-based broadcast).
 
-    For a join side that is a *scale-growing* table (orders, customer,
-    ...) an unconditional ``F.broadcast`` is tuned to the bench box: at
-    100 TB it would demand a multi-TB broadcast (hard-capped by Spark
-    at 8 GB) instead of letting AQE pick a sort-merge/shuffled-hash
-    join from real sizes (guide §3.1). Under the cap the hint is
-    byte-identical to the unconditional one, so local plans (and the
-    driver's bench) are unchanged; above it the hint disappears and
-    the planner decides. Provably-bounded frames (top-k results,
-    scalar aggregates, enum dimensions) keep their unconditional
-    hints — their size is scale-independent by construction."""
-    cap = _parse_bytes(os.environ.get("SPARK_GRAFT_BROADCAST_CAP", "10m"))
+    For a join OUTPUT over scale-growing tables Catalyst estimates the
+    product of its inputs' sizes and would not broadcast it, so the
+    hint carries the one fact Catalyst lacks: the inputs' real bytes.
+    Above the threshold the hint disappears and AQE picks the
+    strategy from runtime sizes. A plain table scan needs no hint —
+    Catalyst sizes it from the files itself."""
+    cap = _parse_bytes(
+        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
+    )
     if nbytes is not None and nbytes < cap:
         return F.broadcast(df)
     return df

@@ -541,7 +541,7 @@ def bm25_index_topk(
     bm = (
         post.join(dfreq, "term")
         .join(dl.select(stored_id, "dl"), stored_id)
-        .join(F.broadcast(corp))
+        .join(corp)
         .select(
             stored_id,
             "term",

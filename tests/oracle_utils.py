@@ -67,11 +67,14 @@ def _cell_str(v) -> str:
 
 
 def assert_query_matches_oracle(
-    spark, sf_dir: str, name: str, exact: bool = False
+    spark, sf_dir: str, name: str, exact: bool = False, df=None
 ) -> None:
+    """``df`` is the query's already-built frame, if the caller has one."""
     from sparktrends_spark.plans import ORACLES, QUERIES
 
-    spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
+    if df is None:
+        df = QUERIES[name](spark, sf_dir)
+    spark_pdf = df.toPandas()
     con = duckdb_connection(sf_dir)
     try:
         duck_pdf = con.execute(ORACLES[name]).fetchdf()

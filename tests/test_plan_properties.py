@@ -214,124 +214,6 @@ def test_bm25_never_broadcasts_the_vocabulary(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan, plan
 
 
-def test_registry_wide_plan_hygiene(spark, sf_dir):
-    """Sweep EVERY registered batch query's physical plan for the
-    anti-patterns that kill 100 TB runs: unbounded cartesian products
-    and row-at-a-time Python UDFs. Streaming queries are excluded
-    (building them executes the stream); broadcast-singleton cross
-    joins are allowed — a nested-loop join against one broadcast row
-    is a constant-cost pattern, not a blowup."""
-    from sparktrends_spark.caching import release_persisted
-
-    # crossJoin against a broadcast singleton / tiny broadcast frame is
-    # legitimate; plain CartesianProduct (both sides unbroadcast) never is.
-    allowed_bnlj = {
-        "q22_idle_balance",        # scalar subquery vs broadcast avg row
-        "embedding_topk",          # corpus x broadcast query rows
-        "embedding_hard_negatives",  # same shape + non-equi label filter
-        "doc_embedding_topk",      # same shape over hashed doc vectors
-        "embedding_quantized_topk",  # same shape over int8 vectors
-        "embedding_neardup",       # verify joins vs broadcast pairs
-        "embedding_dedup_keep",
-        "embedding_ivf_topk",      # corpus x one broadcast centroid row
-        "embedding_ivf_index_topk",  # same shape over the persisted index
-        "embedding_ivf_filtered_topk",  # same serve + payload predicate
-        "doc_hybrid_bm25_ann_rrf",  # filtered-IVF serve (broadcast
-                                   # centroid row) + bm25's one-row
-                                   # broadcast corpus-constants frame
-        "embedding_lsh_topk",
-        "event_window_range_join", # range join vs broadcast window list
-        "q6_revenue_delta",
-        "q11_important_stock",
-        "q15_top_supplier",
-        "q17_small_quantity",
-        "corpus_selection",
-        "doc_decontaminate",
-        "doc_pack_sequences",
-        "lang_mixture_budget",
-        "doc_tfidf_terms",         # idf needs N: one broadcast count row
-        "doc_bm25_terms",          # N + avgdl: one broadcast corpus row
-        "doc_bm25_index_topk",     # same one-row corpus-stats broadcast
-        "doc_hybrid_rrf",          # semantic side: corpus x broadcast queries
-        "doc_unigram_perplexity",  # corpus-total N: one broadcast count row
-        "customer_rfm_segments",   # recency anchor: one broadcast max-date row
-        "corpus_source_drift",     # corpus-total N: one broadcast count row
-        "doc_importance_weights",  # smoothing constants: broadcast scalar rows
-        "doc_importance_sample",   # same scoring dataflow + map-only sampler
-        "part_association_rules",  # corpus-total n_orders: one broadcast row
-        "user_cms_weekly_estimate",  # range anchor min-day: one broadcast row
-        "daily_user_sketch_rollup",  # one-row sketch union x broadcast exact row
-        "value_quantile_sketch_rollup",  # 3 quantile rows x one broadcast sketch row
-        "doc_bigram_pmi",          # corpus totals: two broadcast one-row frames
-        "embedding_ann_recall",    # brute ground truths (corpus x broadcast
-                                   # queries) + 1-row hits x totals joins
-        "embedding_filtered_ann_recall",  # same shape, filtered subsets
-        "embedding_filtered_ann_adaptive_recall",  # same + escalated serves
-        "event_ab_test_ztest",     # variant denominators: one broadcast row
-        "event_type_weekday_chi2",  # contingency total: one broadcast row
-    }
-    # An UNPARTITIONED window (row_number/ntile over a global order)
-    # funnels its whole input into one task — acceptable ONLY over
-    # frames bounded by an entity whose cardinality stays catalog-like
-    # at 100 TB. Everything else must use orderBy().limit() (top-k) or
-    # operators/rank.with_global_rank (two-phase distributed rank).
-    # (the customer ntile/percent_rank family was converted to the
-    # distributed two-phase rank in round 9; round 10 restated
-    # value_quantile_sketch_rollup's grading-only full-table rank via
-    # with_global_rank and its <=102-row cum window as an array fold —
-    # only frames bounded by construction remain)
-    allowed_global_window = {
-        "event_weekday_hour_heatmap",  # 7x24 = 168-row grid
-        "lang_mixture_budget",        # one row per language
-        "lang_temperature_mixture",   # one row per language
-    }
-
-    def _unpartitioned_windows(df) -> int:
-        def walk(node) -> int:
-            n = 0
-            if (
-                node.getClass().getSimpleName() == "Window"
-                and node.partitionSpec().isEmpty()
-            ):
-                n += 1
-            for i in range(node.children().size()):
-                n += walk(node.children().apply(i))
-            return n
-
-        return walk(df._jdf.queryExecution().optimizedPlan())
-
-    # Arrow-batched python is the sanctioned slow path; row-at-a-time
-    # BatchEvalPython is never acceptable in a registered plan.
-    failures = []
-    for name, fn in sorted(QUERIES.items()):
-        if name.startswith("stream_"):
-            continue
-        try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            n_global = _unpartitioned_windows(df)
-        finally:
-            release_persisted()
-        if "CartesianProduct" in plan:
-            failures.append(f"{name}: CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and name not in allowed_bnlj:
-            failures.append(f"{name}: unexpected BroadcastNestedLoopJoin")
-        if "BatchEvalPython" in plan:
-            failures.append(f"{name}: row-at-a-time Python UDF")
-        if "SortAggregate" in plan:
-            # every registered aggregation has a hash-able buffer
-            # (packed-bigint bars, hierarchical daily composition,
-            # ObjectHashAggregate for collect_list) — a SortAggregate
-            # regression means full sorts of the fact table returned
-            failures.append(f"{name}: SortAggregate")
-        if n_global and name not in allowed_global_window:
-            failures.append(
-                f"{name}: {n_global} unpartitioned Window node(s) — "
-                "single-partition global sort"
-            )
-    assert not failures, failures
-
-
 def test_codec_queries_fuse_mapinpandas_without_shuffle(spark, sf_dir):
     """The encode->decode codec dataflows must stay ONE fused pipeline:
     two chained MapInPandas stages and exactly the single scan_parallel
@@ -414,3 +296,22 @@ def test_available_now_drive_loop_lives_in_pipeline_only():
         if "availableNow=True" in p.read_text()
     )
     assert hits == ["streaming/pipeline.py"], hits
+
+
+def test_no_fixed_tmp_paths_in_package():
+    """Query scratch tables live under ``plans.registry.scratch_root()``
+    (per-process, removed at exit). A fixed ``/tmp/...`` root is shared
+    by every process on the host: two concurrent registry builds
+    overwrite each other's tables, and nothing removes them."""
+    from pathlib import Path
+
+    import sparktrends_spark
+
+    root = Path(sparktrends_spark.__file__).parent
+    hits = sorted(
+        f"{p.relative_to(root)}:{i}"
+        for p in root.rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if '"/tmp' in line or "'/tmp" in line
+    )
+    assert not hits, hits

@@ -32,9 +32,18 @@ def test_table_bytes_sums_local_files():
     assert both == one + table_bytes(SF_DIR, "customer")
 
 
-def test_table_bytes_none_for_remote_and_missing():
+def test_table_bytes_none_for_remote_and_missing(tmp_path):
     assert table_bytes("s3://bucket/prefix", "orders") is None
     assert table_bytes("/nonexistent-dir", "orders") is None
+    # a directory whose top level holds no data files does not show
+    # its size: a hive-partitioned table and an empty one are unknown,
+    # not 0 bytes (a 0 would claim "small enough to broadcast")
+    part = tmp_path / "orders.parquet" / "o_orderstatus=F"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"x" * 64)
+    assert table_bytes(str(tmp_path), "orders") is None
+    (tmp_path / "customer.parquet").mkdir()
+    assert table_bytes(str(tmp_path), "customer") is None
 
 
 def _join_plan(spark, hinted):
@@ -51,10 +60,18 @@ def test_maybe_broadcast_hints_under_cap(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_maybe_broadcast_no_hint_above_cap(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_CAP", "1b")
+def test_maybe_broadcast_no_hint_above_cap(spark):
+    # the cap is the session's own broadcast threshold, so one setting
+    # governs the hint and Catalyst's size-based broadcast alike
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     orders = load_table(spark, SF_DIR, "orders")
-    hinted = maybe_broadcast(orders, table_bytes(SF_DIR, "orders"))
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+        hinted = maybe_broadcast(orders, table_bytes(SF_DIR, "orders"))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert maybe_broadcast(orders, 0) is orders
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # the returned frame is the input unchanged — no hint node at all;
     # whatever join strategy appears is the planner's own choice
     assert hinted is orders
