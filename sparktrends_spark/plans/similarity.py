@@ -2907,9 +2907,8 @@ def q_embedding_filtered_ann_adaptive_recall(
     which is ``refine_k`` re-ranking's job). Scale shape: the only
     cost adaptive adds is one column-pruned, predicate-pushed count
     pass over (cell, payload) of the stored table; the serve still
-    opens only the escalated probe cells (serve-cost receipt in
-    tools/serve_bench.py). Registered swept-only (registry
-    discipline)."""
+    opens only the escalated probe cells. Registered swept-only
+    (registry discipline)."""
     from sparktrends_spark.similarity.cosine import (
         build_ivf_index,
         ivf_index_topk,

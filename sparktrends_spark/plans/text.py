@@ -761,7 +761,7 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
+        tf.join(dfreq, "term")
         .join(n)
         .select(
             "doc_id",

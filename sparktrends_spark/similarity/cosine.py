@@ -467,15 +467,18 @@ def label_centroids(
 def _with_cell_sims(
     df: DataFrame,
     id_alias: str,
-    cent_row: DataFrame,
+    cents: DataFrame | Column,
     vec_col: str,
     round_digits: int,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id[, extras], _v, _nv, _sims) — rounded cosine to every
-    centroid, computed against the broadcast one-row centroid table
-    without any fan-out or shuffle. ``extra_cols`` carries payload
-    columns through (the filtered-search build/append path)."""
+    centroid, without any fan-out or shuffle. ``cents`` is either the
+    broadcast one-row centroid table (``_cents``) or the persisted
+    index's centroid literal (``_cent_literal``); over a literal the
+    whole frame is a projection, which Catalyst folds when ``df`` is a
+    local relation. ``extra_cols`` carries payload columns through
+    (the filtered-search build/append path)."""
     # Single-parse expr — identical tree to the F.transform/F.struct
     # chain (measured ~0.7 s of py4j latency per call at dim 64).
     sims_sql = (
@@ -483,15 +486,43 @@ def _with_cell_sims(
         + _dot_sql("_v", "c.cvec")
         + f" / (_nv * c.cn), {int(round_digits)}) AS sim, c.cell AS cell))"
     )
-    return (
-        df.select(
-            F.col(id_alias),
-            *[F.col(c) for c in extra_cols],
-            F.col(vec_col).alias("_v"),
-            norm(vec_col).alias("_nv"),
-        )
-        .crossJoin(cent_row)
-        .withColumn("_sims", F.expr(sims_sql))
+    base = df.select(
+        F.col(id_alias),
+        *[F.col(c) for c in extra_cols],
+        F.col(vec_col).alias("_v"),
+        norm(vec_col).alias("_nv"),
+    )
+    if isinstance(cents, Column):
+        base = base.withColumn("_cents", cents)
+    else:
+        base = base.crossJoin(cents)
+    return base.withColumn("_sims", F.expr(sims_sql))
+
+
+def _cent_literal(path: str) -> Column:
+    """A persisted ``centroids`` artifact (cell, cvec, cn) as ONE
+    literal array of structs, read on the driver by pyarrow — no Spark
+    job, and exactly the float64 values a Spark read returns, so cells
+    score identically. The cell keeps its stored integer type."""
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    table = pq.read_table(path)
+    cell_type = from_arrow_type(table.schema.field("cell").type)
+    return F.array(
+        *[
+            F.struct(
+                F.lit(int(c)).alias("cell"),
+                F.lit(np.asarray(v, dtype=np.float64)).alias("cvec"),
+                F.lit(float(n)).alias("cn"),
+            )
+            for c, v, n in zip(*(table.column(x).to_pylist()
+                                 for x in ("cell", "cvec", "cn")))
+        ]
+    ).cast(
+        f"array<struct<cell:{cell_type.simpleString()},"
+        "cvec:array<double>,cn:double>>"
     )
 
 
@@ -512,51 +543,40 @@ def _probe_order():
     )
 
 
+def _probe_cells(nprobe: int) -> Column:
+    """Each query's ``nprobe`` nearest cells, as an array."""
+    return F.slice(_probe_order(), 1, nprobe)["cell"]
+
+
 def _rank_probed(
     assigned: DataFrame,
     queries: DataFrame,
-    cent_row: DataFrame,
+    probes: DataFrame,
     k: int,
-    nprobe: int,
     query_id: str,
     cand_id: str,
     vec_col: str,
     round_digits: int,
-    probes: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared IVF query tail: probe cells, exact-score candidates in
+    """Shared IVF query tail: exact-score candidates in each query's
     probed cells only, per-query top-k. ``assigned`` carries
-    (cand_id, _cv, _nc, cell). ``probes`` overrides the default
-    fixed-nprobe probe set with a caller-computed (query_id, cell)
-    frame — the selectivity-aware escalation path."""
+    (cand_id, _cv, _nc, cell); ``probes`` is the (query_id, cell)
+    probe set."""
     from pyspark.sql import Window
 
-    if probes is None:
-        probes = (
-            _with_cell_sims(
-                queries, query_id, cent_row, vec_col, round_digits
-            )
-            .select(
-                query_id,
-                F.explode(F.slice(_probe_order(), 1, nprobe)).alias("_p"),
-            )
-            .select(query_id, F.col("_p.cell").alias("cell"))
-        )
     qv = queries.select(
         F.col(query_id),
         F.col(vec_col).alias("_qv"),
         norm(vec_col).alias("_nq"),
     )
-    # qv is hinted although it is only the caller's query batch: a
-    # createDataFrame batch is an RDD scan Catalyst cannot size
     scored = (
         assigned.join(F.broadcast(probes), on="cell")
         .filter(F.col(cand_id) != F.col(query_id))
-        .join(F.broadcast(qv), on=query_id)
+        .join(qv, on=query_id)
         .withColumn(
             "cosine",
             F.round(
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_nc") * F.col("_nq")),
+                dot("_cv", "_qv") / (F.col("_nc") * F.col("_nq")),
                 round_digits,
             ),
         )
@@ -619,9 +639,12 @@ def ivf_topk(
         F.col("_nv").alias("_nc"),
         _best_cell()["cell"].alias("cell"),
     )
+    probes = _with_cell_sims(
+        queries, query_id, cent_row, vec_col, round_digits
+    ).select(query_id, F.explode(_probe_cells(nprobe)).alias("cell"))
     return _rank_probed(
-        assigned, queries, cent_row, k, nprobe,
-        query_id, cand_id, vec_col, round_digits,
+        assigned, queries, probes, k, query_id, cand_id, vec_col,
+        round_digits,
     )
 
 
@@ -714,6 +737,7 @@ def build_ivf_index(
             vectors.sparkSession.catalog.refreshByPath(f"{path}/tombstones")
         _build_ivf_locked(vectors, path, label_col, cand_id, vec_col,
                           round_digits, payload_cols, dim=dim)
+        _ivf_handle(vectors.sparkSession, path)  # warm: first serve hits
 
 
 def _build_ivf_locked(
@@ -734,11 +758,9 @@ def _build_ivf_locked(
     # k bounded rows: collect + driver-side parquet write instead of a
     # coalesce(1) write job (generations.write_small_frame)
     write_small_frame(spark, cent_n, f"{path}/centroids")
-    cent_row = spark.read.parquet(f"{path}/centroids").agg(
-        F.collect_list(F.struct("cell", "cvec", "cn")).alias("_cents")
-    )
     assigned = _with_cell_sims(
-        vectors, cand_id, cent_row, vec_col, round_digits,
+        vectors, cand_id, _cent_literal(f"{path}/centroids"), vec_col,
+        round_digits,
         extra_cols=payload_cols,
     ).select(
         cand_id,
@@ -780,10 +802,40 @@ _IVF_FLAT_ARTIFACTS = _IVF_SMALL_ARTIFACTS + _IVF_CELL_ARTIFACTS + (
 )
 
 
-def _ivf_tombstones(spark, root: str, cand_id: str) -> DataFrame | None:
-    from sparktrends_spark.similarity.generations import read_tombstones
+def _load_ivf(spark, root: str):
+    """What an IVF generation never changes: the stored vectors schema
+    (one inference job, paid here instead of per request) and the
+    centroid literal (read on the driver)."""
+    import os
 
-    return read_tombstones(spark, root, cand_id)
+    if not os.path.isdir(f"{root}/vectors"):
+        raise ValueError(
+            f"no index at {root} ({root}/vectors missing) — build_ivf_index"
+            " creates one"
+        )
+    return (
+        {"vectors": spark.read.parquet(f"{root}/vectors").schema},
+        {"cents": _cent_literal(f"{root}/centroids")},
+    )
+
+
+def _ivf_handle(spark, path: str):
+    from sparktrends_spark.similarity.generations import index_handle
+
+    return index_handle(spark, path, _IVF_SMALL_ARTIFACTS, _load_ivf)
+
+
+def _ivf_payloads(handle, cand_id: str) -> tuple[str, ...]:
+    """Payload columns of the stored vectors table (everything beyond
+    the family's own id/_cv/_nc/cell) — schema-derived via the shared
+    helper, so appends/retrains cannot drift from the build."""
+    from sparktrends_spark.similarity.generations import (
+        stored_payload_cols,
+    )
+
+    return stored_payload_cols(
+        handle.schemas["vectors"], {cand_id, "_cv", "_nc", "cell"}
+    )
 
 
 def delete_from_ivf_index(
@@ -850,40 +902,25 @@ def append_ivf_index(
     Holds the index maintenance lock for the whole append (an append
     racing a retrain promotion would land in the superseded generation
     and be lost at GC — see ``generations.maintenance_lock``)."""
-    from sparktrends_spark.similarity.generations import (
-        maintenance_lock,
-        resolve_root,
-    )
+    from sparktrends_spark.similarity.generations import maintenance_lock
 
     spark = new_vectors.sparkSession
     with maintenance_lock(path, operation="append"):
         _append_ivf_locked(
-            spark, new_vectors, resolve_root(path), cand_id, vec_col,
+            spark, new_vectors, _ivf_handle(spark, path), cand_id, vec_col,
             round_digits,
         )
 
 
-def _ivf_stored_payloads(spark, root: str, cand_id: str) -> tuple[str, ...]:
-    """Payload columns of the stored vectors table (everything beyond
-    the family's own id/_cv/_nc/cell) — schema-derived via the shared
-    helper, so appends/retrains cannot drift from the build."""
-    from sparktrends_spark.similarity.generations import (
-        stored_payload_cols,
-    )
-
-    return stored_payload_cols(
-        spark, f"{root}/vectors", {cand_id, "_cv", "_nc", "cell"}
-    )
-
-
 def _append_ivf_locked(
-    spark, new_vectors, root, cand_id, vec_col, round_digits
+    spark, new_vectors, handle, cand_id, vec_col, round_digits
 ) -> None:
     from sparktrends_spark.similarity.generations import require_payloads
 
-    payloads = _ivf_stored_payloads(spark, root, cand_id)
+    root = handle.root
+    payloads = _ivf_payloads(handle, cand_id)
     require_payloads(new_vectors.columns, payloads, root, "vectors")
-    tomb = _ivf_tombstones(spark, root, cand_id)
+    tomb = handle.tombstones(spark, cand_id, "vectors")
     if tomb is not None:
         # a batch re-inserting a tombstoned id would be hidden forever
         # by the serve anti-join — refuse; retrain reclaims first
@@ -895,20 +932,13 @@ def _append_ivf_locked(
                 " to reclaim deletes,"
                 " then append"
             )
-    try:
-        stored = spark.read.parquet(f"{root}/vectors").schema["_cv"].dataType
-        elem = stored.elementType.simpleString()
-    except Exception:
-        elem = "double"
-    cent_row = spark.read.parquet(f"{root}/centroids").agg(
-        F.collect_list(F.struct("cell", "cvec", "cn")).alias("_cents")
-    )
+    cv_type = handle.schemas["vectors"]["_cv"].dataType
     assigned = _with_cell_sims(
-        new_vectors, cand_id, cent_row, vec_col, round_digits,
+        new_vectors, cand_id, handle.extra["cents"], vec_col, round_digits,
         extra_cols=payloads,
     ).select(
         cand_id,
-        F.col("_v").cast(f"array<{elem}>").alias("_cv"),
+        F.col("_v").cast(cv_type).alias("_cv"),
         F.col("_nv").alias("_nc"),
         *payloads,
         _best_cell()["cell"].alias("cell"),
@@ -968,93 +998,92 @@ def ivf_index_topk(
     default (None) path is byte-identical to the fixed-nprobe serve.
     Top-k semantics within the (escalated) probed cells are unchanged
     and SQL-expressible, so the oracle replays the escalation
-    exactly."""
-    from sparktrends_spark.similarity.generations import resolve_root
+    exactly.
 
-    root = resolve_root(path)
-    cent_row = spark.read.parquet(f"{root}/centroids").agg(
-        F.collect_list(F.struct("cell", "cvec", "cn")).alias("_cents")
+    Per request: ``CURRENT`` resolves to the generation's cached handle
+    (``generations.index_handle``: centroid literal and pinned schemas,
+    filled at build), the query batch is read once into a local
+    relation, and probe cells are picked over it by a projection
+    Catalyst folds, so picking them runs no job."""
+    from pyspark.sql import types as T
+
+    from sparktrends_spark.similarity.generations import (
+        apply_where,
+        local_relation,
+        local_rows,
     )
-    tomb = _ivf_tombstones(spark, root, cand_id)
-    probes = None
+
+    h = _ivf_handle(spark, path)
+    q = local_relation(spark, queries.select(query_id, vec_col))
+    sims = _with_cell_sims(q, query_id, h.extra["cents"], vec_col, round_digits)
+    tomb = h.tombstones(spark, cand_id, "vectors")
+
+    def live(cand: DataFrame) -> DataFrame:
+        if where is not None:
+            # loud serve-side guard: an unresolvable predicate names
+            # the stored payloads instead of an opaque AnalysisException
+            cand = apply_where(cand, where, h.root, _ivf_payloads(h, cand_id))
+        if tomb is not None:
+            # logical deletes (delete_from_ivf_index): tombstoned ids
+            # leave the candidate set before scoring — takedown-sized
+            # side, AQE broadcasts the hash anti-join; physically
+            # reclaimed at compact/retrain
+            cand = cand.join(tomb, cand_id, "left_anti")
+        return cand
+
     if min_candidates is None:
-        probe_cells = sorted(
-            r["cell"]
-            for r in _with_cell_sims(
-                queries, query_id, cent_row, vec_col, round_digits
-            )
-            .select(F.explode(F.slice(_probe_order(), 1, nprobe)).alias("_p"))
-            .select(F.col("_p.cell").alias("cell"))
-            .distinct()
-            .collect()
-        )
+        rows = [
+            (r[0], c)
+            for r in sims.select(query_id, _probe_cells(nprobe)).collect()
+            for c in r[1]
+        ]
     else:
-        kept = _adaptive_ivf_probes(
-            spark, root, queries, cent_row, nprobe, min_candidates,
-            query_id, cand_id, vec_col, round_digits, where, tomb,
-        )
-        # materialize the escalation ONCE: the (query_id, cell) probe
-        # set is bounded (<= |queries| * n_cells small rows), and
-        # reusing the lazy frame in the ranking join would re-execute
-        # the corpus-wide counting scan a second time
-        rows = kept.collect()
-        probe_cells = sorted({int(r["cell"]) for r in rows})
-        probes = spark.createDataFrame(rows, kept.schema)
-    assigned = spark.read.parquet(f"{root}/vectors").filter(
-        F.col("cell").isin(probe_cells)
+        # the escalation runs its counting scan once: its (query_id,
+        # cell) rows are bounded (<= |queries| * n_cells) and collected
+        rows = [
+            tuple(r)
+            for r in _adaptive_ivf_probes(
+                live(h.scan(spark, "vectors")), sims, nprobe,
+                min_candidates, query_id,
+            ).collect()
+        ]
+    cell = sims.schema["_sims"].dataType.elementType["cell"]
+    probes = local_rows(
+        spark, rows, T.StructType([q.schema[query_id], cell])
     )
-    if where is not None:
-        # loud serve-side guard: an unresolvable predicate names the
-        # stored payloads instead of an opaque AnalysisException
-        from sparktrends_spark.similarity.generations import apply_where
-
-        assigned = apply_where(
-            assigned, where, root, _ivf_stored_payloads(spark, root, cand_id)
+    assigned = live(
+        h.scan(spark, "vectors").filter(
+            F.col("cell").isin(sorted({c for _, c in rows}))
         )
-    if tomb is not None:
-        # logical deletes (delete_from_ivf_index): tombstoned ids leave
-        # the candidate set before scoring — takedown-sized side, AQE
-        # broadcasts the hash anti-join; physically reclaimed at retrain
-        assigned = assigned.join(tomb, cand_id, "left_anti")
+    )
     return _rank_probed(
-        assigned, queries, cent_row, k, nprobe,
-        query_id, cand_id, vec_col, round_digits, probes=probes,
+        assigned, q, probes, k, query_id, cand_id, vec_col, round_digits,
     )
 
 
 def _adaptive_ivf_probes(
-    spark, root, queries, cent_row, nprobe, min_candidates,
-    query_id, cand_id, vec_col, round_digits, where, tomb,
+    cand, sims, nprobe, min_candidates, query_id
 ) -> DataFrame:
     """Per-query escalated probe set (query_id, cell) for the plain
     IVF serve — the counting half of ``min_candidates`` (see
-    ``ivf_index_topk``). The count scan deliberately carries NO
-    partition filter (every cell's live count feeds the prefix
-    decision) but projects only (cell, id, payloads-in-predicate):
-    column pruning keeps the stored vectors out of it entirely."""
-    from sparktrends_spark.similarity.generations import (
-        apply_where,
-        escalate_probes,
-    )
+    ``ivf_index_topk``). The count scan over the live candidates
+    ``cand`` deliberately carries NO partition filter (every cell's
+    live count feeds the prefix decision) but projects only (cell, id,
+    payloads-in-predicate): column pruning keeps the stored vectors out
+    of it entirely."""
+    from sparktrends_spark.similarity.generations import escalate_probes
 
-    cand = spark.read.parquet(f"{root}/vectors")
-    if where is not None:
-        cand = apply_where(
-            cand, where, root, _ivf_stored_payloads(spark, root, cand_id)
-        )
-    if tomb is not None:
-        cand = cand.join(tomb, cand_id, "left_anti")
     counts = cand.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
-    order = (
-        _with_cell_sims(queries, query_id, cent_row, vec_col, round_digits)
-        .select(query_id, F.posexplode(_probe_order()).alias("_r0", "_p"))
-        .select(
-            query_id,
-            (F.col("_r0") + 1).alias("_rnk"),
-            F.col("_p.cell").alias("cell"),
-        )
+    order = sims.select(
+        query_id, F.posexplode(_probe_order()).alias("_r0", "_p")
+    ).select(
+        query_id,
+        (F.col("_r0") + 1).alias("_rnk"),
+        F.col("_p.cell").alias("cell"),
     )
-    return escalate_probes(order, counts, query_id, nprobe, min_candidates)
+    return escalate_probes(
+        order, counts, query_id, nprobe, min_candidates
+    ).select(query_id, "cell")
 
 
 def ivf_index_staleness(spark, path: str, check_sim: bool = True) -> dict:
@@ -1070,6 +1099,7 @@ def ivf_index_staleness(spark, path: str, check_sim: bool = True) -> dict:
     over the stored vectors (no joins)."""
     from sparktrends_spark.similarity.generations import (
         read_current,
+        read_tombstones,
         resolve_root,
         staleness_counts,
         weighted_baseline,
@@ -1098,7 +1128,7 @@ def ivf_index_staleness(spark, path: str, check_sim: bool = True) -> dict:
     # only tombstones that HIT the index (semi-join vs stored ids) —
     # an org-wide purge list must not inflate this shard's ratio
     stored_id = spark.read.parquet(f"{root}/vectors").columns[0]
-    tomb = _ivf_tombstones(spark, root, stored_id)
+    tomb = read_tombstones(spark, root, stored_id)
     n_tomb = (
         int(
             tomb.join(
@@ -1190,24 +1220,18 @@ def _retrain_ivf_locked(
         gc_generations,
         next_generation,
         require_payloads,
-        resolve_root,
         write_current,
     )
 
     spark = vectors.sparkSession
-    previous = resolve_root(path)
-    if not os.path.isdir(f"{previous}/vectors"):
-        # loud, not an opaque parquet read error from the payload
-        # inheritance below — retraining a never-built index is
-        # always a caller mistake (build_ivf_index creates one)
-        raise ValueError(
-            f"no index at {previous} ({previous}/vectors missing)"
-            " — nothing to retrain; build_ivf_index creates one"
-        )
-    payloads = _ivf_stored_payloads(spark, previous, cand_id)
+    # a never-built index raises here, naming the root (retraining
+    # one is always a caller mistake)
+    h = _ivf_handle(spark, path)
+    previous = h.root
+    payloads = _ivf_payloads(h, cand_id)
     require_payloads(vectors.columns, payloads, previous, "vectors")
     corpus = vectors
-    tomb = _ivf_tombstones(spark, previous, cand_id)
+    tomb = h.tombstones(spark, cand_id, "vectors")
     if tomb is not None:
         # physical reclaim of logical deletes: even if the caller's
         # corpus still carries a taken-down document, the retrained
@@ -1216,14 +1240,9 @@ def _retrain_ivf_locked(
         corpus = corpus.join(tomb, cand_id, "left_anti")
     new_gen = next_generation(path)
     try:
-        build_ivf_index(
-            corpus,
-            os.path.join(path, new_gen),
-            label_col=label_col,
-            cand_id=cand_id,
-            vec_col=vec_col,
-            round_digits=round_digits,
-            payload_cols=payloads,
+        _build_ivf_locked(
+            corpus, os.path.join(path, new_gen), label_col, cand_id,
+            vec_col, round_digits, payloads,
         )
     except BaseException:
         # a failed generation build was never promoted — remove the
@@ -1236,6 +1255,7 @@ def _retrain_ivf_locked(
     removed = gc_generations(path, _IVF_FLAT_ARTIFACTS, keep_generations)
     for sub in _IVF_FLAT_ARTIFACTS:
         spark.catalog.refreshByPath(os.path.join(path, new_gen, sub))
+    _ivf_handle(spark, path)  # warm: first serve hits
     return {
         "generation": new_gen,
         "previous_root": previous,
@@ -1355,7 +1375,7 @@ def compact_ivf_index(
     index families."""
     from sparktrends_spark.similarity.generations import compact_cells
 
-    return compact_cells(
+    out = compact_cells(
         spark,
         path,
         small_artifacts=_IVF_SMALL_ARTIFACTS,
@@ -1366,6 +1386,8 @@ def compact_ivf_index(
         keep_generations=keep_generations,
         lock_timeout_s=lock_timeout_s,
     )
+    _ivf_handle(spark, path)  # warm: first serve hits
+    return out
 
 
 def lsh_topk(

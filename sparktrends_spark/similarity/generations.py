@@ -24,11 +24,13 @@ object store the pointer becomes a conditional-put manifest object.
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import json
 import os
 import re
 import shutil
 import socket
+import threading
 import time
 
 _GEN_RE = re.compile(r"^g(\d{6})$")
@@ -531,18 +533,133 @@ def gc_generations(
     return removed
 
 
-def read_tombstones(spark, root: str, id_col: str, artifact: str = "tombstones"):
+def read_tombstones(
+    spark, root: str, id_col: str, artifact: str = "tombstones", id_type=None
+):
     """Distinct tombstoned ids recorded on a generation root, or None
     if the root has none — the shared read half of the takedown
     discipline (IVF / IVF-PQ / dedup indexes all use it, so a
     semantics fix lands once). Tombstone volume is bounded by takedown
-    traffic, orders of magnitude below corpus size."""
+    traffic, orders of magnitude below corpus size. ``id_type`` (the
+    stored id's Spark type, which ``write_tombstones`` casts to) pins
+    the read schema, so the scan starts no schema-inference job."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     d = os.path.join(root, artifact)
     if not os.path.isdir(d):
         return None
-    return spark.read.parquet(d).select(F.col(id_col)).distinct()
+    reader = spark.read
+    if id_type is not None:
+        reader = reader.schema(T.StructType([T.StructField(id_col, id_type)]))
+    return reader.parquet(d).select(F.col(id_col)).distinct()
+
+
+@dataclasses.dataclass(frozen=True)
+class IndexHandle:
+    """What one generation of a persisted index never changes, resolved
+    once and shared by every request against it (``index_handle``):
+    the stored schemas each artifact is scanned with, and ``extra``, the
+    family's small state (the IVF centroid literal, BM25's bucket
+    count). Tombstones and file listings are NOT held: appends and
+    deletes change them within a generation, so every scan lists and
+    every tombstone read runs fresh."""
+
+    root: str
+    identity: tuple
+    schemas: dict
+    extra: dict
+
+    def scan(self, spark, artifact: str):
+        """The artifact read with its pinned schema: no inference job,
+        and the file listing is taken fresh."""
+        return spark.read.schema(self.schemas[artifact]).parquet(
+            os.path.join(self.root, artifact)
+        )
+
+    def tombstones(self, spark, id_col: str, schema_src: str,
+                   artifact: str = "tombstones"):
+        return read_tombstones(
+            spark, self.root, id_col, artifact,
+            id_type=self.schemas[schema_src][id_col].dataType,
+        )
+
+
+_HANDLES: dict[str, IndexHandle] = {}
+_HANDLES_LOCK = threading.Lock()
+
+
+def _generation_identity(spark, root: str, small_artifacts) -> tuple:
+    """The live session plus the root and its small artifacts' part
+    files (name, mtime): any rewrite of those (an overwrite-build, a
+    promotion to a new root) changes it. The session is part of it
+    because a handle holds JVM-side literals that die with their
+    SparkContext."""
+
+    def parts(d: str):
+        try:
+            return tuple(
+                sorted(
+                    (e.name, e.stat().st_mtime_ns)
+                    for e in os.scandir(d)
+                    if e.name.endswith(".parquet")
+                )
+            )
+        except FileNotFoundError:  # absent, or rewritten while listed
+            return None
+
+    return (
+        spark.sparkContext.applicationId,
+        root,
+        tuple(parts(os.path.join(root, a)) for a in small_artifacts),
+    )
+
+
+def index_handle(spark, path: str, small_artifacts, load) -> IndexHandle:
+    """The handle of ``path``'s CURRENT generation. Resolves the pointer
+    (one file read) and compares the generation identity with the one
+    cached entry for ``path``; only on a miss does ``load(spark, root)``
+    -> (schemas, extra) read anything. Builds, compactions and retrains
+    call this right after they write, so the first request after them
+    hits. One entry per index path: a new generation replaces the old
+    one's entry. Loads run outside the lock (a rare duplicate load is
+    harmless: both produce the same handle)."""
+    root = resolve_root(path)
+    identity = _generation_identity(spark, root, small_artifacts)
+    key = os.path.abspath(path)
+    with _HANDLES_LOCK:
+        handle = _HANDLES.get(key)
+    if handle is not None and handle.identity == identity:
+        return handle
+    schemas, extra = load(spark, root)
+    handle = IndexHandle(root, identity, schemas, extra)
+    with _HANDLES_LOCK:
+        _HANDLES[key] = handle
+    return handle
+
+
+def local_relation(spark, df):
+    """``df`` executed once and held on the driver as a local relation
+    (an Arrow collect, then ``createDataFrame`` of the Arrow table).
+    A caller's ``createDataFrame`` batch is a Python-RDD scan Catalyst
+    can neither size nor fold, and every plan branch that reads it runs
+    it again; over a local relation, projections fold at optimization
+    (a collect of one runs no job) and joins are sized from the rows.
+    For request-sized frames only: the rows travel to the driver."""
+    return spark.createDataFrame(df.toArrow())
+
+
+def local_rows(spark, rows, schema):
+    """Driver-side ``rows`` (tuples in ``schema``'s column order) as a
+    local relation, through Arrow — not the Python-RDD scan a list
+    ``createDataFrame`` makes."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+    table = pa.table(
+        {f.name: list(c) for f, c in zip(schema.fields, cols)}
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def write_tombstones(
@@ -607,17 +724,14 @@ def check_payload_names(
         )
 
 
-def stored_payload_cols(spark, table_dir: str, layout: set[str]) -> tuple[str, ...]:
+def stored_payload_cols(schema, layout: set[str]) -> tuple[str, ...]:
     """Payload columns of a stored index table: everything beyond the
-    family's own ``layout`` columns, read from the parquet schema — so
+    family's own ``layout`` columns of its stored ``schema`` — so
     appends and retrains are SELF-DESCRIBING (no caller-supplied
     repeat of the build's ``payload_cols``, and no way to drift from
-    it). Shared by the IVF and IVF-PQ filtered-search lifecycles."""
-    return tuple(
-        f.name
-        for f in spark.read.parquet(table_dir).schema.fields
-        if f.name not in layout
-    )
+    it). Shared by the IVF, IVF-PQ and BM25 filtered-search
+    lifecycles."""
+    return tuple(f.name for f in schema.fields if f.name not in layout)
 
 
 def apply_where(df, where, root: str, payloads: tuple[str, ...]):

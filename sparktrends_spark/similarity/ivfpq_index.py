@@ -367,7 +367,9 @@ def _stored_payload_cols(spark, root: str, id_col: str, m: int) -> tuple[str, ..
     )
 
     layout = {id_col, "cell"} | {f"code_{s}" for s in range(m)}
-    return stored_payload_cols(spark, f"{root}/codes", layout)
+    return stored_payload_cols(
+        spark.read.parquet(f"{root}/codes").schema, layout
+    )
 
 
 def _load_books(spark, path: str) -> Codebooks:

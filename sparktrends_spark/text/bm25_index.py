@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from sparktrends_spark.similarity.generations import (
     compact_cells,
+    index_handle,
     maintenance_lock,
     read_tombstones,
     reset_generations,
@@ -134,14 +135,36 @@ def _check_bm25_payload_names(payload_cols, doc_id: str) -> None:
     check_payload_names(payload_cols, reserved, "BM25")
 
 
-def _bm25_stored_payloads(spark, root: str) -> tuple[str, ...]:
+def _load_bm25(spark, root: str):
+    """What a BM25 generation never changes: the stored postings and
+    doclens schemas (one inference job each, paid here instead of per
+    request) and the bucket count — ``meta``'s row count, read on the
+    driver by pyarrow (no job)."""
+    import pyarrow.parquet as pq
+
+    _require_index(root)
+    schemas = {
+        a: spark.read.parquet(f"{root}/{a}").schema for a in _CELL_ARTIFACTS
+    }
+    return schemas, {"n_buckets": pq.read_table(f"{root}/{_META}").num_rows}
+
+
+def _bm25_handle(spark, path: str):
+    return index_handle(spark, path, _SMALL_ARTIFACTS, _load_bm25)
+
+
+def _bm25_stored_id(handle) -> str:
+    # the id column leads the layouts (see _tokenized)
+    return handle.schemas[_DOCLENS].fields[0].name
+
+
+def _bm25_payloads(handle) -> tuple[str, ...]:
     from sparktrends_spark.similarity.generations import (
         stored_payload_cols,
     )
 
-    dl_cols = spark.read.parquet(f"{root}/{_DOCLENS}").columns
     return stored_payload_cols(
-        spark, f"{root}/{_DOCLENS}", {dl_cols[0], "dl", "cell"}
+        handle.schemas[_DOCLENS], {_bm25_stored_id(handle), "dl", "cell"}
     )
 
 
@@ -212,10 +235,7 @@ def build_bm25_index(
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_META}")
         for sub in (_POSTINGS, _DOCLENS, _META):
             spark.catalog.refreshByPath(f"{path}/{sub}")
-
-
-def _n_buckets(spark, root: str) -> int:
-    return int(spark.read.parquet(f"{root}/{_META}").count())
+        _bm25_handle(spark, path)  # warm: first serve hits
 
 
 def _require_index(root: str) -> None:
@@ -242,23 +262,17 @@ def append_bm25_index(
     id-disjoint from the index (the shared ingest contract); batches
     intersecting the tombstone set are refused loudly — reclaim
     (compact) first, then re-ingest."""
+    from sparktrends_spark.similarity.generations import require_payloads
+
     spark = new_docs.sparkSession
     with maintenance_lock(path, operation="bm25-append"):
-        root = resolve_root(path)
-        _require_index(root)
-        n_buckets = _n_buckets(spark, root)
-        from sparktrends_spark.similarity.generations import (
-            require_payloads,
-        )
-
+        h = _bm25_handle(spark, path)
+        root = h.root
+        stored = {f.name: f.dataType for f in h.schemas[_DOCLENS].fields}
         # id-name guard FIRST: with a mismatched doc_id the tombstone
         # read below would die on an opaque unresolved-column error —
         # exactly the failure this guard exists to pre-empt
-        stored = {
-            f.name: f.dataType.simpleString()
-            for f in spark.read.parquet(f"{root}/{_DOCLENS}").schema.fields
-        }
-        stored_id = spark.read.parquet(f"{root}/{_DOCLENS}").columns[0]
+        stored_id = _bm25_stored_id(h)
         if stored_id != doc_id:
             # a differently-named id column would land a second id
             # column in the same parquet dirs — every later read fails
@@ -266,9 +280,9 @@ def append_bm25_index(
                 f"append doc_id={doc_id!r} but the index at {root}"
                 f" stores id column {stored_id!r}"
             )
-        payloads = _bm25_stored_payloads(spark, root)
+        payloads = _bm25_payloads(h)
         require_payloads(new_docs.columns, payloads, root, _DOCLENS)
-        tomb = read_tombstones(spark, root, doc_id, _TOMBSTONES)
+        tomb = h.tombstones(spark, doc_id, _DOCLENS, _TOMBSTONES)
         if tomb is not None:
             n_bad = new_docs.select(doc_id).join(tomb, doc_id).count()
             if n_bad:
@@ -287,7 +301,7 @@ def append_bm25_index(
         for c in payloads:
             new_docs = new_docs.withColumn(c, F.col(c).cast(stored[c]))
         postings, doclens = _tokenized(
-            new_docs, doc_id, text_col, n_buckets, payloads
+            new_docs, doc_id, text_col, h.extra["n_buckets"], payloads
         )
         postings.write.mode("append").partitionBy("cell").parquet(
             f"{root}/{_POSTINGS}"
@@ -332,7 +346,7 @@ def compact_bm25_index(
     index's layout (one compactor for every cell-partitioned index in
     the repo). Serve values are identical by construction: df and the
     corpus stats are derived from live rows before AND after."""
-    return compact_cells(
+    out = compact_cells(
         spark,
         path,
         small_artifacts=_SMALL_ARTIFACTS,
@@ -344,6 +358,8 @@ def compact_bm25_index(
         lock_timeout_s=lock_timeout_s,
         tombstones_artifact=_TOMBSTONES,
     )
+    _bm25_handle(spark, path)  # warm: first serve hits
+    return out
 
 
 def maybe_compact_bm25_index(
@@ -373,8 +389,9 @@ def maybe_compact_bm25_index(
 
     with maintenance_lock(path, lock_timeout_s, operation="bm25-policy"):
         st = bm25_index_stats(spark, path)
-        root = resolve_root(path)
-        n_buckets = _n_buckets(spark, root)
+        h = _bm25_handle(spark, path)
+        root = h.root
+        n_buckets = h.extra["n_buckets"]
         n_files = sum(
             1
             for r, _, fs in os.walk(f"{root}/{_POSTINGS}")
@@ -411,6 +428,8 @@ def maybe_compact_bm25_index(
             if reasons
             else None
         )
+    if reasons:
+        _bm25_handle(spark, path)  # warm: first serve hits
     return out
 
 
@@ -468,55 +487,60 @@ def bm25_index_topk(
 ) -> DataFrame:
     """Serve top-k documents per text query from the persisted index.
 
-    Pins ONE generation for the whole serve (resolve_root once — the
-    shared reader contract). The query batch tokenizes to DISTINCT
-    (query, term) pairs; the probed bucket set (<= n_buckets small
-    ints — the bounded-collect pattern) becomes a STATIC partition
-    filter on postings, which is EXACT for df because a term's
-    postings all live in its hash bucket. Scoring is the canonical
-    chain: live postings (tombstones anti-joined) restricted to query
-    terms -> df per term -> join doclens + the one-row broadcast
-    corpus stats (n_docs, avgdl over LIVE documents) -> round-6
-    per-term BM25 -> DECIMAL(38,6) exact per-(query, doc) sums (the
-    aggregation-order rule) -> per-query top-k by (score desc, doc_id
-    asc). ``exclude_self`` drops candidate == query id (shared id
-    space, the ANN serves' contract).
+    Pins ONE generation for the whole serve: ``CURRENT`` resolves to
+    the generation's cached handle (pinned schemas, bucket count —
+    ``generations.index_handle``), and the query batch is read once
+    into a local relation. Its DISTINCT (query, term) pairs and their
+    buckets come from a projection Catalyst folds over that relation,
+    so collecting them runs no job; the probed buckets (<= n_buckets
+    small ints) become a STATIC partition filter on postings, and the
+    query terms a pushed filter. Both are EXACT for df: a term's
+    postings all live in its hash bucket, and the filter drops terms,
+    never a term's postings. Scoring is the canonical chain: live
+    postings (tombstones anti-joined) of the query terms -> df per
+    term (a window: the one postings scan) -> join doclens + the
+    one-row broadcast corpus stats (n_docs, avgdl over LIVE documents,
+    aggregated from the same shuffled doclens the join reads, so
+    doclens is scanned once) -> round-6 per-term BM25 ->
+    DECIMAL(38,6) exact per-(query, doc) sums (the aggregation-order
+    rule) -> per-query top-k by (score desc, doc_id asc).
+    ``exclude_self`` drops candidate == query id (shared id space, the
+    ANN serves' contract).
 
     ``where`` (requires an index built with ``payload_cols``):
     FILTERED retrieval — a predicate over the doclens payload columns
     narrows CANDIDATES before scoring, while df / n_docs / avgdl
     deliberately stay corpus-wide: that is the canonical filtered
     BM25 (score against global statistics, retrieve within the
-    filter), and exactly what the hybrid row's oracle computes. An
-    unresolvable predicate fails loudly naming the stored payloads
-    (the shared ``apply_where`` guard).
+    filter), and exactly what the hybrid row's oracle computes. Its
+    candidate filter reads doclens once more (column-pruned,
+    predicate-pushed). An unresolvable predicate fails loudly naming
+    the stored payloads (the shared ``apply_where`` guard).
 
     Returns (query_id, doc_id, score, rnk)."""
     from pyspark.sql import Window
 
-    root = resolve_root(path)
-    _require_index(root)
-    n_buckets = _n_buckets(spark, root)
-    qt = queries.select(
-        F.col(query_id),
-        F.explode(
-            F.array_distinct(tokens(F.col(text_col)))
-        ).alias("term"),
+    from sparktrends_spark.similarity.generations import local_relation
+
+    h = _bm25_handle(spark, path)
+    stored_id = _bm25_stored_id(h)
+    q = local_relation(spark, queries.select(query_id, text_col)).select(
+        query_id, F.array_distinct(tokens(F.col(text_col))).alias("_terms")
     )
-    buckets = sorted(
-        r["b"]
-        for r in qt.select(
-            _term_cell(F.col("term"), n_buckets).alias("b")
-        )
-        .distinct()
-        .collect()
-    )  # bounded: <= n_buckets small ints
-    post = spark.read.parquet(f"{root}/{_POSTINGS}").filter(
-        F.col("cell").isin(buckets)
+    rows = q.select(
+        "_terms",
+        F.transform(
+            "_terms", lambda t: _term_cell(t, h.extra["n_buckets"])
+        ).alias("_b"),
+    ).collect()
+    terms = sorted({t for r in rows for t in r["_terms"] or ()})
+    buckets = sorted({b for r in rows for b in r["_b"] or ()})
+    qt = q.select(query_id, F.explode("_terms").alias("term"))
+    post = h.scan(spark, _POSTINGS).filter(
+        F.col("cell").isin(buckets) & F.col("term").isin(terms)
     )
-    stored_id = post.columns[0]
-    dl = spark.read.parquet(f"{root}/{_DOCLENS}")
-    tomb = read_tombstones(spark, root, stored_id, _TOMBSTONES)
+    dl = h.scan(spark, _DOCLENS)
+    tomb = h.tombstones(spark, stored_id, _DOCLENS, _TOMBSTONES)
     if tomb is not None:
         post = post.join(tomb, stored_id, "left_anti")
         dl = dl.join(tomb, stored_id, "left_anti")
@@ -524,23 +548,28 @@ def bm25_index_topk(
     if where is not None:
         from sparktrends_spark.similarity.generations import apply_where
 
-        keep = apply_where(
-            dl, where, root, _bm25_stored_payloads(spark, root)
-        ).select(stored_id)
-    # restrict the probed buckets' postings to the query vocabulary
-    # BEFORE the df aggregation (term-keyed join; AQE broadcasts a
-    # small batch's vocab, a huge batch falls back to the shuffle
-    # join) — df per retained term is still exact: the semi-join
-    # drops terms, never a term's postings
-    post = post.join(qt.select("term").distinct(), "term", "left_semi")
-    dfreq = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        keep = apply_where(dl, where, h.root, _bm25_payloads(h)).select(
+            stored_id
+        )
+    post = post.withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    )
+    # the doc-length join and the corpus stats read ONE shuffle of the
+    # live doclens: Spark reuses an exchange both consumers share
+    # verbatim. The null-id filter is the one the join would infer
+    # (and push below the shuffle, splitting it); a document without
+    # an id can be neither scored nor deleted, so it is not counted.
+    dl = (
+        dl.select(stored_id, "dl")
+        .filter(F.col(stored_id).isNotNull())
+        .repartition(stored_id)
+    )
     corp = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     bm = (
-        post.join(dfreq, "term")
-        .join(dl.select(stored_id, "dl"), stored_id)
+        post.join(dl, stored_id)
         .join(corp)
         .select(
             stored_id,

@@ -191,27 +191,36 @@ def test_replicated_join_salts_the_join_key(spark, sf_dir):
     assert "Generate explode" in plan, plan
 
 
-def test_bm25_never_broadcasts_the_vocabulary(spark, sf_dir):
-    """doc_bm25_terms joins tf with the per-term df frame. That frame
-    is vocabulary-sized (one row per distinct term — 10^8-10^9 at
-    corpus scale), so it must NOT ride a BroadcastExchange: a hint
-    there overrides Catalyst's size check and OOMs the build side at
-    scale. The term join stays a shuffle join (AQE may demote it at
-    runtime if the actual vocab is tiny — that's fine; a static hint
-    is not). Tested by disabling the auto-broadcast threshold: a
-    size-driven broadcast disappears, a hint would survive. The
-    one-row corpus-constants frame is explicitly hinted and must STILL
-    broadcast with the threshold off."""
+@pytest.mark.parametrize(
+    "name, corp_hinted",
+    [
+        pytest.param("doc_bm25_terms", True, id="doc_bm25_terms"),
+        pytest.param("doc_tfidf_terms", False, id="doc_tfidf_terms"),
+    ],
+)
+def test_bm25_never_broadcasts_the_vocabulary(spark, sf_dir, name, corp_hinted):
+    """doc_bm25_terms and doc_tfidf_terms join tf with the per-term df
+    frame. That frame is vocabulary-sized (one row per distinct term —
+    10^8-10^9 at corpus scale), so it must NOT ride a
+    BroadcastExchange: a hint there overrides Catalyst's size check and
+    OOMs the build side at scale. The term join stays a shuffle join
+    (AQE may demote it at runtime if the actual vocab is tiny — that's
+    fine; a static hint is not). Tested by disabling the auto-broadcast
+    threshold: a size-driven broadcast disappears, a hint would
+    survive. doc_bm25_terms' one-row corpus-constants frame is
+    explicitly hinted and must STILL broadcast with the threshold off
+    (doc_tfidf_terms leaves its one-row frame to Catalyst)."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(spark, "doc_bm25_terms", sf_dir)
+        plan = _plan(spark, name, sf_dir)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert not re.search(r"BroadcastHashJoin \[term#", plan), plan
     assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[term#", plan), plan
-    # the hinted one-row corp frame still broadcasts
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    if corp_hinted:
+        # the hinted one-row corp frame still broadcasts
+        assert "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_codec_queries_fuse_mapinpandas_without_shuffle(spark, sf_dir):
