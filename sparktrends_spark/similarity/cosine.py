@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparktrends_spark.caching import persist_tracked
+from sparktrends_spark.similarity.generations import IndexLayout
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -792,13 +793,12 @@ def _build_ivf_locked(
         assigned.unpersist()
 
 
-# single source of truth for the IVF index layout (the ivfpq lesson:
-# enumerating artifact names at call sites silently drops one from a
-# compacted generation, then GC reclaims the only copy)
-_IVF_SMALL_ARTIFACTS = ("centroids", "meta")
-_IVF_CELL_ARTIFACTS = ("vectors",)
-_IVF_FLAT_ARTIFACTS = _IVF_SMALL_ARTIFACTS + _IVF_CELL_ARTIFACTS + (
-    "tombstones",
+_IVF = IndexLayout(
+    name="ivf",
+    small=("centroids", "meta"),
+    cells=("vectors",),
+    ids="vectors",
+    n_cells_src="centroids",
 )
 
 
@@ -822,7 +822,7 @@ def _load_ivf(spark, root: str):
 def _ivf_handle(spark, path: str):
     from sparktrends_spark.similarity.generations import index_handle
 
-    return index_handle(spark, path, _IVF_SMALL_ARTIFACTS, _load_ivf)
+    return index_handle(spark, path, _IVF.small, _load_ivf)
 
 
 def _ivf_payloads(handle, cand_id: str) -> tuple[str, ...]:
@@ -851,23 +851,9 @@ def delete_from_ivf_index(
     ``ids``: a DataFrame carrying ``cand_id`` or a plain iterable.
     Re-inserting a tombstoned id requires the reclaim first —
     ``append_ivf_index`` refuses intersecting batches."""
-    import os
+    from sparktrends_spark.similarity.generations import delete_ids
 
-    from sparktrends_spark.similarity.generations import (
-        maintenance_lock,
-        resolve_root,
-        write_tombstones,
-    )
-
-    with maintenance_lock(path, operation="delete"):
-        root = resolve_root(path)
-        if not os.path.isdir(f"{root}/vectors"):
-            raise ValueError(
-                f"no index at {root} ({root}/vectors missing) — nothing"
-                " to delete from"
-            )
-        n = write_tombstones(spark, root, ids, cand_id, schema_src="vectors")
-    return {"root": root, "n_tombstones": n}
+    return delete_ids(spark, path, ids, cand_id, _IVF)
 
 
 def append_ivf_index(
@@ -1098,58 +1084,13 @@ def ivf_index_staleness(spark, path: str, check_sim: bool = True) -> dict:
     mislead). Counts are metadata-cheap; the sim check is one pass
     over the stored vectors (no joins)."""
     from sparktrends_spark.similarity.generations import (
-        read_current,
-        read_tombstones,
-        resolve_root,
-        staleness_counts,
+        probe_cells,
         weighted_baseline,
     )
 
-    root = resolve_root(path)
-    import os
-
-    if not os.path.isdir(f"{root}/meta"):
-        raise ValueError(
-            f"no staleness baseline at {root}/meta — rebuild or retrain"
-            " to create one"
-        )
-    meta = {
-        int(r["cell"]): (int(r["n"]), float(r["mean_sim"]))
-        for r in spark.read.parquet(f"{root}/meta").collect()  # n_cells
-    }
-    now = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(f"{root}/vectors")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # n_cells rows
-    }
-    # id column leads the stored layout (build's select order); count
-    # only tombstones that HIT the index (semi-join vs stored ids) —
-    # an org-wide purge list must not inflate this shard's ratio
-    stored_id = spark.read.parquet(f"{root}/vectors").columns[0]
-    tomb = read_tombstones(spark, root, stored_id)
-    n_tomb = (
-        int(
-            tomb.join(
-                spark.read.parquet(f"{root}/vectors").select(stored_id),
-                stored_id,
-                "left_semi",
-            ).count()
-        )
-        if tomb is not None
-        else 0
-    )
-    counts = staleness_counts(meta, now)
-    out = {
-        "generation": read_current(path) or "",
-        **counts,
-        "sim_train": None,
-        "sim_now": None,
-        "sim_drop": None,
-        "n_tombstones": n_tomb,
-        "tombstone_ratio": n_tomb / max(counts["n_now"], 1),
-    }
+    p = probe_cells(spark, path, _IVF, stat="mean_sim")
+    root = p.root
+    out = {**p.report, "sim_train": None, "sim_now": None, "sim_drop": None}
     if check_sim:
         cent_row = spark.read.parquet(f"{root}/centroids").agg(
             F.collect_list(F.struct("cell", "cvec", "cn")).alias("_cents")
@@ -1165,7 +1106,7 @@ def ivf_index_staleness(spark, path: str, check_sim: bool = True) -> dict:
                 )[0]["sim"]
             ).alias("s")
         ).collect()[0]["s"]
-        sim_train = weighted_baseline(meta)
+        sim_train = weighted_baseline(p.meta)
         out["sim_train"] = sim_train
         out["sim_now"] = float(sim_now)
         out["sim_drop"] = sim_train - float(sim_now)
@@ -1203,7 +1144,8 @@ def retrain_ivf_index(
     never take it."""
     from sparktrends_spark.similarity.generations import maintenance_lock
 
-    with maintenance_lock(path, operation="retrain"):
+    _IVF.root(path, "retrain")
+    with maintenance_lock(path, operation="ivf-retrain"):
         return _retrain_ivf_locked(
             vectors, path, label_col, cand_id, vec_col, round_digits,
             keep_generations,
@@ -1252,8 +1194,8 @@ def _retrain_ivf_locked(
         shutil.rmtree(os.path.join(path, new_gen), ignore_errors=True)
         raise
     write_current(path, new_gen)
-    removed = gc_generations(path, _IVF_FLAT_ARTIFACTS, keep_generations)
-    for sub in _IVF_FLAT_ARTIFACTS:
+    removed = gc_generations(path, _IVF.flat, keep_generations)
+    for sub in _IVF.flat:
         spark.catalog.refreshByPath(os.path.join(path, new_gen, sub))
     _ivf_handle(spark, path)  # warm: first serve hits
     return {
@@ -1270,16 +1212,23 @@ def maybe_retrain_ivf_index(
     max_size_ratio: float = 2.0,
     max_cell_skew: float = 4.0,
     max_tombstone_ratio: float = 0.25,
-    **retrain_kwargs,
+    *,
+    lock_timeout_s: float = 600.0,
+    label_col: str = "label",
+    cand_id: str = "vec_id",
+    vec_col: str = "embedding",
+    round_digits: int = 6,
+    keep_generations: int = 2,
 ) -> dict:
     """The maintenance POLICY in one call for the plain IVF index —
     probe, compare against thresholds, retrain only if stale: the
     label-supervised twin of ``maybe_retrain_ivfpq_index`` (same
-    cron-job shape; round-13 lifecycle symmetry). The one signature
-    difference is inherent to the family: the caller supplies the
-    LABELED corpus (``vectors``), exactly as ``retrain_ivf_index``
-    requires, because the stored sidecar carries assignments, not
-    labels — when no threshold trips, the frame is never executed.
+    cron-job shape, the shared ``generations.run_policy``). The one
+    signature difference is inherent to the family: the caller
+    supplies the LABELED corpus (``vectors``), exactly as
+    ``retrain_ivf_index`` requires, because the stored sidecar carries
+    assignments, not labels — when no threshold trips, the frame is
+    never executed.
 
     - ``max_sim_drop``: ABSOLUTE drop in mean round-6 cosine to the
       assigned (frozen) centroid vs the build-time baseline — the
@@ -1289,63 +1238,29 @@ def maybe_retrain_ivf_index(
       as in the IVF-PQ policy (growth since train, hot-cell probe
       cost, logical deletes awaiting physical reclaim).
 
-    The whole probe-decide-retrain sequence runs UNDER the maintenance
-    lock — two concurrent policy runs cannot both trigger and promote
-    back-to-back generations out from under pinned readers; the
-    second re-probes the freshly retrained index and no-ops. Returns
+    The retrain options are keyword-only, so a misspelled one raises
+    ``TypeError`` up front, whether or not a threshold trips. Returns
     the staleness report plus ``{"retrained": bool, "reasons": [...],
     "retrain": <retrain result or None>}``."""
-    from sparktrends_spark.similarity.generations import maintenance_lock
+    from sparktrends_spark.similarity.generations import run_policy
 
-    # validate retrain options UP FRONT — a misspelled knob in a
-    # maintenance cron would otherwise silently fall back to defaults
-    # (and, when no threshold trips, never even be looked at)
-    lock_timeout_s = retrain_kwargs.pop("lock_timeout_s", 600.0)
-    label_col = retrain_kwargs.pop("label_col", "label")
-    cand_id = retrain_kwargs.pop("cand_id", "vec_id")
-    vec_col = retrain_kwargs.pop("vec_col", "embedding")
-    round_digits = retrain_kwargs.pop("round_digits", 6)
-    keep_generations = retrain_kwargs.pop("keep_generations", 2)
-    if retrain_kwargs:
-        raise TypeError(
-            "maybe_retrain_ivf_index: unknown retrain option(s) "
-            f"{sorted(retrain_kwargs)} — valid: lock_timeout_s,"
-            " label_col, cand_id, vec_col, round_digits,"
-            " keep_generations"
-        )
-    spark = vectors.sparkSession
-    with maintenance_lock(path, lock_timeout_s, operation="policy"):
-        st = ivf_index_staleness(spark, path)
-        reasons = []
-        if st["sim_drop"] is not None and st["sim_drop"] > max_sim_drop:
-            reasons.append(
-                f"sim_drop {st['sim_drop']:.4f} > {max_sim_drop}"
-            )
-        if st["size_ratio"] > max_size_ratio:
-            reasons.append(
-                f"size_ratio {st['size_ratio']:.2f} > {max_size_ratio}"
-            )
-        if st["cell_skew"] > max_cell_skew:
-            reasons.append(
-                f"cell_skew {st['cell_skew']:.2f} > {max_cell_skew}"
-            )
-        if st["tombstone_ratio"] > max_tombstone_ratio:
-            reasons.append(
-                f"tombstone_ratio {st['tombstone_ratio']:.2f} >"
-                f" {max_tombstone_ratio}"
-            )
-        out = dict(st)
-        out["retrained"] = bool(reasons)
-        out["reasons"] = reasons
-        out["retrain"] = (
-            _retrain_ivf_locked(
-                vectors, path, label_col, cand_id, vec_col,
-                round_digits, keep_generations,
-            )
-            if reasons
-            else None
-        )
-    return out
+    return run_policy(
+        path,
+        _IVF,
+        probe=lambda: ivf_index_staleness(vectors.sparkSession, path),
+        limits=(
+            ("sim_drop", max_sim_drop, ".4f"),
+            ("size_ratio", max_size_ratio, ".2f"),
+            ("cell_skew", max_cell_skew, ".2f"),
+            ("tombstone_ratio", max_tombstone_ratio, ".2f"),
+        ),
+        act=lambda: _retrain_ivf_locked(
+            vectors, path, label_col, cand_id, vec_col, round_digits,
+            keep_generations,
+        ),
+        action="retrain",
+        lock_timeout_s=lock_timeout_s,
+    )
 
 
 def compact_ivf_index(
@@ -1370,21 +1285,11 @@ def compact_ivf_index(
     are identical by construction. Returns ``{generation,
     previous_root, files_before, files_after, rows_before, rows_after,
     gc_removed}`` (counts for the vectors table). Implementation: the
-    shared ``generations.compact_cells`` parameterized with this
-    index's artifact layout — one compactor for both cell-partitioned
-    index families."""
+    shared ``generations.compact_cells`` given this index's layout."""
     from sparktrends_spark.similarity.generations import compact_cells
 
     out = compact_cells(
-        spark,
-        path,
-        small_artifacts=_IVF_SMALL_ARTIFACTS,
-        cell_artifacts=_IVF_CELL_ARTIFACTS,
-        flat_artifacts=_IVF_FLAT_ARTIFACTS,
-        n_cells_src="centroids",
-        files_per_cell=files_per_cell,
-        keep_generations=keep_generations,
-        lock_timeout_s=lock_timeout_s,
+        spark, path, _IVF, files_per_cell, keep_generations, lock_timeout_s
     )
     _ivf_handle(spark, path)  # warm: first serve hits
     return out

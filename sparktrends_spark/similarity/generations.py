@@ -1,7 +1,9 @@
-"""Generation-pointer layout for persisted ANN indexes — the
+"""Generation-pointer layout for the persisted indexes — the
 manifest-CAS discipline (sources/optimize.py) applied to index
-maintenance, shared by the IVF (similarity/cosine.py) and IVF-PQ
-(similarity/ivfpq_index.py) persisted indexes.
+maintenance, shared by every maintained layout: the IVF
+(similarity/cosine.py), IVF-PQ (similarity/ivfpq_index.py), BM25
+(text/bm25_index.py) and MinHash dedup (text/dedup_index.py) indexes
+and the training-shard export (text/shards.py).
 
 An index lives at ``path``. A freshly built index is FLAT: artifact
 directories (centroids/codes/vectors/...) sit directly under ``path``.
@@ -19,6 +21,12 @@ Writers (build / append / retrain / the retrain policy) serialize on
 ``maintenance_lock``; concurrent readers are always safe and never
 take it. Local-filesystem rename is the deployment seam — on an
 object store the pointer becomes a conditional-put manifest object.
+
+Each index family declares its artifact layout once (``IndexLayout``)
+and hands it to the maintenance lifecycle written here once: the
+tombstone delete (``delete_ids``), the staleness probe
+(``probe_cells``, ``live_tombstones``), the one-call policy
+(``run_policy``) and the cell compactor (``compact_cells``).
 """
 
 from __future__ import annotations
@@ -38,6 +46,56 @@ _GEN_RE = re.compile(r"^g(\d{6})$")
 # sentinel naming the legacy flat layout (artifacts directly under
 # ``path``) in promotion history and GC reports
 FLAT_ROOT = "<flat>"
+
+
+@dataclasses.dataclass(frozen=True)
+class IndexLayout:
+    """One index family's artifact layout, declared once and passed to
+    every lifecycle step (handle, delete, probe, policy, compact):
+    enumerating artifact names at call sites silently drops one from a
+    compacted generation, then GC reclaims the only copy.
+
+    ``small``: tiny artifacts a compaction copies verbatim. ``cells``:
+    corpus-sized artifacts partitioned on ``cell``, each led by the
+    stored id; the first is the counted one, and its presence is what
+    "an index exists here" means. ``ids``: the artifact with one row
+    per indexed item — it types the tombstones and is the denominator
+    of the tombstone ratio. ``n_cells_src``: the small artifact whose
+    row count is the cell count. Tombstones are not small: compaction
+    drops them (it removes the rows they name), but they belong to the
+    flat root, so GC and an overwrite-build reclaim them with it.
+    ``missing`` is the error text for a path with no index; ``name``
+    labels the lock holder."""
+
+    name: str
+    small: tuple[str, ...]
+    cells: tuple[str, ...]
+    ids: str
+    n_cells_src: str | None = None
+    tombstones: str = "tombstones"
+    missing: str = (
+        "no index at {root} ({root}/{artifact} missing) — nothing to"
+        " {action}"
+    )
+
+    @property
+    def flat(self) -> tuple[str, ...]:
+        return self.small + self.cells + (self.tombstones,)
+
+    def root(self, path: str, action: str) -> str:
+        """``path``'s CURRENT root, or a ValueError if no index is
+        there. Checked BEFORE a writer takes ``maintenance_lock``, whose
+        ``makedirs`` would otherwise leave a directory behind at a
+        mistyped path, and again under the lock."""
+        root = resolve_root(path)
+        if not os.path.isdir(os.path.join(root, self.cells[0])):
+            raise ValueError(
+                self.missing.format(
+                    root=root, path=path, artifact=self.cells[0],
+                    action=action,
+                )
+            )
+        return root
 
 
 @contextlib.contextmanager
@@ -194,60 +252,43 @@ def _write_current_doc(path: str, doc: dict) -> None:
 def compact_cells(
     spark,
     path: str,
-    *,
-    small_artifacts: tuple[str, ...],
-    cell_artifacts: tuple[str, ...],
-    flat_artifacts: tuple[str, ...],
-    n_cells_src: str,
+    layout: IndexLayout,
     files_per_cell: int = 1,
     keep_generations: int = 2,
     lock_timeout_s: float = 600.0,
-    tombstones_artifact: str = "tombstones",
 ) -> dict:
     """Shared segment-merge + takedown-reclaim compactor for the
-    cell-partitioned persisted indexes (IVF and IVF-PQ wrap this with
-    their artifact layouts — ONE implementation of the generation
-    dance, so a fix to the crash/GC/parallelism contract lands once):
-    copy the small artifacts (coalesce 1), rewrite each cell artifact
-    into at most ``files_per_cell`` files per cell minus tombstoned
-    rows — shuffled on (cell, id-hash split) into n_cells *
-    files_per_cell partitions, one task per target file, never a
-    coalesce funnel — into a NEW generation, atomically promote
-    CURRENT, GC by promotion history. A failure before promotion
-    rmtree's the partial generation dir (never orphan junk). The first
-    cell artifact is the counted/guarded table; ``n_cells_src`` is the
-    small artifact whose row count IS the cell count. Caller-visible
-    contract (lock, return dict) matches the former per-module
-    compactors exactly."""
-    with maintenance_lock(path, lock_timeout_s, operation="compact"):
+    cell-partitioned persisted indexes (IVF, IVF-PQ and BM25 pass their
+    ``layout`` — ONE implementation of the generation dance, so a fix
+    to the crash/GC/parallelism contract lands once): copy the small
+    artifacts (coalesce 1), rewrite each cell artifact into at most
+    ``files_per_cell`` files per cell minus tombstoned rows — shuffled
+    on (cell, id-hash split) into n_cells * files_per_cell partitions,
+    one task per target file, never a coalesce funnel — into a NEW
+    generation, atomically promote CURRENT, GC by promotion history. A
+    failure before promotion rmtree's the partial generation dir
+    (never orphan junk). Returns ``{generation, previous_root,
+    files_before, files_after, rows_before, rows_after, gc_removed}``
+    for the counted (first) cell artifact."""
+    layout.root(path, "compact")
+    with maintenance_lock(
+        path, lock_timeout_s, operation=f"{layout.name}-compact"
+    ):
         return compact_cells_locked(
-            spark,
-            path,
-            small_artifacts=small_artifacts,
-            cell_artifacts=cell_artifacts,
-            flat_artifacts=flat_artifacts,
-            n_cells_src=n_cells_src,
-            files_per_cell=files_per_cell,
-            keep_generations=keep_generations,
-            tombstones_artifact=tombstones_artifact,
+            spark, path, layout, files_per_cell, keep_generations
         )
 
 
 def compact_cells_locked(
     spark,
     path: str,
-    *,
-    small_artifacts: tuple[str, ...],
-    cell_artifacts: tuple[str, ...],
-    flat_artifacts: tuple[str, ...],
-    n_cells_src: str,
+    layout: IndexLayout,
     files_per_cell: int = 1,
     keep_generations: int = 2,
-    tombstones_artifact: str = "tombstones",
 ) -> dict:
     """The body of ``compact_cells`` for callers ALREADY holding the
-    maintenance lock (the one-call maybe_* policies, which probe and
-    decide under a single lock hold — the lock is not reentrant)."""
+    maintenance lock (the one-call policies, which probe and decide
+    under a single lock hold — the lock is not reentrant)."""
     from pyspark.sql import functions as F
 
     if files_per_cell < 1:
@@ -258,22 +299,17 @@ def compact_cells_locked(
             1 for r, _, fs in os.walk(d) for f in fs if f.endswith(".parquet")
         )
 
-    counted = cell_artifacts[0]
-    root = resolve_root(path)
-    if not os.path.isdir(f"{root}/{counted}"):
-        # bail BEFORE promoting: a CURRENT pointer to a generation
-        # that was never created bricks every later resolve
-        raise ValueError(
-            f"no index at {root} ({root}/{counted} missing) —"
-            " nothing to compact"
-        )
-    n_cells = spark.read.parquet(f"{root}/{n_cells_src}").count()
+    counted = layout.cells[0]
+    # bail BEFORE promoting: a CURRENT pointer to a generation that was
+    # never created bricks every later resolve
+    root = layout.root(path, "compact")
+    n_cells = spark.read.parquet(f"{root}/{layout.n_cells_src}").count()
     files_before = _nfiles(f"{root}/{counted}")
     rows_before = spark.read.parquet(f"{root}/{counted}").count()
     new_gen = next_generation(path)
     gen_root = os.path.join(path, new_gen)
     try:
-        for small in small_artifacts:
+        for small in layout.small:
             if os.path.isdir(f"{root}/{small}"):
                 spark.read.parquet(
                     f"{root}/{small}"
@@ -281,18 +317,16 @@ def compact_cells_locked(
                     f"{gen_root}/{small}"
                 )
         n_parts = max(1, int(n_cells) * files_per_cell)
-        for big in cell_artifacts:
+        for big in layout.cells:
             if os.path.isdir(f"{root}/{big}"):
                 df = spark.read.parquet(f"{root}/{big}")
                 id_c = df.columns[0]  # id column leads the layouts
-                tomb = read_tombstones(
-                    spark, root, id_c, tombstones_artifact
-                )
+                tomb = read_tombstones(spark, root, id_c, layout.tombstones)
                 if tomb is not None:
                     # physical reclaim: tombstoned rows never reach
                     # the new generation, whose tombstone set starts
                     # clean (the artifact is deliberately not
-                    # copied — it is not in small_artifacts)
+                    # copied — it is not a small artifact)
                     df = df.join(tomb, id_c, "left_anti")
                 split = F.pmod(F.hash(F.col(id_c)), files_per_cell)
                 df.withColumn("_fsplit", split).repartition(
@@ -306,8 +340,8 @@ def compact_cells_locked(
         shutil.rmtree(gen_root, ignore_errors=True)
         raise
     write_current(path, new_gen)
-    removed = gc_generations(path, flat_artifacts, keep_generations)
-    for sub in flat_artifacts:
+    removed = gc_generations(path, layout.flat, keep_generations)
+    for sub in layout.flat:
         spark.catalog.refreshByPath(os.path.join(gen_root, sub))
     return {
         "generation": new_gen,
@@ -538,8 +572,8 @@ def read_tombstones(
 ):
     """Distinct tombstoned ids recorded on a generation root, or None
     if the root has none — the shared read half of the takedown
-    discipline (IVF / IVF-PQ / dedup indexes all use it, so a
-    semantics fix lands once). Tombstone volume is bounded by takedown
+    discipline (every index family uses it, so a semantics fix lands
+    once). Tombstone volume is bounded by takedown
     traffic, orders of magnitude below corpus size. ``id_type`` (the
     stored id's Spark type, which ``write_tombstones`` casts to) pins
     the read schema, so the scan starts no schema-inference job."""
@@ -560,8 +594,8 @@ class IndexHandle:
     """What one generation of a persisted index never changes, resolved
     once and shared by every request against it (``index_handle``):
     the stored schemas each artifact is scanned with, and ``extra``, the
-    family's small state (the IVF centroid literal, BM25's bucket
-    count). Tombstones and file listings are NOT held: appends and
+    family's small state (the IVF centroid literal, the IVF-PQ coarse
+    centroids and codebooks, BM25's bucket count). Tombstones and file listings are NOT held: appends and
     deletes change them within a generation, so every scan lists and
     every tombstone read runs fresh."""
 
@@ -676,8 +710,8 @@ def write_tombstones(
     recorded type is what downstream joins and hashes must see).
     Returns the distinct size of the tombstone SET after the write
     (ids never present in the index still count here — intersection
-    against live rows is the staleness probe's job). Caller holds the
-    maintenance lock."""
+    against live rows is the staleness probe's job). Called only by
+    ``delete_ids``, under the maintenance lock."""
     from pyspark.sql import DataFrame as _DF
     from pyspark.sql import functions as F
 
@@ -694,6 +728,32 @@ def write_tombstones(
     tdf.distinct().coalesce(1).write.mode("append").parquet(d)
     spark.catalog.refreshByPath(d)
     return int(read_tombstones(spark, root, id_col, artifact).count())
+
+
+def delete_ids(
+    spark,
+    path: str,
+    ids,
+    id_col: str,
+    layout: IndexLayout,
+    lock_timeout_s: float = 600.0,
+) -> dict:
+    """The one tombstone delete every index family runs: record ``ids``
+    as tombstones of the CURRENT root (O(|ids|) — the stored index is
+    read only for its id type). The index must exist BEFORE the lock is
+    taken; under the lock the root is re-resolved, so a promotion
+    between the check and the lock cannot land the tombstones on a
+    superseded root that its GC would then reclaim. Returns ``{root,
+    n_tombstones}`` (the distinct size of the tombstone SET)."""
+    layout.root(path, "delete from")
+    with maintenance_lock(
+        path, lock_timeout_s, operation=f"{layout.name}-delete"
+    ):
+        root = layout.root(path, "delete from")
+        n = write_tombstones(
+            spark, root, ids, id_col, layout.ids, layout.tombstones
+        )
+    return {"root": root, "n_tombstones": n}
 
 
 def check_payload_names(
@@ -836,11 +896,9 @@ def require_payloads(batch_cols, payloads, root: str, table: str) -> None:
 def staleness_counts(
     meta: dict[int, tuple[int, float]], now: dict[int, int]
 ) -> dict:
-    """Shared counts arithmetic for the index staleness probes
-    (ivfpq_index_staleness / ivf_index_staleness): per-cell growth vs
-    the build-time baseline ``meta`` (cell -> (n_at_train, stat)) and
-    current sizes ``now`` (cell -> n). One implementation so the two
-    probes cannot drift on the clamp/denominator conventions."""
+    """Counts arithmetic of the staleness probe (``probe_cells``):
+    per-cell growth vs the build-time baseline ``meta`` (cell ->
+    (n_at_train, stat)) and current sizes ``now`` (cell -> n)."""
     n_train = sum(n for n, _ in meta.values())
     n_now = sum(now.values())
     growth = {
@@ -861,3 +919,114 @@ def weighted_baseline(meta: dict[int, tuple[int, float]]) -> float:
     build-time quantization error / centroid similarity)."""
     n_train = sum(n for n, _ in meta.values())
     return sum(n * s for n, s in meta.values()) / max(n_train, 1)
+
+
+def live_tombstones(
+    spark, root: str, layout: IndexLayout, id_col: str
+) -> tuple[int, int]:
+    """(rows of the ``layout.ids`` artifact, tombstoned ids among them)
+    — the live-tombstone half of every staleness probe. Only
+    tombstones that HIT a stored ``id_col`` value count (a semi-join):
+    an org-wide purge list must not inflate this index's ratio into
+    pointless reclaims."""
+    ids = spark.read.parquet(os.path.join(root, layout.ids))
+    tomb = read_tombstones(spark, root, id_col, layout.tombstones)
+    n_tomb = (
+        int(tomb.join(ids.select(id_col), id_col, "left_semi").count())
+        if tomb is not None
+        else 0
+    )
+    return int(ids.count()), n_tomb
+
+
+@dataclasses.dataclass(frozen=True)
+class CellProbe:
+    """What ``probe_cells`` read: the shared report, plus the root, the
+    ``meta`` baseline (cell -> (n, stat)), the current per-cell counts
+    and the id row count a family needs for its own signal."""
+
+    report: dict
+    root: str
+    meta: dict
+    now: dict
+    n_ids: int
+
+
+def probe_cells(
+    spark, path: str, layout: IndexLayout, stat: str | None
+) -> CellProbe:
+    """The staleness probe of the cell-partitioned families (IVF,
+    IVF-PQ, BM25): reads the build-time ``meta`` baseline (per-cell row
+    count and the family's ``stat`` column), counts rows per cell of
+    the counted artifact and the live tombstones, and reports
+    ``{generation, n_train, n_now, size_ratio, max_cell_growth,
+    cell_skew, n_tombstones, tombstone_ratio}``. Each family adds its
+    own signal on top. Read-only; never locks."""
+    from pyspark.sql import functions as F
+
+    root = layout.root(path, "probe")
+    meta_dir = os.path.join(root, "meta")
+    if not os.path.isdir(meta_dir):
+        raise ValueError(
+            f"no staleness baseline at {meta_dir} — rebuild or retrain"
+            " to create one"
+        )
+    meta = {
+        int(r["cell"]): (int(r["n"]), float(r[stat]) if stat else 0.0)
+        for r in spark.read.parquet(meta_dir).collect()  # n_cells rows
+    }
+    now = {
+        int(r["cell"]): int(r["n"])
+        for r in spark.read.parquet(os.path.join(root, layout.cells[0]))
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()  # n_cells rows
+    }
+    # the id column leads every stored layout
+    id_col = spark.read.parquet(os.path.join(root, layout.ids)).columns[0]
+    n_ids, n_tomb = live_tombstones(spark, root, layout, id_col)
+    report = {
+        "generation": read_current(path) or "",
+        **staleness_counts(meta, now),
+        "n_tombstones": n_tomb,
+        "tombstone_ratio": n_tomb / max(n_ids, 1),
+    }
+    return CellProbe(report, root, meta, now, n_ids)
+
+
+def run_policy(
+    path: str,
+    layout: IndexLayout,
+    probe,
+    limits,
+    act,
+    action: str,
+    lock_timeout_s: float,
+) -> dict:
+    """The one-call maintenance policy every family runs: probe ->
+    limits -> reasons -> act, all under ONE lock hold, so two
+    concurrent runs cannot both trip and promote back-to-back
+    generations out from under pinned readers (the second re-probes
+    the fresh generation and no-ops). The index must exist before the
+    lock is taken.
+
+    ``probe()`` returns the report; ``limits`` is a sequence of
+    ``(metric, limit, fmt)`` — a metric above its limit adds the reason
+    ``"<metric> <value:fmt> > <limit>"`` (a None metric never trips);
+    ``act()`` is the family's locked action, run only when a reason
+    was found. Returns the report plus ``{"<action>ed": bool,
+    "reasons": [...], "<action>": <act() result or None>}``."""
+    layout.root(path, "probe")
+    with maintenance_lock(
+        path, lock_timeout_s, operation=f"{layout.name}-policy"
+    ):
+        out = dict(probe())
+        reasons = [
+            f"{metric} {out[metric]:{fmt}} > {limit}"
+            for metric, limit, fmt in limits
+            if out[metric] is not None and out[metric] > limit
+        ]
+        out[f"{action}ed"] = bool(reasons)
+        out["reasons"] = reasons
+        out[action] = act() if reasons else None
+    return out

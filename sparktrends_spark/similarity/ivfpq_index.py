@@ -85,29 +85,25 @@ from sparktrends_spark.operators.pq import (
 )
 from sparktrends_spark.caching import persist_tracked
 from sparktrends_spark.similarity.generations import (
+    IndexLayout,
+    apply_where,
     gc_generations,
+    index_handle,
     maintenance_lock,
     next_generation,
-    read_current as _read_current,
     reset_generations,
-    resolve_root as resolve_index_root,
+    resolve_root as resolve_index_root,  # noqa: F401 (public name)
     write_current as _write_current,
     write_driver_rows,
 )
 
-# single source of truth for the index layout: tiny driver-written
-# artifacts vs corpus-sized cell-partitioned ones. Compaction, GC, and
-# refresh all derive from these — adding an artifact in one place only
-# would silently drop it from a compacted generation (then GC the only
-# copy), so never enumerate the names anywhere else. Tombstones are
-# deliberately NOT a small artifact: compaction copies small artifacts
-# verbatim but must DROP tombstones (it physically removes the rows
-# they name); they still belong to _FLAT_ARTIFACTS so root GC and
-# overwrite-build reset reclaim them with their root.
-_SMALL_ARTIFACTS = ("coarse", "books", "meta")
-_CELL_ARTIFACTS = ("codes", "vectors")
-_TOMBSTONES = "tombstones"
-_FLAT_ARTIFACTS = _SMALL_ARTIFACTS + _CELL_ARTIFACTS + (_TOMBSTONES,)
+_IVFPQ = IndexLayout(
+    name="ivfpq",
+    small=("coarse", "books", "meta"),
+    cells=("codes", "vectors"),
+    ids="codes",
+    n_cells_src="coarse",
+)
 
 
 def _cent_array(cents: dict[int, list[float]]) -> F.Column:
@@ -204,11 +200,12 @@ def build_ivfpq_index(
     class the lock exists for. (Retrain's internal build targets the
     fresh generation directory, whose lock is distinct from the index
     root's — no self-deadlock.)"""
-    with maintenance_lock(path, lock_timeout_s, operation="build"):
+    with maintenance_lock(path, lock_timeout_s, operation="ivfpq-build"):
         _build_ivfpq_locked(
             vectors, path, dim, n_cells, m, k_codes, iterations,
             id_col, vec_col, store_vectors, coarse, payload_cols,
         )
+        _ivfpq_handle(vectors.sparkSession, path)  # warm: first serve hits
 
 
 def _check_payload_names(payload_cols, id_col, m) -> None:
@@ -325,9 +322,10 @@ def _build_ivfpq_locked(
     # same reasoning for a prior build's tombstones: an overwrite-build
     # defines a FRESH corpus — stale tombstones would silently suppress
     # ids that legitimately exist in the new index
-    if os.path.isdir(f"{path}/{_TOMBSTONES}"):
-        shutil.rmtree(f"{path}/{_TOMBSTONES}")
-        spark.catalog.refreshByPath(f"{path}/{_TOMBSTONES}")
+    tombs = f"{path}/{_IVFPQ.tombstones}"
+    if os.path.isdir(tombs):
+        shutil.rmtree(tombs)
+        spark.catalog.refreshByPath(tombs)
 
 
 def _encode(
@@ -356,40 +354,51 @@ def _encode(
     )
 
 
-def _stored_payload_cols(spark, root: str, id_col: str, m: int) -> tuple[str, ...]:
+def _quantizers(root: str):
+    """A generation's coarse centroids and PQ codebooks, read on the
+    driver by pyarrow (no Spark job) — the float64 values a Spark read
+    returns."""
+    import pyarrow.parquet as pq
+
+    coarse = pq.read_table(f"{root}/coarse").to_pydict()
+    cents = {int(c): v for c, v in zip(coarse["cell"], coarse["cvec"])}
+    books: Codebooks = {}
+    t = pq.read_table(f"{root}/books").to_pydict()
+    for s, c, v in zip(t["s"], t["code"], t["cvec"]):
+        books.setdefault(int(s), {})[int(c)] = v
+    return cents, books
+
+
+def _load_ivfpq(spark, root: str):
+    """What an IVF-PQ generation never changes: the stored codes (and
+    vectors sidecar) schemas — one inference job each, paid here
+    instead of per request — and the quantizers."""
+    _IVFPQ.root(root, "serve")
+    schemas = {
+        a: spark.read.parquet(f"{root}/{a}").schema
+        for a in _IVFPQ.cells
+        if os.path.isdir(f"{root}/{a}")
+    }
+    cents, books = _quantizers(root)
+    return schemas, {"cents": cents, "books": books}
+
+
+def _ivfpq_handle(spark, path: str):
+    return index_handle(spark, path, _IVFPQ.small, _load_ivfpq)
+
+
+def _ivfpq_payloads(h, id_col: str) -> tuple[str, ...]:
     """Payload columns of the stored code table: everything beyond the
-    layout's own (id, cell, code_*) — via the shared schema-derived
-    helper (generations.stored_payload_cols), so appends and retrains
-    need no caller-supplied repeat of the build's ``payload_cols``
-    (and cannot drift from it)."""
+    layout's own (id, cell, code_*) — schema-derived, so appends and
+    retrains need no caller-supplied repeat of the build's
+    ``payload_cols`` (and cannot drift from it)."""
     from sparktrends_spark.similarity.generations import (
         stored_payload_cols,
     )
 
+    m = len(h.extra["books"])
     layout = {id_col, "cell"} | {f"code_{s}" for s in range(m)}
-    return stored_payload_cols(
-        spark.read.parquet(f"{root}/codes").schema, layout
-    )
-
-
-def _load_books(spark, path: str) -> Codebooks:
-    books: Codebooks = {}
-    for r in spark.read.parquet(f"{path}/books").collect():  # m*k rows
-        books.setdefault(int(r["s"]), {})[int(r["code"])] = list(r["cvec"])
-    return books
-
-
-def _load_coarse(spark, path: str) -> dict[int, list[float]]:
-    return {
-        int(r["cell"]): list(r["cvec"])
-        for r in spark.read.parquet(f"{path}/coarse").collect()  # n_cells
-    }
-
-
-def _tombstones(spark, root: str, id_col: str) -> DataFrame | None:
-    from sparktrends_spark.similarity.generations import read_tombstones
-
-    return read_tombstones(spark, root, id_col, _TOMBSTONES)
+    return stored_payload_cols(h.schemas["codes"], layout)
 
 
 def delete_from_ivfpq_index(
@@ -423,20 +432,9 @@ def delete_from_ivfpq_index(
     TOMBSTONE SET after the write (ids absent from the index still
     count here; the staleness probe reports the live-row intersection
     separately)."""
-    from sparktrends_spark.similarity.generations import write_tombstones
+    from sparktrends_spark.similarity.generations import delete_ids
 
-    with maintenance_lock(path, lock_timeout_s, operation="delete"):
-        root = resolve_index_root(path)
-        if not os.path.isdir(f"{root}/codes"):
-            raise ValueError(
-                f"no index at {root} ({root}/codes missing) — nothing"
-                " to delete from"
-            )
-        n = write_tombstones(
-            spark, root, ids, id_col, schema_src="codes",
-            artifact=_TOMBSTONES,
-        )
-    return {"root": root, "n_tombstones": n}
+    return delete_ids(spark, path, ids, id_col, _IVFPQ, lock_timeout_s)
 
 
 def append_ivfpq_index(
@@ -464,23 +462,20 @@ def append_ivfpq_index(
     present on the batch — a batch missing them would land NULL
     payloads that silently drop out of every filtered serve, so the
     mismatch raises instead."""
-    spark = new_vectors.sparkSession
-    with maintenance_lock(path, lock_timeout_s, operation="append"):
-        root = resolve_index_root(path)
-        cents = _load_coarse(spark, root)
-        books = _load_books(spark, root)
-        payloads = _stored_payload_cols(spark, root, id_col, len(books))
-        from sparktrends_spark.similarity.generations import (
-            require_payloads,
-        )
+    from sparktrends_spark.similarity.generations import require_payloads
 
+    spark = new_vectors.sparkSession
+    with maintenance_lock(path, lock_timeout_s, operation="ivfpq-append"):
+        h = _ivfpq_handle(spark, path)
+        root, cents, books = h.root, h.extra["cents"], h.extra["books"]
+        payloads = _ivfpq_payloads(h, id_col)
         require_payloads(new_vectors.columns, payloads, root, "codes")
         emb = new_vectors.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("_v"),
             *payloads,
         )
-        tomb = _tombstones(spark, root, id_col)
+        tomb = h.tombstones(spark, id_col, "codes")
         if tomb is not None:
             # a batch re-inserting a tombstoned id would land rows the
             # serve anti-join silently hides forever — refuse loudly;
@@ -501,7 +496,7 @@ def append_ivfpq_index(
             "append"
         ).partitionBy("cell").parquet(f"{root}/codes")
         spark.catalog.refreshByPath(f"{root}/codes")
-        if os.path.isdir(f"{root}/vectors"):
+        if "vectors" in h.schemas:
             # built with the refinement sidecar: keep it complete
             asg.select(
                 id_col, "cell", F.col("_v").alias("_cv"), *payloads
@@ -568,11 +563,16 @@ def ivfpq_index_topk(
 
     # pin ONE generation for the whole serve: a retrain promoting a
     # new CURRENT mid-query cannot mix quantizer generations (the old
-    # generation's directories are retained until GC)
-    root = resolve_index_root(path)
-    cents = _load_coarse(spark, root)
-    books = _load_books(spark, root)
+    # generation's directories are retained until GC). The handle
+    # holds its quantizers and schemas, filled at build.
+    h = _ivfpq_handle(spark, path)
+    cents, books = h.extra["cents"], h.extra["books"]
     m = len(books)
+    if refine_k is not None and "vectors" not in h.schemas:
+        raise ValueError(
+            f"refine_k requires the vectors sidecar ({h.root}/vectors"
+            " missing) — build with store_vectors=True"
+        )
 
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("_qv")
@@ -582,7 +582,7 @@ def ivfpq_index_topk(
     # made every serve pay seconds of plan analysis (see
     # kmeans.cent_struct_array)
     probe_structs = dist_struct_array(F.col("_qv"), cents)
-    tomb = _tombstones(spark, root, id_col)
+    tomb = h.tombstones(spark, id_col, "codes")
     if min_candidates is None:
         probes = q.select(
             query_id_col,
@@ -592,16 +592,12 @@ def ivfpq_index_topk(
             ).alias("_p"),
         ).select(query_id_col, "_qv", F.col("_p.c").alias("cell"))
     else:
-        from sparktrends_spark.similarity.generations import (
-            apply_where,
-            escalate_probes,
-        )
+        from sparktrends_spark.similarity.generations import escalate_probes
 
-        cand = spark.read.parquet(f"{root}/codes")
+        cand = h.scan(spark, "codes")
         if where is not None:
             cand = apply_where(
-                cand, where, root,
-                _stored_payload_cols(spark, root, id_col, m),
+                cand, where, h.root, _ivfpq_payloads(h, id_col)
             )
         if tomb is not None:
             cand = cand.join(tomb, id_col, "left_anti")
@@ -629,17 +625,13 @@ def ivfpq_index_topk(
     cells = sorted(
         r["cell"] for r in probes.select("cell").distinct().collect()
     )  # bounded: <= |queries| * nprobe (adaptive: * n_cells)
-    codes = spark.read.parquet(f"{root}/codes").filter(
+    codes = h.scan(spark, "codes").filter(
         F.col("cell").isin([int(c) for c in cells])
     )
     if where is not None:
         # loud serve-side guard: an unresolvable predicate names the
         # stored payloads instead of an opaque AnalysisException
-        from sparktrends_spark.similarity.generations import apply_where
-
-        codes = apply_where(
-            codes, where, root, _stored_payload_cols(spark, root, id_col, m)
-        )
+        codes = apply_where(codes, where, h.root, _ivfpq_payloads(h, id_col))
     if tomb is not None:
         # logical deletes: tombstoned ids leave the candidate set
         # BEFORE scoring (and before the refine shortlist), so a
@@ -680,7 +672,7 @@ def ivfpq_index_topk(
         .where(F.col("_rn") <= refine_k)
         .select(query_id_col, id_col)
     )
-    vecs = spark.read.parquet(f"{root}/vectors").filter(
+    vecs = h.scan(spark, "vectors").filter(
         F.col("cell").isin([int(c) for c in cells])
     ).select(id_col, "_cv")
     # exact round-6 L2, identical fold shape to the brute-force ground
@@ -748,56 +740,18 @@ def ivfpq_index_staleness(
     max_cell_growth, cell_skew, err_train, err_now, err_growth,
     n_tombstones, tombstone_ratio, cells}`` (err_* None when not
     checked)."""
-    root = resolve_index_root(path)
-    if not os.path.isdir(f"{root}/meta"):
-        raise ValueError(
-            f"no staleness baseline at {root}/meta — the index predates"
-            " the meta artifact; rebuild or retrain to create one"
-        )
-    meta = {
-        int(r["cell"]): (int(r["n"]), float(r["mean_err"]))
-        for r in spark.read.parquet(f"{root}/meta").collect()  # n_cells
-    }
-    now = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(f"{root}/codes")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # n_cells rows
-    }
     from sparktrends_spark.similarity.generations import (
-        staleness_counts,
+        probe_cells,
         weighted_baseline,
     )
 
-    # id column leads the codes layout (the compact convention) — the
-    # tombstone artifact is keyed by it. Count only tombstones that
-    # actually HIT the index (semi-join against stored ids): the codes
-    # table is being scanned for the per-cell counts above anyway, and
-    # set-size counting would let an org-wide purge list trip
-    # max_tombstone_ratio on a shard holding none of those ids.
-    codes_id = spark.read.parquet(f"{root}/codes").columns[0]
-    tomb = _tombstones(spark, root, codes_id)
-    n_tomb = (
-        int(
-            tomb.join(
-                spark.read.parquet(f"{root}/codes").select(codes_id),
-                codes_id,
-                "left_semi",
-            ).count()
-        )
-        if tomb is not None
-        else 0
-    )
-    counts = staleness_counts(meta, now)
+    p = probe_cells(spark, path, _IVFPQ, stat="mean_err")
+    root, meta, now = p.root, p.meta, p.now
     out = {
-        "generation": _read_current(path) or "",
-        **counts,
+        **p.report,
         "err_train": None,
         "err_now": None,
         "err_growth": None,
-        "n_tombstones": n_tomb,
-        "tombstone_ratio": n_tomb / max(counts["n_now"], 1),
         "cells": {
             c: {
                 "n_train": meta.get(c, (0, None))[0],
@@ -821,8 +775,7 @@ def ivfpq_index_staleness(
 
         warnings.warn(msg, UserWarning, stacklevel=2)
     if check_error and os.path.isdir(f"{root}/vectors"):
-        cents = _load_coarse(spark, root)
-        books = _load_books(spark, root)
+        cents, books = _quantizers(root)
         dim = len(next(iter(cents.values())))
         resid = (
             spark.read.parquet(f"{root}/vectors")
@@ -878,7 +831,8 @@ def retrain_ivfpq_index(
     contains no trace of them and carries no tombstones artifact.
     Returns ``{generation, previous_root, n_vectors, n_cells, m,
     k_codes, gc_removed}``."""
-    with maintenance_lock(path, lock_timeout_s, operation="retrain"):
+    _IVFPQ.root(path, "retrain")
+    with maintenance_lock(path, lock_timeout_s, operation="ivfpq-retrain"):
         return _retrain_ivfpq_locked(
             spark, path, dim, iterations, n_cells, m, k_codes,
             keep_generations, id_col,
@@ -889,29 +843,31 @@ def _retrain_ivfpq_locked(
     spark, path, dim, iterations, n_cells, m, k_codes,
     keep_generations, id_col,
 ) -> dict:
-    root = resolve_index_root(path)
-    if not os.path.isdir(f"{root}/vectors"):
+    from sparktrends_spark.similarity.generations import (
+        stored_payload_cols,
+    )
+
+    h = _ivfpq_handle(spark, path)
+    root = h.root
+    if "vectors" not in h.schemas:
         raise ValueError(
             "retrain_ivfpq_index requires the vectors sidecar "
             f"({root}/vectors missing) — build with store_vectors=True"
         )
-    old_coarse = _load_coarse(spark, root)
-    old_books = _load_books(spark, root)
-    n_cells = n_cells or len(old_coarse)
+    old_books = h.extra["books"]
+    n_cells = n_cells or len(h.extra["cents"])
     m = m or len(old_books)
     k_codes = k_codes or len(old_books[0])
 
     # payloads ride the sidecar (build writes them there exactly so a
     # retrain can re-encode them into the next generation)
-    payloads = tuple(
-        c
-        for c in spark.read.parquet(f"{root}/vectors").columns
-        if c not in (id_col, "cell", "_cv")
+    payloads = stored_payload_cols(
+        h.schemas["vectors"], {id_col, "cell", "_cv"}
     )
-    corpus = spark.read.parquet(f"{root}/vectors").select(
+    corpus = h.scan(spark, "vectors").select(
         F.col(id_col), F.col("_cv").alias("embedding"), *payloads
     )
-    tomb = _tombstones(spark, root, id_col)
+    tomb = h.tombstones(spark, id_col, "codes")
     if tomb is not None:
         # physical reclaim of logical deletes: the retrain corpus is
         # the live rows only, so the new generation contains no trace
@@ -920,17 +876,10 @@ def _retrain_ivfpq_locked(
     n_vectors = corpus.count()
     new_gen = next_generation(path)
     try:
-        build_ivfpq_index(
-            corpus,
-            os.path.join(path, new_gen),
-            dim=dim,
-            n_cells=n_cells,
-            m=m,
-            k_codes=k_codes,
-            iterations=iterations,
-            id_col=id_col,
-            store_vectors=True,
-            payload_cols=payloads,
+        # the lock on ``path`` covers the fresh generation directory
+        _build_ivfpq_locked(
+            corpus, os.path.join(path, new_gen), dim, n_cells, m, k_codes,
+            iterations, id_col, "embedding", True, None, payloads,
         )
     except BaseException:
         # a crashed/failed generation build must not leave a partial
@@ -944,9 +893,10 @@ def _retrain_ivfpq_locked(
     # flat layout counts as the oldest root); everything older is
     # reclaimed — readers pinned to a reclaimed generation would fail
     # loudly on scan, never read wrong data.
-    removed = gc_generations(path, _FLAT_ARTIFACTS, keep_generations)
-    for sub in _FLAT_ARTIFACTS:
+    removed = gc_generations(path, _IVFPQ.flat, keep_generations)
+    for sub in _IVFPQ.flat:
         spark.catalog.refreshByPath(os.path.join(path, new_gen, sub))
+    _ivfpq_handle(spark, path)  # warm: first serve hits
     return {
         "generation": new_gen,
         "previous_root": root,
@@ -966,11 +916,19 @@ def maybe_retrain_ivfpq_index(
     max_size_ratio: float = 2.0,
     max_cell_skew: float = 4.0,
     max_tombstone_ratio: float = 0.25,
-    **retrain_kwargs,
+    *,
+    lock_timeout_s: float = 600.0,
+    iterations: int = 3,
+    n_cells: int | None = None,
+    m: int | None = None,
+    k_codes: int | None = None,
+    keep_generations: int = 2,
+    id_col: str = "vec_id",
 ) -> dict:
     """The maintenance POLICY in one call — probe, compare against
     thresholds, retrain only if stale (the cron-job body a deployment
-    schedules, mirroring auto-OPTIMIZE policies on table formats):
+    schedules, mirroring auto-OPTIMIZE policies on table formats; the
+    shared ``generations.run_policy``):
 
     - ``max_err_growth``: quantization error under the frozen
       quantizers vs the build-time baseline (the direct recall-decay
@@ -983,62 +941,30 @@ def maybe_retrain_ivfpq_index(
       — tombstoned rows still cost probe scan time until a retrain (or
       compact) physically reclaims them.
 
-    Returns the staleness report plus ``{"retrained": bool,
-    "reasons": [...], "retrain": <retrain result or None>}``. The
-    whole probe-decide-retrain sequence runs UNDER the maintenance
-    lock: two concurrent policy runs probing the same stale index
-    before either retrains would otherwise both trigger, promoting two
-    back-to-back generations and GC'ing the root in-flight readers
-    were promised (the retained previous generation) — the second run
-    now re-probes the freshly retrained index and no-ops."""
-    # validate retrain options UP FRONT — a misspelled knob in a
-    # maintenance cron would otherwise silently fall back to defaults
-    # (and, when no threshold trips, never even be looked at)
-    lock_timeout_s = retrain_kwargs.pop("lock_timeout_s", 600.0)
-    iterations = retrain_kwargs.pop("iterations", 3)
-    n_cells = retrain_kwargs.pop("n_cells", None)
-    m = retrain_kwargs.pop("m", None)
-    k_codes = retrain_kwargs.pop("k_codes", None)
-    keep_generations = retrain_kwargs.pop("keep_generations", 2)
-    id_col = retrain_kwargs.pop("id_col", "vec_id")
-    if retrain_kwargs:
-        raise TypeError(
-            "maybe_retrain_ivfpq_index: unknown retrain option(s) "
-            f"{sorted(retrain_kwargs)} — valid: lock_timeout_s,"
-            " iterations, n_cells, m, k_codes, keep_generations, id_col"
-        )
-    with maintenance_lock(path, lock_timeout_s, operation="policy"):
-        st = ivfpq_index_staleness(spark, path)
-        reasons = []
-        if st["err_growth"] is not None and st["err_growth"] > max_err_growth:
-            reasons.append(
-                f"err_growth {st['err_growth']:.2f} > {max_err_growth}"
-            )
-        if st["size_ratio"] > max_size_ratio:
-            reasons.append(
-                f"size_ratio {st['size_ratio']:.2f} > {max_size_ratio}"
-            )
-        if st["cell_skew"] > max_cell_skew:
-            reasons.append(
-                f"cell_skew {st['cell_skew']:.2f} > {max_cell_skew}"
-            )
-        if st["tombstone_ratio"] > max_tombstone_ratio:
-            reasons.append(
-                f"tombstone_ratio {st['tombstone_ratio']:.2f} >"
-                f" {max_tombstone_ratio}"
-            )
-        out = dict(st)
-        out["retrained"] = bool(reasons)
-        out["reasons"] = reasons
-        out["retrain"] = (
-            _retrain_ivfpq_locked(
-                spark, path, dim, iterations, n_cells, m, k_codes,
-                keep_generations, id_col,
-            )
-            if reasons
-            else None
-        )
-    return out
+    The retrain options are keyword-only, so a misspelled one raises
+    ``TypeError`` up front, whether or not a threshold trips. Returns
+    the staleness report plus ``{"retrained": bool, "reasons": [...],
+    "retrain": <retrain result or None>}``. The whole
+    probe-decide-retrain sequence runs under ONE lock hold."""
+    from sparktrends_spark.similarity.generations import run_policy
+
+    return run_policy(
+        path,
+        _IVFPQ,
+        probe=lambda: ivfpq_index_staleness(spark, path),
+        limits=(
+            ("err_growth", max_err_growth, ".2f"),
+            ("size_ratio", max_size_ratio, ".2f"),
+            ("cell_skew", max_cell_skew, ".2f"),
+            ("tombstone_ratio", max_tombstone_ratio, ".2f"),
+        ),
+        act=lambda: _retrain_ivfpq_locked(
+            spark, path, dim, iterations, n_cells, m, k_codes,
+            keep_generations, id_col,
+        ),
+        action="retrain",
+        lock_timeout_s=lock_timeout_s,
+    )
 
 
 def compact_ivfpq_index(
@@ -1076,19 +1002,12 @@ def compact_ivfpq_index(
     rows_before, rows_after, gc_removed}`` (file/row counts for the
     codes table; rows_before - rows_after = tombstoned rows
     reclaimed). Implementation: the shared ``generations.
-    compact_cells`` parameterized with this index's artifact layout —
-    one compactor for both cell-partitioned index families."""
+    compact_cells`` given this index's layout."""
     from sparktrends_spark.similarity.generations import compact_cells
 
-    return compact_cells(
-        spark,
-        path,
-        small_artifacts=_SMALL_ARTIFACTS,
-        cell_artifacts=_CELL_ARTIFACTS,
-        flat_artifacts=_FLAT_ARTIFACTS,
-        n_cells_src="coarse",
-        files_per_cell=files_per_cell,
-        keep_generations=keep_generations,
-        lock_timeout_s=lock_timeout_s,
-        tombstones_artifact=_TOMBSTONES,
+    out = compact_cells(
+        spark, path, _IVFPQ, files_per_cell, keep_generations,
+        lock_timeout_s,
     )
+    _ivfpq_handle(spark, path)  # warm: first serve hits
+    return out

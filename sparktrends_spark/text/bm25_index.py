@@ -57,13 +57,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparktrends_spark.similarity.generations import (
+    IndexLayout,
     compact_cells,
+    compact_cells_locked,
+    delete_ids,
     index_handle,
     maintenance_lock,
-    read_tombstones,
+    probe_cells,
     reset_generations,
-    resolve_root,
-    write_tombstones,
+    run_policy,
 )
 from sparktrends_spark.text.analysis import tokens
 
@@ -71,9 +73,18 @@ _POSTINGS = "postings"
 _DOCLENS = "doclens"
 _META = "meta"
 _TOMBSTONES = "tombstones"
-_SMALL_ARTIFACTS = (_META,)
-_CELL_ARTIFACTS = (_POSTINGS, _DOCLENS)
-_FLAT_ARTIFACTS = _SMALL_ARTIFACTS + _CELL_ARTIFACTS + (_TOMBSTONES,)
+_BM25 = IndexLayout(
+    name="bm25",
+    small=(_META,),
+    cells=(_POSTINGS, _DOCLENS),
+    ids=_DOCLENS,
+    n_cells_src=_META,
+    tombstones=_TOMBSTONES,
+    missing=(
+        "no BM25 index at {root} ({root}/{artifact} missing) — run"
+        " build_bm25_index first"
+    ),
+)
 
 # canonical BM25 constants — must match plans/text.q_doc_bm25_terms
 # and the hybrid row's lexical chain, or the oracle restatements drift
@@ -142,15 +153,15 @@ def _load_bm25(spark, root: str):
     driver by pyarrow (no job)."""
     import pyarrow.parquet as pq
 
-    _require_index(root)
+    _BM25.root(root, "serve")
     schemas = {
-        a: spark.read.parquet(f"{root}/{a}").schema for a in _CELL_ARTIFACTS
+        a: spark.read.parquet(f"{root}/{a}").schema for a in _BM25.cells
     }
     return schemas, {"n_buckets": pq.read_table(f"{root}/{_META}").num_rows}
 
 
 def _bm25_handle(spark, path: str):
-    return index_handle(spark, path, _SMALL_ARTIFACTS, _load_bm25)
+    return index_handle(spark, path, _BM25.small, _load_bm25)
 
 
 def _bm25_stored_id(handle) -> str:
@@ -238,14 +249,6 @@ def build_bm25_index(
         _bm25_handle(spark, path)  # warm: first serve hits
 
 
-def _require_index(root: str) -> None:
-    if not os.path.isdir(f"{root}/{_POSTINGS}"):
-        raise ValueError(
-            f"no BM25 index at {root} ({root}/{_POSTINGS} missing) —"
-            " run build_bm25_index first"
-        )
-
-
 def append_bm25_index(
     new_docs: DataFrame,
     path: str,
@@ -322,14 +325,7 @@ def delete_from_bm25_index(
     stops influencing df / n_docs / avgdl in the same serve — no df
     correction deltas needed (the stats are derived, not stored).
     Physical reclaim is ``compact_bm25_index``. O(|ids|)."""
-    with maintenance_lock(path, operation="bm25-delete"):
-        root = resolve_root(path)
-        _require_index(root)
-        n = write_tombstones(
-            spark, root, ids, doc_id, schema_src=_DOCLENS,
-            artifact=_TOMBSTONES,
-        )
-    return {"root": root, "n_tombstones": n}
+    return delete_ids(spark, path, ids, doc_id, _BM25)
 
 
 def compact_bm25_index(
@@ -342,21 +338,12 @@ def compact_bm25_index(
     """Segment-merge + takedown-reclaim: rewrite postings and doclens
     at <= ``files_per_cell`` files per bucket minus tombstoned rows
     into a NEW generation, atomic CURRENT promotion, history-keyed GC
-    — the shared ``generations.compact_cells`` parameterized with this
-    index's layout (one compactor for every cell-partitioned index in
-    the repo). Serve values are identical by construction: df and the
+    — the shared ``generations.compact_cells`` given this index's
+    layout (one compactor for every cell-partitioned index in the
+    repo). Serve values are identical by construction: df and the
     corpus stats are derived from live rows before AND after."""
     out = compact_cells(
-        spark,
-        path,
-        small_artifacts=_SMALL_ARTIFACTS,
-        cell_artifacts=_CELL_ARTIFACTS,
-        flat_artifacts=_FLAT_ARTIFACTS,
-        n_cells_src=_META,
-        files_per_cell=files_per_cell,
-        keep_generations=keep_generations,
-        lock_timeout_s=lock_timeout_s,
-        tombstones_artifact=_TOMBSTONES,
+        spark, path, _BM25, files_per_cell, keep_generations, lock_timeout_s
     )
     _bm25_handle(spark, path)  # warm: first serve hits
     return out
@@ -372,107 +359,56 @@ def maybe_compact_bm25_index(
     lock_timeout_s: float = 600.0,
 ) -> dict:
     """The maintenance POLICY in one call — probe, compare against
-    thresholds, compact only if warranted (the cron-job shape every
-    index family in the repo now shares: maybe_retrain_ivf/_ivfpq,
-    maybe_compact_dedup_index). Triggers: the LIVE tombstone ratio
-    (deletes awaiting physical reclaim — they cost probed-bucket scan
-    time and block re-ingest) and postings-file fragmentation (mean
-    parquet files per bucket beyond ``max_files_per_cell`` — every
-    append lands at least one file per touched bucket). The whole
-    probe-decide-compact sequence holds the writer lock ONCE via
-    ``generations.compact_cells_locked``. Returns the probe report
-    plus ``{"compacted": bool, "reasons": [...],
-    "compact": <result or None>}``."""
-    from sparktrends_spark.similarity.generations import (
-        compact_cells_locked,
-    )
+    thresholds, compact only if warranted (the shared
+    ``generations.run_policy`` every index family runs). Triggers: the
+    LIVE tombstone ratio (deletes awaiting physical reclaim — they cost
+    probed-bucket scan time and block re-ingest) and postings-file
+    fragmentation (mean parquet files per bucket beyond
+    ``max_files_per_cell`` — every append lands at least one file per
+    touched bucket). Returns the probe report plus ``files_per_cell``
+    and ``{"compacted": bool, "reasons": [...], "compact": <result or
+    None>}``."""
 
-    with maintenance_lock(path, lock_timeout_s, operation="bm25-policy"):
+    def probe() -> dict:
         st = bm25_index_stats(spark, path)
         h = _bm25_handle(spark, path)
-        root = h.root
-        n_buckets = h.extra["n_buckets"]
         n_files = sum(
             1
-            for r, _, fs in os.walk(f"{root}/{_POSTINGS}")
+            for r, _, fs in os.walk(f"{h.root}/{_POSTINGS}")
             for f in fs
             if f.endswith(".parquet")
         )
-        files_ratio = n_files / max(n_buckets, 1)
-        reasons = []
-        if st["tombstone_ratio"] > max_tombstone_ratio:
-            reasons.append(
-                f"tombstone_ratio {st['tombstone_ratio']:.2f} >"
-                f" {max_tombstone_ratio}"
-            )
-        if files_ratio > max_files_per_cell:
-            reasons.append(
-                f"files_per_cell {files_ratio:.2f} > {max_files_per_cell}"
-            )
-        out = dict(st)
-        out["files_per_cell"] = files_ratio
-        out["compacted"] = bool(reasons)
-        out["reasons"] = reasons
-        out["compact"] = (
-            compact_cells_locked(
-                spark,
-                path,
-                small_artifacts=_SMALL_ARTIFACTS,
-                cell_artifacts=_CELL_ARTIFACTS,
-                flat_artifacts=_FLAT_ARTIFACTS,
-                n_cells_src=_META,
-                files_per_cell=files_per_cell,
-                keep_generations=keep_generations,
-                tombstones_artifact=_TOMBSTONES,
-            )
-            if reasons
-            else None
+        n_buckets = max(h.extra["n_buckets"], 1)
+        return {**st, "files_per_cell": n_files / n_buckets}
+
+    def compact() -> dict:
+        out = compact_cells_locked(
+            spark, path, _BM25, files_per_cell, keep_generations
         )
-    if reasons:
         _bm25_handle(spark, path)  # warm: first serve hits
-    return out
+        return out
+
+    return run_policy(
+        path,
+        _BM25,
+        probe=probe,
+        limits=(
+            ("tombstone_ratio", max_tombstone_ratio, ".2f"),
+            ("files_per_cell", max_files_per_cell, ".2f"),
+        ),
+        act=compact,
+        action="compact",
+        lock_timeout_s=lock_timeout_s,
+    )
 
 
 def bm25_index_stats(spark, path: str) -> dict:
     """Maintenance probe: postings growth vs the build-time per-bucket
     baseline (size_ratio / max_cell_growth / cell_skew — the shared
-    ``staleness_counts`` arithmetic) plus the live tombstone ratio
-    over documents. Counts-only: metadata-cheap."""
-    from sparktrends_spark.similarity.generations import (
-        read_current,
-        staleness_counts,
-    )
-
-    root = resolve_root(path)
-    _require_index(root)
-    meta = {
-        int(r["cell"]): (int(r["n"]), 0.0)
-        for r in spark.read.parquet(f"{root}/{_META}").collect()
-    }
-    now = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(f"{root}/{_POSTINGS}")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    dl = spark.read.parquet(f"{root}/{_DOCLENS}")
-    stored_id = dl.columns[0]
-    n_docs = dl.count()
-    tomb = read_tombstones(spark, root, stored_id, _TOMBSTONES)
-    n_tomb = (
-        int(tomb.join(dl.select(stored_id), stored_id, "left_semi").count())
-        if tomb is not None
-        else 0
-    )
-    counts = staleness_counts(meta, now)
-    return {
-        "generation": read_current(path) or "",
-        **counts,
-        "n_docs": int(n_docs),
-        "n_tombstones": n_tomb,
-        "tombstone_ratio": n_tomb / max(int(n_docs), 1),
-    }
+    ``generations.probe_cells``) plus the live tombstone ratio over
+    documents. Counts-only: metadata-cheap."""
+    p = probe_cells(spark, path, _BM25, stat=None)
+    return {**p.report, "n_docs": p.n_ids}
 
 
 def bm25_index_topk(

@@ -58,14 +58,17 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from sparktrends_spark.similarity.generations import (
+    IndexLayout,
+    delete_ids,
     gc_generations,
+    live_tombstones,
     maintenance_lock,
     next_generation,
     read_tombstones,
     reset_generations,
     resolve_root,
+    run_policy,
     write_current,
-    write_tombstones,
 )
 from sparktrends_spark.text.dedup import (
     minhash_signatures,
@@ -79,10 +82,16 @@ SHINGLE_N = 3
 
 _SIGNATURES = "signatures"
 _TOMBSTONES = "tombstones"
-# what constitutes the flat root for promotion-history GC (the
-# tombstones artifact rides its root: reclaimed with it, never shared
-# across generations)
-_FLAT_ARTIFACTS = (_SIGNATURES, _TOMBSTONES)
+# one unpartitioned id-led artifact; the tombstones ride their root
+# (reclaimed with it, never shared across generations)
+_DEDUP = IndexLayout(
+    name="dedup",
+    small=(),
+    cells=(_SIGNATURES,),
+    ids=_SIGNATURES,
+    tombstones=_TOMBSTONES,
+    missing="no dedup index at {path}: run build_dedup_index first",
+)
 
 
 def _signatures_dir(index_path: str) -> str:
@@ -103,9 +112,7 @@ def _signatures_dir(index_path: str) -> str:
             " migrate_dedup_index(spark, path) once (offline), or"
             " rebuild with build_dedup_index"
         )
-    raise ValueError(
-        f"no dedup index at {index_path}: run build_dedup_index first"
-    )
+    raise ValueError(_DEDUP.missing.format(path=index_path))
 
 
 def read_dedup_index(spark, index_path: str) -> DataFrame:
@@ -115,10 +122,6 @@ def read_dedup_index(spark, index_path: str) -> DataFrame:
     even if a compaction promotes concurrently (retention keeps the
     previous root until the next promotion's GC)."""
     return spark.read.parquet(_signatures_dir(index_path))
-
-
-def _tombstones(spark, root: str, id_col: str) -> DataFrame | None:
-    return read_tombstones(spark, root, id_col, _TOMBSTONES)
 
 
 def delete_from_dedup_index(
@@ -132,22 +135,12 @@ def delete_from_dedup_index(
     or a plain iterable. O(|ids|) — the index is only touched to read
     the id column's type. Returns the distinct tombstone-set size
     (shared accounting with the ANN indexes:
-    ``generations.write_tombstones``)."""
-    # guard BEFORE taking the lock: the lock's makedirs would otherwise
-    # create a junk dir at a typo'd path and the write would fail with
-    # an opaque schema-inference error — same loud contract as the
-    # IVF/IVF-PQ delete twins
+    ``generations.delete_ids``)."""
+    # names a pre-generation layout (migrate_dedup_index) before the
+    # shared delete's own existence check
     _signatures_dir(index_path)
-    with maintenance_lock(index_path, operation="dedup-delete"):
-        # re-resolve UNDER the lock: a compact promotion between the
-        # guard and the lock would otherwise land tombstones on a
-        # superseded root, silently lost at that root's GC
-        root = os.path.dirname(_signatures_dir(index_path))
-        n = write_tombstones(
-            spark, root, ids, id_col, schema_src=_SIGNATURES,
-            artifact=_TOMBSTONES,
-        )
-    return {"n_tombstones": n}
+    out = delete_ids(spark, index_path, ids, id_col, _DEDUP)
+    return {"n_tombstones": out["n_tombstones"]}
 
 
 def compact_dedup_index(
@@ -173,6 +166,7 @@ def compact_dedup_index(
     is held for one rewrite, not a rewrite plus extra corpus scans."""
     if target_files < 1:
         raise ValueError(f"target_files={target_files}: must be >= 1")
+    _signatures_dir(index_path)
     with maintenance_lock(index_path, operation="dedup-compact"):
         return _compact_dedup_locked(spark, index_path, id_col, target_files)
 
@@ -180,7 +174,7 @@ def compact_dedup_index(
 def _compact_dedup_locked(spark, index_path, id_col, target_files) -> dict:
     sig_dir = _signatures_dir(index_path)
     root = os.path.dirname(sig_dir)
-    tomb = _tombstones(spark, root, id_col)
+    tomb = read_tombstones(spark, root, id_col, _TOMBSTONES)
     if tomb is not None and tomb.isEmpty():
         # an empty tombstone SET (e.g. an automated takedown feed
         # delivered an empty purge batch) must not force a full
@@ -227,7 +221,7 @@ def _compact_dedup_locked(spark, index_path, id_col, target_files) -> dict:
     # new generation: the rewrite above IS the physical reclaim,
     # so the promoted root's tombstone set starts clean
     write_current(index_path, new_gen)
-    removed = gc_generations(index_path, _FLAT_ARTIFACTS, keep=2)
+    removed = gc_generations(index_path, _DEDUP.flat, keep=2)
     spark.catalog.refreshByPath(new_sig)
     return {
         "rows_before": rows_before,
@@ -253,22 +247,17 @@ def dedup_index_stats(
     from sparktrends_spark.similarity.generations import read_current
 
     sig_dir = _signatures_dir(index_path)
-    root = os.path.dirname(sig_dir)
-    n_files = sum(1 for f in os.listdir(sig_dir) if f.endswith(".parquet"))
-    sig = spark.read.parquet(sig_dir)
-    n_rows = sig.count()
-    tomb = _tombstones(spark, root, id_col)
-    n_tomb = (
-        int(tomb.join(sig.select(id_col), id_col, "left_semi").count())
-        if tomb is not None
-        else 0
+    n_rows, n_tomb = live_tombstones(
+        spark, os.path.dirname(sig_dir), _DEDUP, id_col
     )
     return {
         "generation": read_current(index_path) or "",
-        "n_rows": int(n_rows),
-        "n_files": n_files,
+        "n_rows": n_rows,
+        "n_files": sum(
+            1 for f in os.listdir(sig_dir) if f.endswith(".parquet")
+        ),
         "n_tombstones": n_tomb,
-        "tombstone_ratio": n_tomb / max(int(n_rows), 1),
+        "tombstone_ratio": n_tomb / max(n_rows, 1),
     }
 
 
@@ -282,9 +271,8 @@ def maybe_compact_dedup_index(
     lock_timeout_s: float = 600.0,
 ) -> dict:
     """The maintenance POLICY in one call for the dedup index — probe,
-    compare against thresholds, compact only if warranted: the
-    round-14 symmetry with ``maybe_retrain_ivf_index`` /
-    ``maybe_retrain_ivfpq_index`` (same cron-job shape). Triggers:
+    compare against thresholds, compact only if warranted (the shared
+    ``generations.run_policy`` every index family runs). Triggers:
 
     - ``max_tombstone_ratio``: logically deleted rows awaiting
       physical reclaim — they cost band-join scan time AND block
@@ -293,38 +281,25 @@ def maybe_compact_dedup_index(
       ingest lands at least one file per append until band-join cost
       is dominated by file opens.
 
-    The whole probe-decide-compact sequence holds the writer lock
-    ONCE (two concurrent policy runs cannot both trigger and promote
-    back-to-back generations; the second re-probes the fresh
-    generation and no-ops). Returns the probe report plus
-    ``{"compacted": bool, "reasons": [...], "compact": <compact
-    result or None>}``."""
+    Returns the probe report plus ``{"compacted": bool, "reasons":
+    [...], "compact": <compact result or None>}``."""
     if target_files < 1:
         raise ValueError(f"target_files={target_files}: must be >= 1")
-    # guard BEFORE taking the lock: its makedirs would create a junk
-    # dir at a typo'd path (the delete-twin discipline)
-    _signatures_dir(index_path)
-    with maintenance_lock(
-        index_path, lock_timeout_s, operation="dedup-policy"
-    ):
-        st = dedup_index_stats(spark, index_path, id_col)
-        reasons = []
-        if st["tombstone_ratio"] > max_tombstone_ratio:
-            reasons.append(
-                f"tombstone_ratio {st['tombstone_ratio']:.2f} >"
-                f" {max_tombstone_ratio}"
-            )
-        if st["n_files"] > max_files:
-            reasons.append(f"n_files {st['n_files']} > {max_files}")
-        out = dict(st)
-        out["compacted"] = bool(reasons)
-        out["reasons"] = reasons
-        out["compact"] = (
-            _compact_dedup_locked(spark, index_path, id_col, target_files)
-            if reasons
-            else None
-        )
-    return out
+    _signatures_dir(index_path)  # names a pre-generation layout
+    return run_policy(
+        index_path,
+        _DEDUP,
+        probe=lambda: dedup_index_stats(spark, index_path, id_col),
+        limits=(
+            ("tombstone_ratio", max_tombstone_ratio, ".2f"),
+            ("n_files", max_files, ""),
+        ),
+        act=lambda: _compact_dedup_locked(
+            spark, index_path, id_col, target_files
+        ),
+        action="compact",
+        lock_timeout_s=lock_timeout_s,
+    )
 
 
 def banded_signatures(
@@ -485,7 +460,7 @@ def incremental_dedup(
         .agg(F.max("est_j").alias("est_j"))
         .filter(F.col("est_j") >= threshold)
     )
-    tomb = _tombstones(spark, root, id_col)
+    tomb = read_tombstones(spark, root, id_col, _TOMBSTONES)
     if tomb is not None:
         # takedowns stop suppressing: a candidate pair whose index side
         # is tombstoned is dropped BEFORE best-match selection, so a
@@ -532,8 +507,8 @@ def incremental_dedup(
             # check-inside-the-lock discipline as the IVF/IVF-PQ
             # appends.
             sig_now = _signatures_dir(index_path)
-            tomb_now = _tombstones(
-                spark, os.path.dirname(sig_now), id_col
+            tomb_now = read_tombstones(
+                spark, os.path.dirname(sig_now), id_col, _TOMBSTONES
             )
             if tomb_now is not None:
                 n_bad = uniques.join(tomb_now, id_col).count()

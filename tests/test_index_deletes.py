@@ -369,9 +369,64 @@ def test_lock_timeout_reports_holder(tmp_path):
         assert str(os.getpid()) in msg
 
 
-def test_delete_requires_an_index(spark, tmp_path):
-    with pytest.raises(ValueError, match="nothing to delete"):
-        delete_from_ivfpq_index(spark, str(tmp_path / "missing"), [1, 2])
+def _needs_an_index():
+    """Every delete and maintenance policy, called on a path with no
+    index."""
+    from sparktrends_spark.similarity.cosine import (
+        delete_from_ivf_index,
+        maybe_retrain_ivf_index,
+    )
+    from sparktrends_spark.text.bm25_index import (
+        delete_from_bm25_index,
+        maybe_compact_bm25_index,
+    )
+    from sparktrends_spark.text.dedup_index import (
+        delete_from_dedup_index,
+        maybe_compact_dedup_index,
+    )
+
+    def labeled(spark):  # never executed: no threshold is reached
+        return spark.createDataFrame(
+            [], "vec_id long, embedding array<double>, label int"
+        )
+
+    return {
+        "delete_from_ivf_index": lambda spark, p: delete_from_ivf_index(
+            spark, p, [1, 2]
+        ),
+        "delete_from_ivfpq_index": lambda spark, p: delete_from_ivfpq_index(
+            spark, p, [1, 2]
+        ),
+        "delete_from_bm25_index": lambda spark, p: delete_from_bm25_index(
+            spark, p, [1, 2]
+        ),
+        "delete_from_dedup_index": lambda spark, p: delete_from_dedup_index(
+            spark, p, [1, 2]
+        ),
+        "maybe_retrain_ivf_index": lambda spark, p: maybe_retrain_ivf_index(
+            labeled(spark), p
+        ),
+        "maybe_retrain_ivfpq_index": (
+            lambda spark, p: maybe_retrain_ivfpq_index(spark, p, dim=_DIM)
+        ),
+        "maybe_compact_bm25_index": lambda spark, p: maybe_compact_bm25_index(
+            spark, p
+        ),
+        "maybe_compact_dedup_index": (
+            lambda spark, p: maybe_compact_dedup_index(spark, p)
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_needs_an_index()))
+def test_delete_requires_an_index(spark, tmp_path, op):
+    """A missing or mistyped path raises BEFORE the maintenance lock is
+    taken: the lock creates its directory, so a check made under it
+    would leave an empty directory behind."""
+    missing = tmp_path / "missing"
+    with pytest.raises(ValueError, match="index at"):
+        _needs_an_index()[op](spark, str(missing))
+    assert not missing.exists()
 
 
 def test_ivf_index_delete_and_retrain_reclaim(spark, sf_dir, tmp_path):
@@ -466,7 +521,7 @@ def test_maybe_retrain_ivf_policy(spark, sf_dir, tmp_path):
     release_persisted()
     assert not out3["retrained"] and out3["n_tombstones"] == 0
 
-    with pytest.raises(TypeError, match="unknown retrain option"):
+    with pytest.raises(TypeError, match="nprobe"):
         maybe_retrain_ivf_index(emb, idx, nprobe=2)
 
 

@@ -1,7 +1,7 @@
 """The per-generation index handle (similarity/generations.index_handle)
-behind the persisted IVF and BM25 serves and appends: a warm request's
-Spark job count, and that no cached artifact outlives the generation
-it was read from."""
+behind the persisted IVF, IVF-PQ and BM25 serves and appends: a warm
+request's Spark job count and artifact reads, and that no cached
+artifact outlives the generation it was read from."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from sparktrends_spark.similarity import cosine, generations
+from sparktrends_spark.similarity import cosine, generations, ivfpq_index
 from sparktrends_spark.similarity.cosine import (
     append_ivf_index,
     build_ivf_index,
@@ -20,6 +20,14 @@ from sparktrends_spark.similarity.cosine import (
     delete_from_ivf_index,
     ivf_index_topk,
     retrain_ivf_index,
+)
+from sparktrends_spark.similarity.ivfpq_index import (
+    append_ivfpq_index,
+    build_ivfpq_index,
+    compact_ivfpq_index,
+    delete_from_ivfpq_index,
+    ivfpq_index_topk,
+    retrain_ivfpq_index,
 )
 from sparktrends_spark.sources.tables import load_table
 from sparktrends_spark.text import bm25_index
@@ -32,6 +40,7 @@ from sparktrends_spark.text.bm25_index import (
 )
 
 QID0 = 10**9  # query ids disjoint from corpus ids
+_DIM = 64  # embedding width of the fixture corpus
 
 
 def _rows(df):
@@ -120,6 +129,40 @@ def test_warm_requests_run_a_bounded_number_of_jobs(
     assert n_bm <= 12, n_bm
 
 
+def test_warm_ivfpq_request_reads_no_quantizer(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The IVF-PQ build fills the handle: a warm request reads neither
+    ``coarse`` nor ``books`` (through Spark or pyarrow) and re-infers
+    no schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    emb = _emb(spark, sf_dir)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, idx, dim=_DIM)
+    _no_reload(monkeypatch, ivfpq_index, "_load_ivfpq")
+    read = []
+    spark_parquet, arrow_table = DataFrameReader.parquet, pq.read_table
+
+    def spark_read(self, *paths, **kw):
+        read.extend(paths)
+        return spark_parquet(self, *paths, **kw)
+
+    def arrow_read(source, *a, **kw):
+        read.append(source)
+        return arrow_table(source, *a, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spark_read)
+    monkeypatch.setattr(pq, "read_table", arrow_read)
+    q = _ivf_queries(spark, emb)
+    rows = _rows(ivfpq_index_topk(spark, idx, q, dim=_DIM, k_neighbors=5))
+    assert len(rows) == 20
+    assert not [
+        p for p in read if os.path.basename(str(p)) in ("coarse", "books")
+    ], read
+
+
 def test_overwrite_build_elsewhere_invalidates_the_handle(
     spark, sf_dir, tmp_path
 ):
@@ -162,25 +205,39 @@ def test_delete_and_append_are_seen_by_the_next_request(
     appended after it was filled."""
     emb, docs = _emb(spark, sf_dir), _docs(spark, sf_dir)
     ivf, bm = str(tmp_path / "ivf"), str(tmp_path / "bm25")
+    pq = str(tmp_path / "ivfpq")
     ivf_q, bm_q = _ivf_queries(spark, emb), _bm25_queries(spark, docs)
     build_ivf_index(emb.filter("vec_id >= 4"), ivf)
     build_bm25_index(docs.filter("doc_id >= 4"), bm)
+    build_ivfpq_index(emb.filter("vec_id >= 4"), pq, dim=_DIM)
+
+    def pq_ids():
+        return {
+            r["vec_id"]
+            for r in ivfpq_index_topk(
+                spark, pq, ivf_q, dim=_DIM, k_neighbors=5
+            ).collect()
+        }
 
     ivf_hits = {r["vec_id"] for r in ivf_index_topk(spark, ivf, ivf_q, k=5).collect()}
     bm_hits = {r["doc_id"] for r in bm25_index_topk(spark, bm, bm_q, k=5).collect()}
+    pq_hits = pq_ids()
     delete_from_ivf_index(spark, ivf, sorted(ivf_hits))
     delete_from_bm25_index(spark, bm, sorted(bm_hits))
+    delete_from_ivfpq_index(spark, pq, sorted(pq_hits))
     assert not {
         r["vec_id"] for r in ivf_index_topk(spark, ivf, ivf_q, k=5).collect()
     } & ivf_hits
     assert not {
         r["doc_id"] for r in bm25_index_topk(spark, bm, bm_q, k=5).collect()
     } & bm_hits
+    assert not pq_ids() & pq_hits
 
     # the queries' own rows (ids 0-3) enter by append; each query's
     # vector now has an exact match in the index
     append_ivf_index(emb.filter("vec_id < 4"), ivf)
     append_bm25_index(docs.filter("doc_id < 4"), bm)
+    append_ivfpq_index(emb.filter("vec_id < 4"), pq, dim=_DIM)
     top = {
         r["query_id"]: r["vec_id"]
         for r in ivf_index_topk(spark, ivf, ivf_q, k=1).collect()
@@ -189,6 +246,7 @@ def test_delete_and_append_are_seen_by_the_next_request(
     assert {r["doc_id"] for r in bm25_index_topk(spark, bm, bm_q, k=5).collect()} & {
         0, 1, 2, 3
     }
+    assert pq_ids() & {0, 1, 2, 3}
 
 
 def test_compact_and_retrain_serve_the_promoted_root(spark, sf_dir, tmp_path):
@@ -197,17 +255,29 @@ def test_compact_and_retrain_serve_the_promoted_root(spark, sf_dir, tmp_path):
     whose rows equal a fresh build over the live corpus."""
     emb, docs = _emb(spark, sf_dir), _docs(spark, sf_dir)
     ivf, bm = str(tmp_path / "ivf"), str(tmp_path / "bm25")
+    pq = str(tmp_path / "ivfpq")
     ivf_q, bm_q = _ivf_queries(spark, emb), _bm25_queries(spark, docs)
     build_ivf_index(emb, ivf)
     build_bm25_index(docs, bm)
+    build_ivfpq_index(emb, pq, dim=_DIM, store_vectors=True)
+
+    def pq_rows(path):
+        return _rows(
+            ivfpq_index_topk(spark, path, ivf_q, dim=_DIM, k_neighbors=5)
+        )
+
     ivf_index_topk(spark, ivf, ivf_q, k=5).collect()
     bm25_index_topk(spark, bm, bm_q, k=5).collect()
+    pq_rows(pq)
     delete_from_ivf_index(spark, ivf, [10, 11])
     delete_from_bm25_index(spark, bm, [10, 11])
+    delete_from_ivfpq_index(spark, pq, [10, 11])
+    pq_deleted = pq_rows(pq)
 
     for path, out in (
         (ivf, compact_ivf_index(spark, ivf)),
         (bm, compact_bm25_index(spark, bm)),
+        (pq, compact_ivfpq_index(spark, pq)),
     ):
         root = generations.resolve_root(path)
         assert root.endswith(out["generation"])
@@ -219,6 +289,8 @@ def test_compact_and_retrain_serve_the_promoted_root(spark, sf_dir, tmp_path):
     assert _rows(bm25_index_topk(spark, bm, bm_q, k=5)) == _rows(
         bm25_index_topk(spark, fresh_bm, bm_q, k=5)
     )
+    # compaction keeps the quantizers: the tombstone serve, unchanged
+    assert pq_rows(pq) == pq_deleted
 
     compacted = generations.resolve_root(ivf)
     retrain_ivf_index(live_emb, ivf)
@@ -228,6 +300,16 @@ def test_compact_and_retrain_serve_the_promoted_root(spark, sf_dir, tmp_path):
     assert _rows(ivf_index_topk(spark, ivf, ivf_q, k=5)) == _rows(
         ivf_index_topk(spark, fresh_ivf, ivf_q, k=5)
     )
+
+    compacted = generations.resolve_root(pq)
+    retrain_ivfpq_index(spark, pq, dim=_DIM)
+    assert generations.resolve_root(pq) != compacted
+    assert generations._HANDLES[os.path.abspath(pq)].root == (
+        generations.resolve_root(pq)
+    )
+    fresh_pq = str(tmp_path / "fresh_pq")
+    build_ivfpq_index(live_emb, fresh_pq, dim=_DIM, store_vectors=True)
+    assert pq_rows(pq) == pq_rows(fresh_pq)
 
 
 def test_indexes_built_from_two_threads_then_served(spark, sf_dir, tmp_path):

@@ -307,6 +307,24 @@ def test_available_now_drive_loop_lives_in_pipeline_only():
     assert hits == ["streaming/pipeline.py"], hits
 
 
+def test_tombstones_are_written_in_generations_only():
+    """One delete: every index family records tombstones through
+    ``generations.delete_ids`` (existence check before the lock, root
+    re-resolved under it). A ``write_tombstones(`` call elsewhere would
+    be a second delete path that can skip either."""
+    from pathlib import Path
+
+    import sparktrends_spark
+
+    root = Path(sparktrends_spark.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "write_tombstones(" in p.read_text()
+    )
+    assert hits == ["similarity/generations.py"], hits
+
+
 def test_no_fixed_tmp_paths_in_package():
     """Query scratch tables live under ``plans.registry.scratch_root()``
     (per-process, removed at exit). A fixed ``/tmp/...`` root is shared
