@@ -1200,7 +1200,11 @@ def q_stream_corpus_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     == one-shot export, end to end. (The reference has no export
     surface; its stream sink is a JDBC append, stock_stream.py:122.)
     """
-    from sparktrends_spark.text.shards import shard_manifest, write_training_shards
+    from sparktrends_spark.text.shards import (
+        read_training_shards,
+        shard_manifest,
+        write_training_shards,
+    )
 
     base = sf_dir.rstrip("/")
     stage = scratch_dir("shard_stage_")
@@ -1235,4 +1239,4 @@ def q_stream_corpus_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", ckpt),
         300,
     )
-    return shard_manifest(spark.read.parquet(out), weight_col="n_chars")
+    return shard_manifest(read_training_shards(spark, out), weight_col="n_chars")

@@ -679,8 +679,8 @@ def build_ivf_index(
     payload_cols: tuple[str, ...] = (),
     dim: int | None = None,
 ) -> None:
-    """Persist an IVF index: ``path/centroids`` (one tiny parquet of
-    cell, cvec, cn) and ``path/vectors`` partitioned BY CELL — so a
+    """Persist an IVF index: a generation's ``centroids`` (one tiny
+    parquet of cell, cvec, cn) and ``vectors`` partitioned BY CELL — so a
     query that probes nprobe of n_cells reads only those partition
     directories from disk, the 100 TB property an in-plan index can't
     give you (ivf_topk re-scans and re-assigns the corpus per run).
@@ -707,38 +707,34 @@ def build_ivf_index(
     directories, and whether a later read survives depends on which
     file schema-inference picks — a silently poisoned index.
 
-    Also persists ``path/meta`` — per-cell row count and mean round-6
+    Also persists ``meta`` — per-cell row count and mean round-6
     cosine to the assigned centroid at BUILD time, the staleness
     baseline ``ivf_index_staleness`` compares against (appends through
     the frozen centroids deliberately do not touch it).
 
-    Holds the index maintenance lock: an overwrite-build racing a
-    locked append/retrain would reset the generation history under the
-    other writer. (Retrain's internal build targets the fresh
-    generation directory — a distinct lock, no self-deadlock.)"""
+    Writes a fresh generation and promotes it
+    (``generations.promote_generation``), under the index maintenance
+    lock like every writer: an overwrite-build is safe for concurrent
+    readers — one pinned to the previous generation keeps serving it
+    until retention (keep 2) releases it."""
     from sparktrends_spark.similarity.generations import (
         maintenance_lock,
-        reset_generations,
+        promote_generation,
     )
 
     _check_ivf_payload_names(payload_cols, cand_id)
+    spark = vectors.sparkSession
     with maintenance_lock(path, operation="build"):
-        # an overwrite-build resets any previous retrain history
-        # (pointer + generation dirs), or readers would resolve a
-        # stale generation
-        reset_generations(path)
-        # ... and any previous corpus's tombstones: an overwrite-build
-        # defines a fresh corpus — stale tombstones would silently
-        # suppress ids that legitimately exist in the new index
-        import os
-        import shutil
-
-        if os.path.isdir(f"{path}/tombstones"):
-            shutil.rmtree(f"{path}/tombstones")
-            vectors.sparkSession.catalog.refreshByPath(f"{path}/tombstones")
-        _build_ivf_locked(vectors, path, label_col, cand_id, vec_col,
-                          round_digits, payload_cols, dim=dim)
-        _ivf_handle(vectors.sparkSession, path)  # warm: first serve hits
+        promote_generation(
+            spark,
+            path,
+            lambda root: _build_ivf_locked(
+                vectors, root, label_col, cand_id, vec_col, round_digits,
+                payload_cols, dim=dim,
+            ),
+            keep=2,
+        )
+        _ivf_handle(spark, path)  # warm: first serve hits
 
 
 def _build_ivf_locked(
@@ -890,6 +886,7 @@ def append_ivf_index(
     and be lost at GC — see ``generations.maintenance_lock``)."""
     from sparktrends_spark.similarity.generations import maintenance_lock
 
+    _IVF.root(path, "append to")
     spark = new_vectors.sparkSession
     with maintenance_lock(path, operation="append"):
         _append_ivf_locked(
@@ -1156,13 +1153,9 @@ def _retrain_ivf_locked(
     vectors, path, label_col, cand_id, vec_col, round_digits,
     keep_generations,
 ) -> dict:
-    import os
-
     from sparktrends_spark.similarity.generations import (
-        gc_generations,
-        next_generation,
+        promote_generation,
         require_payloads,
-        write_current,
     )
 
     spark = vectors.sparkSession
@@ -1180,29 +1173,17 @@ def _retrain_ivf_locked(
         # generation must not — tombstones outrank the corpus until
         # this reclaim clears them
         corpus = corpus.join(tomb, cand_id, "left_anti")
-    new_gen = next_generation(path)
-    try:
-        _build_ivf_locked(
-            corpus, os.path.join(path, new_gen), label_col, cand_id,
-            vec_col, round_digits, payloads,
-        )
-    except BaseException:
-        # a failed generation build was never promoted — remove the
-        # partial dir rather than leaving orphan junk for GC
-        import shutil
-
-        shutil.rmtree(os.path.join(path, new_gen), ignore_errors=True)
-        raise
-    write_current(path, new_gen)
-    removed = gc_generations(path, _IVF.flat, keep_generations)
-    for sub in _IVF.flat:
-        spark.catalog.refreshByPath(os.path.join(path, new_gen, sub))
+    promoted = promote_generation(
+        spark,
+        path,
+        lambda root: _build_ivf_locked(
+            corpus, root, label_col, cand_id, vec_col, round_digits,
+            payloads,
+        ),
+        keep_generations,
+    )
     _ivf_handle(spark, path)  # warm: first serve hits
-    return {
-        "generation": new_gen,
-        "previous_root": previous,
-        "gc_removed": removed,
-    }
+    return {**promoted, "previous_root": previous}
 
 
 def maybe_retrain_ivf_index(

@@ -5,12 +5,13 @@ maintenance, shared by every maintained layout: the IVF
 (text/bm25_index.py) and MinHash dedup (text/dedup_index.py) indexes
 and the training-shard export (text/shards.py).
 
-An index lives at ``path``. A freshly built index is FLAT: artifact
-directories (centroids/codes/vectors/...) sit directly under ``path``.
-A retrain writes a complete new index into ``path/g<NNNNNN>/`` and
-then promotes it with ONE atomic rename of the ``CURRENT`` pointer
-file — readers resolve the pointer once per operation, pinning a
-consistent generation for the whole serve even if a retrain lands
+An index lives at ``path`` and holds only the ``CURRENT`` pointer
+file and generation directories ``path/g<NNNNNN>/``. Every writer that
+produces a whole index (build, retrain, compact, the shard export's
+overwrite) writes it complete into a fresh generation and promotes it
+through ``promote_generation``: ONE atomic rename of the ``CURRENT``
+pointer file — readers resolve the pointer once per operation, pinning
+a consistent generation for the whole serve even if a promotion lands
 concurrently; they can never observe a half-written index or mix
 quantizer generations. Retention keeps the newest N roots (default 2:
 current + previous, so in-flight readers pinned pre-promotion finish
@@ -43,10 +44,6 @@ import time
 
 _GEN_RE = re.compile(r"^g(\d{6})$")
 
-# sentinel naming the legacy flat layout (artifacts directly under
-# ``path``) in promotion history and GC reports
-FLAT_ROOT = "<flat>"
-
 
 @dataclasses.dataclass(frozen=True)
 class IndexLayout:
@@ -62,8 +59,8 @@ class IndexLayout:
     per indexed item — it types the tombstones and is the denominator
     of the tombstone ratio. ``n_cells_src``: the small artifact whose
     row count is the cell count. Tombstones are not small: compaction
-    drops them (it removes the rows they name), but they belong to the
-    flat root, so GC and an overwrite-build reclaim them with it.
+    drops them (it removes the rows they name); they live in their
+    generation root, so GC reclaims them with it.
     ``missing`` is the error text for a path with no index; ``name``
     labels the lock holder."""
 
@@ -77,10 +74,6 @@ class IndexLayout:
         "no index at {root} ({root}/{artifact} missing) — nothing to"
         " {action}"
     )
-
-    @property
-    def flat(self) -> tuple[str, ...]:
-        return self.small + self.cells + (self.tombstones,)
 
     def root(self, path: str, action: str) -> str:
         """``path``'s CURRENT root, or a ValueError if no index is
@@ -195,47 +188,13 @@ def read_current(path: str) -> str | None:
     return doc["generation"] if doc else None
 
 
-def _legacy_history(path: str, doc: dict) -> list[str]:
-    """Reconstructed promotion history for a pre-history CURRENT file
-    (written before round 11, no ``history`` field): the only safe
-    assumption is "everything on disk was promoted" — the legacy
-    retention behavior. Collapsing it to just [FLAT_ROOT] would make
-    the next GC reap legacy promoted generations as '(unpromoted)'
-    junk regardless of the keep count."""
-    return [FLAT_ROOT] + [
-        g for g in generations(path) if g != doc["generation"]
-    ]
-
-
-def promoted_roots(path: str) -> list[str] | None:
+def promoted_roots(path: str) -> list[str]:
     """Promotion history, oldest first, ENDING with the current
-    generation (``FLAT_ROOT`` names the legacy flat layout). ``None``
-    for a never-promoted (flat-only) index. Directories NOT in this
-    list are unpromoted leftovers of a crashed retrain/compact — junk,
+    generation; empty where nothing was promoted yet. Directories NOT
+    in this list are unpromoted leftovers of a crashed writer — junk,
     never a root a reader was ever pointed at."""
     doc = _read_current_doc(path)
-    if doc is None:
-        return None
-    hist = doc.get("history")
-    if hist is None:
-        hist = _legacy_history(path, doc)
-    return _dedup_keep_order(list(hist) + [doc["generation"]])
-
-
-def _dedup_keep_order(roots: list[str]) -> list[str]:
-    seen: set[str] = set()
-    return [r for r in roots if not (r in seen or seen.add(r))]
-
-
-def _root_exists(path: str, root: str, flat_artifacts) -> bool:
-    """A promoted root is live if its directory — or, for the flat
-    root, ANY flat artifact directory — still exists on disk. The one
-    liveness rule retention and history-pruning both key off."""
-    if root == FLAT_ROOT:
-        return any(
-            os.path.isdir(os.path.join(path, a)) for a in flat_artifacts
-        )
-    return os.path.isdir(os.path.join(path, root))
+    return doc["history"] + [doc["generation"]] if doc else []
 
 
 def _write_current_doc(path: str, doc: dict) -> None:
@@ -249,6 +208,29 @@ def _write_current_doc(path: str, doc: dict) -> None:
     os.replace(tmp, os.path.join(path, "CURRENT"))
 
 
+def promote_generation(spark, path: str, write, keep: int) -> dict:
+    """The one way a whole index reaches ``path``: ``write(gen_root)``
+    fills a fresh ``path/g<N+1>/`` (created empty here), then ONE atomic
+    CURRENT rename promotes it and GC keeps the newest ``keep`` roots.
+    A failure before promotion removes the partial generation (never
+    orphan junk) and leaves the previous root CURRENT, so a reader
+    pinned to it — or to any retained root — keeps serving. Runs under
+    the caller's maintenance lock. Returns ``{generation,
+    gc_removed}``."""
+    new_gen = next_generation(path)
+    gen_root = os.path.join(path, new_gen)
+    os.makedirs(gen_root)
+    try:
+        write(gen_root)
+    except BaseException:
+        shutil.rmtree(gen_root, ignore_errors=True)
+        raise
+    write_current(path, new_gen)
+    removed = gc_generations(path, keep)
+    spark.catalog.refreshByPath(gen_root)
+    return {"generation": new_gen, "gc_removed": removed}
+
+
 def compact_cells(
     spark,
     path: str,
@@ -259,15 +241,13 @@ def compact_cells(
 ) -> dict:
     """Shared segment-merge + takedown-reclaim compactor for the
     cell-partitioned persisted indexes (IVF, IVF-PQ and BM25 pass their
-    ``layout`` — ONE implementation of the generation dance, so a fix
-    to the crash/GC/parallelism contract lands once): copy the small
-    artifacts (coalesce 1), rewrite each cell artifact into at most
-    ``files_per_cell`` files per cell minus tombstoned rows — shuffled
-    on (cell, id-hash split) into n_cells * files_per_cell partitions,
-    one task per target file, never a coalesce funnel — into a NEW
-    generation, atomically promote CURRENT, GC by promotion history. A
-    failure before promotion rmtree's the partial generation dir
-    (never orphan junk). Returns ``{generation, previous_root,
+    ``layout`` — ONE implementation, so a fix to the parallelism
+    contract lands once): copy the small artifacts (coalesce 1),
+    rewrite each cell artifact into at most ``files_per_cell`` files
+    per cell minus tombstoned rows — shuffled on (cell, id-hash split)
+    into n_cells * files_per_cell partitions, one task per target file,
+    never a coalesce funnel — into a generation promoted by
+    ``promote_generation``. Returns ``{generation, previous_root,
     files_before, files_after, rows_before, rows_after, gc_removed}``
     for the counted (first) cell artifact."""
     layout.root(path, "compact")
@@ -300,15 +280,12 @@ def compact_cells_locked(
         )
 
     counted = layout.cells[0]
-    # bail BEFORE promoting: a CURRENT pointer to a generation that was
-    # never created bricks every later resolve
     root = layout.root(path, "compact")
     n_cells = spark.read.parquet(f"{root}/{layout.n_cells_src}").count()
     files_before = _nfiles(f"{root}/{counted}")
     rows_before = spark.read.parquet(f"{root}/{counted}").count()
-    new_gen = next_generation(path)
-    gen_root = os.path.join(path, new_gen)
-    try:
+
+    def write(gen_root: str) -> None:
         for small in layout.small:
             if os.path.isdir(f"{root}/{small}"):
                 spark.read.parquet(
@@ -334,17 +311,11 @@ def compact_cells_locked(
                 ).drop("_fsplit").write.mode("overwrite").partitionBy(
                     "cell"
                 ).parquet(f"{gen_root}/{big}")
-    except BaseException:
-        # never leave a partial never-promoted generation behind
-        # (it would be orphan junk for the next writer's GC)
-        shutil.rmtree(gen_root, ignore_errors=True)
-        raise
-    write_current(path, new_gen)
-    removed = gc_generations(path, layout.flat, keep_generations)
-    for sub in layout.flat:
-        spark.catalog.refreshByPath(os.path.join(gen_root, sub))
+
+    promoted = promote_generation(spark, path, write, keep_generations)
+    gen_root = os.path.join(path, promoted["generation"])
     return {
-        "generation": new_gen,
+        **promoted,
         "previous_root": root,
         "files_before": files_before,
         "files_after": _nfiles(f"{gen_root}/{counted}"),
@@ -352,7 +323,6 @@ def compact_cells_locked(
         "rows_after": int(
             spark.read.parquet(f"{gen_root}/{counted}").count()
         ),
-        "gc_removed": removed,
     }
 
 
@@ -365,26 +335,16 @@ def write_current(path: str, generation: str) -> None:
     never off directory listings, so a crashed writer's partial
     generation dir can neither count toward retention nor displace the
     root in-flight readers were promised."""
-    doc = _read_current_doc(path)
-    if doc is None:
-        history = [FLAT_ROOT]
-    else:
-        # a legacy doc's history must be RECONSTRUCTED, not defaulted:
-        # defaulting to [FLAT_ROOT] would drop legacy promoted
-        # generations from the record and hand them to the orphan GC
-        history = list(doc.get("history") or _legacy_history(path, doc))
-        history.append(doc["generation"])
-    # the generation being promoted is never its own predecessor (a
-    # legacy reconstruction lists it — its directory exists by now),
-    # and a record can carry each root at most once
-    history = _dedup_keep_order([h for h in history if h != generation])
-    _write_current_doc(path, {"generation": generation, "history": history})
+    _write_current_doc(
+        path, {"generation": generation, "history": promoted_roots(path)}
+    )
 
 
 def resolve_root(path: str) -> str:
     """Directory holding the index artifacts for the CURRENT
-    generation: ``path/<generation>`` once a retrain has promoted a
-    pointer, ``path`` itself for a flat (only-ever-built) index."""
+    generation: ``path/<generation>``. A directory without a pointer is
+    its own root — that is what a reader pinned to ``path/g<N>`` holds
+    (and what a writer's existence check reports as missing)."""
     gen = read_current(path)
     return os.path.join(path, gen) if gen else path
 
@@ -392,16 +352,6 @@ def resolve_root(path: str) -> str:
 def next_generation(path: str) -> str:
     gens = generations(path)
     return f"g{(int(gens[-1][1:]) if gens else 0) + 1:06d}"
-
-
-def reset_generations(path: str) -> None:
-    """An overwrite-build resets the index identity: drop the pointer
-    and every generation directory so readers resolve the fresh flat
-    artifacts, not a stale promoted generation."""
-    if read_current(path) is not None:
-        os.remove(os.path.join(path, "CURRENT"))
-    for g in generations(path):
-        shutil.rmtree(os.path.join(path, g))
 
 
 def write_driver_rows(spark, path: str, rows, arrow_schema) -> None:
@@ -459,10 +409,7 @@ def write_small_frame(
     plain collect); an over-cap frame raises instead of collecting."""
     from pyspark.sql import types as T
 
-    try:
-        import pyarrow as pa
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-        pa = None
+    import pyarrow as pa
 
     def _arrow(dt):
         if isinstance(dt, T.IntegerType):
@@ -480,11 +427,7 @@ def write_small_frame(
             return pa.list_(inner) if inner is not None else None
         return None
 
-    fields = (
-        [(f.name, _arrow(f.dataType)) for f in df.schema.fields]
-        if pa is not None
-        else [(None, None)]
-    )
+    fields = [(f.name, _arrow(f.dataType)) for f in df.schema.fields]
     if any(t is None for _, t in fields):
         df.coalesce(1).write.mode("overwrite").parquet(path)
         spark.catalog.refreshByPath(path)
@@ -500,23 +443,20 @@ def write_small_frame(
     )
 
 
-def gc_generations(
-    path: str, flat_artifacts: tuple[str, ...], keep: int
-) -> list[str]:
-    """Reclaim PROMOTED roots older than the newest ``keep`` (the
-    legacy flat layout counts as the oldest promoted root), plus any
+def gc_generations(path: str, keep: int) -> list[str]:
+    """Reclaim PROMOTED roots older than the newest ``keep``, plus any
     never-promoted generation directory — the debris of a writer that
     crashed between building ``path/g<N>`` and promoting the pointer.
     Retention candidates come from the promotion history in CURRENT,
     never from directory listings: counting an orphan toward retention
     would GC the root in-flight readers are actually pinned to while
-    "retaining" unreadable junk. Runs only under the maintenance lock
-    (every caller is a locked writer), so an unpromoted dir can never
-    be a concurrent build in progress. Returns what was removed
-    (``"<flat>"`` for the flat artifacts, ``"gNNNNNN (unpromoted)"``
-    for orphans). ``keep`` must be >= 1: keep=0 would delete the
-    just-promoted CURRENT generation itself, leaving a dangling
-    pointer — never a valid request."""
+    "retaining" unreadable junk. Runs only inside
+    ``promote_generation``, under the maintenance lock, so an
+    unpromoted dir can never be a concurrent write in progress.
+    Returns what was removed (``"gNNNNNN (unpromoted)"`` for orphans).
+    ``keep`` must be >= 1: keep=0 would delete the just-promoted
+    CURRENT generation itself, leaving a dangling pointer — never a
+    valid request."""
     if keep < 1:
         raise ValueError(
             f"keep={keep}: retention must keep at least the CURRENT"
@@ -524,28 +464,14 @@ def gc_generations(
         )
     promoted = promoted_roots(path)
     removed: list[str] = []
-    if promoted is None:
-        # flat-only index: the flat root IS current; only orphan
-        # generation dirs (crashed never-promoted retrains) can go
-        for g in generations(path):
-            shutil.rmtree(os.path.join(path, g))
-            removed.append(f"{g} (unpromoted)")
-        return removed
     for g in generations(path):
         if g not in promoted:
             shutil.rmtree(os.path.join(path, g))
             removed.append(f"{g} (unpromoted)")
-    live = [r for r in promoted if _root_exists(path, r, flat_artifacts)]
-    for r in live[:-keep] if len(live) > keep else []:
-        if r == FLAT_ROOT:
-            for a in flat_artifacts:
-                d = os.path.join(path, a)
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-            removed.append(FLAT_ROOT)
-        else:
-            shutil.rmtree(os.path.join(path, r))
-            removed.append(r)
+    live = [r for r in promoted if os.path.isdir(os.path.join(path, r))]
+    for r in live[:-keep]:
+        shutil.rmtree(os.path.join(path, r))
+        removed.append(r)
     # prune the promotion record to roots that still exist: history
     # otherwise grows by one entry per promotion FOREVER (a per-hour
     # compaction cadence accretes thousands of dead names that every
@@ -554,16 +480,16 @@ def gc_generations(
     # itself is untouched.
     if removed:
         doc = _read_current_doc(path)
-        if doc is not None:
-            still_live = [
-                r
-                for r in doc.get("history") or _legacy_history(path, doc)
-                if _root_exists(path, r, flat_artifacts)
-            ]
-            _write_current_doc(
-                path,
-                {"generation": doc["generation"], "history": still_live},
-            )
+        _write_current_doc(
+            path,
+            {
+                "generation": doc["generation"],
+                "history": [
+                    r for r in doc["history"]
+                    if os.path.isdir(os.path.join(path, r))
+                ],
+            },
+        )
     return removed
 
 
@@ -625,8 +551,8 @@ _HANDLES_LOCK = threading.Lock()
 
 def _generation_identity(spark, root: str, small_artifacts) -> tuple:
     """The live session plus the root and its small artifacts' part
-    files (name, mtime): any rewrite of those (an overwrite-build, a
-    promotion to a new root) changes it. The session is part of it
+    files (name, mtime): a promotion to a new root, or any rewrite of
+    those files, changes it. The session is part of it
     because a handle holds JVM-side literals that die with their
     SparkContext."""
 

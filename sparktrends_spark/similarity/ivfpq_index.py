@@ -9,9 +9,10 @@ the production serve shape, mirroring the plain-IVF persisted index
 
 - ``build_ivfpq_index``: train the coarse k-means (cells), encode each
   vector's RESIDUAL (v - cell centroid) with per-sub-space k-means
-  codebooks trained on the residuals, and write three artifacts:
-  ``path/coarse`` (n_cells tiny rows), ``path/books`` (m*k tiny rows),
-  ``path/codes`` partitioned BY CELL — vec_id + m code ids, no floats.
+  codebooks trained on the residuals, and write three artifacts into
+  a fresh generation: ``coarse`` (n_cells tiny rows), ``books`` (m*k
+  tiny rows), ``codes`` partitioned BY CELL — vec_id + m code ids, no
+  floats.
 - ``append_ivfpq_index``: encode a new batch with the EXISTING coarse
   centroids and codebooks (the standard IVF maintenance trade: fast
   appends, slow-cadence retrains) and append to the cell partitions.
@@ -64,7 +65,6 @@ Reference scope note: SparkTrends has no ANN surface; engine extension
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -87,13 +87,12 @@ from sparktrends_spark.caching import persist_tracked
 from sparktrends_spark.similarity.generations import (
     IndexLayout,
     apply_where,
-    gc_generations,
     index_handle,
+    local_relation,
+    local_rows,
     maintenance_lock,
-    next_generation,
-    reset_generations,
+    promote_generation,
     resolve_root as resolve_index_root,  # noqa: F401 (public name)
-    write_current as _write_current,
     write_driver_rows,
 )
 
@@ -183,7 +182,7 @@ def build_ivfpq_index(
     payloads small (scalars, not text) — the code table's
     bytes-at-rest economy is the index's scale story.
 
-    ``store_vectors``: additionally persist a ``path/vectors`` sidecar
+    ``store_vectors``: additionally persist a ``vectors`` sidecar
     (raw vectors, cell-partitioned like the codes) enabling two-stage
     search (``refine_k`` in ``ivfpq_index_topk``) — ADC shortlists on
     bytes, the shortlist re-ranks on exact distances read from ONLY
@@ -194,18 +193,24 @@ def build_ivfpq_index(
     the same frame passes them instead of paying the training twice;
     the recall audit does).
 
-    Holds the index maintenance lock: an overwrite-build racing a
-    locked append/retrain would reset the generation history and
-    rewrite quantizers UNDER the other writer — the same lost-write
-    class the lock exists for. (Retrain's internal build targets the
-    fresh generation directory, whose lock is distinct from the index
-    root's — no self-deadlock.)"""
+    Writes a fresh generation and promotes it
+    (``generations.promote_generation``), under the index maintenance
+    lock like every writer: an overwrite-build is safe for concurrent
+    readers — one pinned to the previous generation keeps serving it
+    until retention (keep 2) releases it."""
+    _check_payload_names(payload_cols, id_col, m)
+    spark = vectors.sparkSession
     with maintenance_lock(path, lock_timeout_s, operation="ivfpq-build"):
-        _build_ivfpq_locked(
-            vectors, path, dim, n_cells, m, k_codes, iterations,
-            id_col, vec_col, store_vectors, coarse, payload_cols,
+        promote_generation(
+            spark,
+            path,
+            lambda root: _build_ivfpq_locked(
+                vectors, root, dim, n_cells, m, k_codes, iterations,
+                id_col, vec_col, store_vectors, coarse, payload_cols,
+            ),
+            keep=2,
         )
-        _ivfpq_handle(vectors.sparkSession, path)  # warm: first serve hits
+        _ivfpq_handle(spark, path)  # warm: first serve hits
 
 
 def _check_payload_names(payload_cols, id_col, m) -> None:
@@ -235,12 +240,6 @@ def _build_ivfpq_locked(
     id_col, vec_col, store_vectors, coarse, payload_cols=(),
 ) -> None:
     spark = vectors.sparkSession
-    _check_payload_names(payload_cols, id_col, m)
-    # An overwrite-build resets the index identity: any generation
-    # pointer + generation directories from a previous retrain history
-    # must go first, or readers would keep resolving to the stale
-    # promoted generation instead of this build's flat artifacts.
-    reset_generations(path)
     emb = vectors.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"),
@@ -310,22 +309,6 @@ def _build_ivfpq_locked(
         ).repartition(F.col("cell")).write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(f"{path}/vectors")
-    else:
-        # A rebuild over different data must not leave a prior build's
-        # refinement sidecar behind: append_ivfpq_index would keep it
-        # growing and refine_k would silently re-rank against vectors
-        # from the WRONG corpus instead of failing. Local-path rm is
-        # the deployment seam (object stores: delete the prefix).
-        if os.path.isdir(f"{path}/vectors"):
-            shutil.rmtree(f"{path}/vectors")
-            spark.catalog.refreshByPath(f"{path}/vectors")
-    # same reasoning for a prior build's tombstones: an overwrite-build
-    # defines a FRESH corpus — stale tombstones would silently suppress
-    # ids that legitimately exist in the new index
-    tombs = f"{path}/{_IVFPQ.tombstones}"
-    if os.path.isdir(tombs):
-        shutil.rmtree(tombs)
-        spark.catalog.refreshByPath(tombs)
 
 
 def _encode(
@@ -464,6 +447,7 @@ def append_ivfpq_index(
     mismatch raises instead."""
     from sparktrends_spark.similarity.generations import require_payloads
 
+    _IVFPQ.root(path, "append to")
     spark = new_vectors.sparkSession
     with maintenance_lock(path, lock_timeout_s, operation="ivfpq-append"):
         h = _ivfpq_handle(spark, path)
@@ -574,8 +558,14 @@ def ivfpq_index_topk(
             " missing) — build with store_vectors=True"
         )
 
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("_qv")
+    # the caller's batch is read ONCE, into a local relation: the probe
+    # pick, the LUT branch and the refine join all read that
+    q = local_relation(
+        spark,
+        queries.select(
+            F.col(query_id_col),
+            F.col(vec_col).cast("array<double>").alias("_qv"),
+        ),
     )
     # one transform lambda over the constant-folded centroid array, not
     # a per-cell expression tree — at production cell counts the latter
@@ -584,13 +574,16 @@ def ivfpq_index_topk(
     probe_structs = dist_struct_array(F.col("_qv"), cents)
     tomb = h.tombstones(spark, id_col, "codes")
     if min_candidates is None:
+        nearest = F.slice(F.array_sort(probe_structs), 1, nprobe)
         probes = q.select(
-            query_id_col,
-            "_qv",
-            F.explode(
-                F.slice(F.array_sort(probe_structs), 1, nprobe)
-            ).alias("_p"),
+            query_id_col, "_qv", F.explode(nearest).alias("_p")
         ).select(query_id_col, "_qv", F.col("_p.c").alias("cell"))
+        # a projection Catalyst folds over the local relation: picking
+        # the probed cells (<= |queries| * nprobe) runs no job
+        cells = {
+            c for r in q.select(nearest["c"].alias("_c")).collect()
+            for c in r["_c"]
+        }
     else:
         from sparktrends_spark.similarity.generations import escalate_probes
 
@@ -618,16 +611,11 @@ def ivfpq_index_topk(
         # reattach the query vectors for the LUT build: reusing the
         # lazy frame would re-execute the corpus-wide counting scan
         rows = kept.collect()
-        probes = spark.createDataFrame(rows, kept.schema).join(
-            q, query_id_col
-        )
+        probes = local_rows(spark, rows, kept.schema).join(q, query_id_col)
+        cells = {r["cell"] for r in rows}  # <= |queries| * n_cells
 
-    cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )  # bounded: <= |queries| * nprobe (adaptive: * n_cells)
-    codes = h.scan(spark, "codes").filter(
-        F.col("cell").isin([int(c) for c in cells])
-    )
+    cells = sorted(int(c) for c in cells)
+    codes = h.scan(spark, "codes").filter(F.col("cell").isin(cells))
     if where is not None:
         # loud serve-side guard: an unresolvable predicate names the
         # stored payloads instead of an opaque AnalysisException
@@ -673,7 +661,7 @@ def ivfpq_index_topk(
         .select(query_id_col, id_col)
     )
     vecs = h.scan(spark, "vectors").filter(
-        F.col("cell").isin([int(c) for c in cells])
+        F.col("cell").isin(cells)
     ).select(id_col, "_cv")
     # exact round-6 L2, identical fold shape to the brute-force ground
     # truth (zip_with(candidate, query) left-to-right)
@@ -687,8 +675,7 @@ def ivfpq_index_topk(
     )
     rr = (
         cand.join(vecs, id_col)
-        # q comes from the caller's query batch, which Catalyst may not size
-        .join(F.broadcast(q), query_id_col)
+        .join(q, query_id_col)
         .select(query_id_col, id_col, d2.alias("d2"))
     )
     w2 = Window.partitionBy(query_id_col).orderBy(F.asc("d2"), F.asc(id_col))
@@ -813,9 +800,9 @@ def retrain_ivfpq_index(
        is deterministic and order-independent, so the result is
        bit-identical to a fresh build over the same vectors);
     2. atomically promote via a single ``CURRENT`` pointer rename
-       (``_write_current``): concurrent readers resolve either the old
-       complete generation or the new complete one, never a mix and
-       never a half-written index;
+       (``generations.promote_generation``): concurrent readers
+       resolve either the old complete generation or the new complete
+       one, never a mix and never a half-written index;
     3. GC generations older than the newest ``keep_generations``
        (default 2: current + previous, so in-flight readers pinned to
        the pre-promotion generation finish safely — the same retention
@@ -874,37 +861,23 @@ def _retrain_ivfpq_locked(
         # of tombstoned ids and starts with a clean tombstone set
         corpus = corpus.join(tomb, id_col, "left_anti")
     n_vectors = corpus.count()
-    new_gen = next_generation(path)
-    try:
-        # the lock on ``path`` covers the fresh generation directory
-        _build_ivfpq_locked(
-            corpus, os.path.join(path, new_gen), dim, n_cells, m, k_codes,
-            iterations, id_col, "embedding", True, None, payloads,
-        )
-    except BaseException:
-        # a crashed/failed generation build must not leave a partial
-        # dir behind: it was never promoted, so nothing references it,
-        # and leaving it would only burden the next writer's orphan GC
-        shutil.rmtree(os.path.join(path, new_gen), ignore_errors=True)
-        raise
-    _write_current(path, new_gen)
-
-    # retention: newest keep_generations roots survive (the legacy
-    # flat layout counts as the oldest root); everything older is
-    # reclaimed — readers pinned to a reclaimed generation would fail
-    # loudly on scan, never read wrong data.
-    removed = gc_generations(path, _IVFPQ.flat, keep_generations)
-    for sub in _IVFPQ.flat:
-        spark.catalog.refreshByPath(os.path.join(path, new_gen, sub))
+    promoted = promote_generation(
+        spark,
+        path,
+        lambda gen_root: _build_ivfpq_locked(
+            corpus, gen_root, dim, n_cells, m, k_codes, iterations,
+            id_col, "embedding", True, None, payloads,
+        ),
+        keep_generations,
+    )
     _ivfpq_handle(spark, path)  # warm: first serve hits
     return {
-        "generation": new_gen,
+        **promoted,
         "previous_root": root,
         "n_vectors": int(n_vectors),
         "n_cells": n_cells,
         "m": m,
         "k_codes": k_codes,
-        "gc_removed": removed,
     }
 
 

@@ -9,7 +9,8 @@ fine for a graded query, wrong for a serving story. This module is
 the postings-at-rest shape (the round-13 verdict's lexical-lifecycle
 symmetry ask):
 
-- ``build_bm25_index``: tokenize once, store three artifacts —
+- ``build_bm25_index``: tokenize once, store three artifacts in a
+  fresh generation —
   ``postings`` (doc_id, term, tf) partitioned by ``cell`` =
   pmod(hash(term), n_buckets), ``doclens`` (doc_id, dl) partitioned
   by pmod(hash(doc_id), n_buckets), and ``meta`` (one row per bucket:
@@ -51,7 +52,6 @@ Robertson & Zaragoza 2009; Lucene's idf form).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,7 +64,7 @@ from sparktrends_spark.similarity.generations import (
     index_handle,
     maintenance_lock,
     probe_cells,
-    reset_generations,
+    promote_generation,
     run_policy,
 )
 from sparktrends_spark.text.analysis import tokens
@@ -191,13 +191,11 @@ def build_bm25_index(
     parallelism unit — size it so one bucket's postings fit a task
     comfortably (the per-cell contract of the ANN indexes); it is
     fixed for the index's lifetime (appends derive it from ``meta``)
-    because the bucket function IS the physical layout. An
-    overwrite-build resets the index identity: generation pointer,
-    generation dirs, and any previous corpus's tombstones (which would
-    otherwise suppress legitimate ids of the new corpus). Holds the
-    writer lock like every mutator; same reader contract as the ANN
-    builds (overwrite-build is out of contract for concurrent readers
-    — compact is the reader-safe promoted rewrite).
+    because the bucket function IS the physical layout. Writes a fresh
+    generation and promotes it (``generations.promote_generation``)
+    under the writer lock, like every mutator: an overwrite-build is
+    safe for concurrent readers — one pinned to the previous
+    generation keeps serving it until retention (keep 2) releases it.
 
     ``payload_cols``: metadata columns of ``docs`` (language, source,
     license class, ...) stored on DOCLENS — the substrate for
@@ -210,25 +208,17 @@ def build_bm25_index(
         raise ValueError(f"n_buckets={n_buckets}: must be >= 1")
     _check_bm25_payload_names(payload_cols, doc_id)
     spark = docs.sparkSession
-    with maintenance_lock(path, operation="bm25-build"):
-        reset_generations(path)
-        if os.path.isdir(f"{path}/{_TOMBSTONES}"):
-            shutil.rmtree(f"{path}/{_TOMBSTONES}")
-            spark.catalog.refreshByPath(f"{path}/{_TOMBSTONES}")
+
+    def write(root: str) -> None:
         postings, doclens = _tokenized(
             docs, doc_id, text_col, n_buckets, payload_cols
         )
         postings.repartition(n_buckets, "cell").write.mode(
             "overwrite"
-        ).partitionBy("cell").parquet(f"{path}/{_POSTINGS}")
-        # refresh BEFORE the meta read-back: a rebuild in a session
-        # that previously served this path would otherwise aggregate
-        # the baseline through the stale cached file listing of the
-        # OLD corpus (or die on its deleted files)
-        spark.catalog.refreshByPath(f"{path}/{_POSTINGS}")
+        ).partitionBy("cell").parquet(f"{root}/{_POSTINGS}")
         doclens.repartition(n_buckets, "cell").write.mode(
             "overwrite"
-        ).partitionBy("cell").parquet(f"{path}/{_DOCLENS}")
+        ).partitionBy("cell").parquet(f"{root}/{_DOCLENS}")
         # one row PER BUCKET (including postings-empty ones): the row
         # count is the durable n_buckets record appends/serves derive
         # the bucket function from, and per-bucket counts are the
@@ -236,16 +226,17 @@ def build_bm25_index(
         spark.range(n_buckets).select(
             F.col("id").cast("int").alias("cell")
         ).join(
-            spark.read.parquet(f"{path}/{_POSTINGS}")
+            spark.read.parquet(f"{root}/{_POSTINGS}")
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n")),
             "cell",
             "left",
         ).select(
             "cell", F.coalesce("n", F.lit(0)).alias("n")
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_META}")
-        for sub in (_POSTINGS, _DOCLENS, _META):
-            spark.catalog.refreshByPath(f"{path}/{sub}")
+        ).coalesce(1).write.mode("overwrite").parquet(f"{root}/{_META}")
+
+    with maintenance_lock(path, operation="bm25-build"):
+        promote_generation(spark, path, write, keep=2)
         _bm25_handle(spark, path)  # warm: first serve hits
 
 
@@ -267,6 +258,7 @@ def append_bm25_index(
     (compact) first, then re-ingest."""
     from sparktrends_spark.similarity.generations import require_payloads
 
+    _BM25.root(path, "append to")
     spark = new_docs.sparkSession
     with maintenance_lock(path, operation="bm25-append"):
         h = _bm25_handle(spark, path)

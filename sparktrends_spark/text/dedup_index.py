@@ -6,7 +6,8 @@ A production corpus is not deduplicated from scratch per ingest: the
 bytes per document, no text retained), and each incoming batch is
 checked against that index and appended. This module is that flow:
 
-- ``build_dedup_index``: signature+band table written as parquet.
+- ``build_dedup_index``: signature+band table written as parquet into
+  a fresh generation.
 - ``incremental_dedup``: band-keyed equi-joins of the new batch
   against the index (the only shuffle keys are band hashes), duplicate
   decision by signature agreement (estimated Jaccard = matching
@@ -25,9 +26,9 @@ checked against that index and appended. This module is that flow:
 
 On-disk layout — the GENERATION-POINTER discipline shared with the
 IVF / IVF-PQ indexes (``similarity/generations.py``), not POSIX dir
-renames: a freshly built index is FLAT (``path/signatures``);
-compaction writes a complete rewrite into ``path/g<NNNNNN>/signatures``
-and promotes it with ONE atomic rename of the ``CURRENT`` pointer.
+renames: a build and a compaction each write a complete index into
+``path/g<NNNNNN>/signatures`` and promote it with ONE atomic rename of
+the ``CURRENT`` pointer.
 Readers resolve the pointer once per operation and pin that root for
 the whole serve — the index path is NEVER briefly absent (the
 pre-round-12 ``swap_dirs`` layout's seam), retention keeps the newest
@@ -36,8 +37,6 @@ safely, and GC keys off the promotion history, never directory
 listings. On an object store the pointer becomes a conditional-put
 manifest object — the same deployment seam as the ANN indexes, with
 no rename-atomicity requirement anywhere in the lifecycle.
-``migrate_dedup_index`` upgrades a pre-round-12 flat-file index (its
-parquet files sat directly under ``path``) in place, once, offline.
 
 Uses the same MinHash construction as ``text/dedup.py`` (md5-derived
 base hash, integer permutations, 4x4 banding), so the DuckDB oracle of
@@ -51,7 +50,6 @@ public papers).
 from __future__ import annotations
 
 import os
-import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, Window
@@ -60,15 +58,11 @@ from pyspark.sql import functions as F
 from sparktrends_spark.similarity.generations import (
     IndexLayout,
     delete_ids,
-    gc_generations,
     live_tombstones,
     maintenance_lock,
-    next_generation,
+    promote_generation,
     read_tombstones,
-    reset_generations,
-    resolve_root,
     run_policy,
-    write_current,
 )
 from sparktrends_spark.text.dedup import (
     minhash_signatures,
@@ -96,23 +90,8 @@ _DEDUP = IndexLayout(
 
 def _signatures_dir(index_path: str) -> str:
     """Resolve the CURRENT root and return its signature artifact dir,
-    failing LOUDLY on a missing index — and, distinctly, on a
-    pre-round-12 flat-FILE layout (parquet files directly under the
-    index path), which needs the one-time ``migrate_dedup_index``."""
-    root = resolve_root(index_path)
-    d = os.path.join(root, _SIGNATURES)
-    if os.path.isdir(d):
-        return d
-    if os.path.isdir(root) and any(
-        f.endswith(".parquet") for f in os.listdir(root)
-    ):
-        raise ValueError(
-            f"{index_path}: pre-generation flat-file dedup index layout"
-            " (parquet files directly under the index path) — run"
-            " migrate_dedup_index(spark, path) once (offline), or"
-            " rebuild with build_dedup_index"
-        )
-    raise ValueError(_DEDUP.missing.format(path=index_path))
+    failing LOUDLY on a missing index."""
+    return os.path.join(_DEDUP.root(index_path, "read"), _SIGNATURES)
 
 
 def read_dedup_index(spark, index_path: str) -> DataFrame:
@@ -136,9 +115,6 @@ def delete_from_dedup_index(
     the id column's type. Returns the distinct tombstone-set size
     (shared accounting with the ANN indexes:
     ``generations.delete_ids``)."""
-    # names a pre-generation layout (migrate_dedup_index) before the
-    # shared delete's own existence check
-    _signatures_dir(index_path)
     out = delete_ids(spark, index_path, ids, id_col, _DEDUP)
     return {"n_tombstones": out["n_tombstones"]}
 
@@ -166,7 +142,7 @@ def compact_dedup_index(
     is held for one rewrite, not a rewrite plus extra corpus scans."""
     if target_files < 1:
         raise ValueError(f"target_files={target_files}: must be >= 1")
-    _signatures_dir(index_path)
+    _DEDUP.root(index_path, "compact")
     with maintenance_lock(index_path, operation="dedup-compact"):
         return _compact_dedup_locked(spark, index_path, id_col, target_files)
 
@@ -200,37 +176,31 @@ def _compact_dedup_locked(spark, index_path, id_col, target_files) -> dict:
     )
     if tomb is not None:
         keep = keep.join(tomb, id_col, "left_anti")
-    new_gen = next_generation(index_path)
-    gen_root = os.path.join(index_path, new_gen)
-    try:
-        keep.repartition(target_files, F.col(id_col)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(gen_root, _SIGNATURES))
-    except BaseException:
-        # never leave a partial never-promoted generation behind
-        # (it would be orphan junk for the next writer's GC)
-        shutil.rmtree(gen_root, ignore_errors=True)
-        raise
-    rows_before = int(obs.get["rows_in"])
-    new_sig = os.path.join(gen_root, _SIGNATURES)
-    rows_after = spark.read.parquet(new_sig).count()
-    files_after = sum(
-        1 for f in os.listdir(new_sig) if f.endswith(".parquet")
+    # the tombstones artifact is deliberately NOT carried into the new
+    # generation: the rewrite IS the physical reclaim, so the promoted
+    # root's tombstone set starts clean
+    promoted = promote_generation(
+        spark,
+        index_path,
+        lambda gen_root: keep.repartition(
+            target_files, F.col(id_col)
+        ).write.mode("overwrite").parquet(
+            os.path.join(gen_root, _SIGNATURES)
+        ),
+        keep=2,
     )
-    # the tombstones artifact is deliberately NOT carried into the
-    # new generation: the rewrite above IS the physical reclaim,
-    # so the promoted root's tombstone set starts clean
-    write_current(index_path, new_gen)
-    removed = gc_generations(index_path, _DEDUP.flat, keep=2)
-    spark.catalog.refreshByPath(new_sig)
+    rows_before = int(obs.get["rows_in"])
+    new_sig = _signatures_dir(index_path)
+    rows_after = spark.read.parquet(new_sig).count()
     return {
         "rows_before": rows_before,
         "rows_after": int(rows_after),
         "n_reclaimed": int(rows_before - rows_after),
         "files_before": files_before,
-        "files_after": files_after,
-        "generation": new_gen,
-        "gc_removed": removed,
+        "files_after": sum(
+            1 for f in os.listdir(new_sig) if f.endswith(".parquet")
+        ),
+        **promoted,
     }
 
 
@@ -285,7 +255,6 @@ def maybe_compact_dedup_index(
     [...], "compact": <compact result or None>}``."""
     if target_files < 1:
         raise ValueError(f"target_files={target_files}: must be >= 1")
-    _signatures_dir(index_path)  # names a pre-generation layout
     return run_policy(
         index_path,
         _DEDUP,
@@ -324,79 +293,21 @@ def banded_signatures(
 def build_dedup_index(
     docs: DataFrame, path: str, id_col: str = "doc_id"
 ) -> None:
-    """(Re)build the signature index: reset the index identity (drop
-    any generation pointer + generation dirs — readers must resolve
-    the fresh flat artifacts, not a stale promoted generation — plus
-    any previous corpus's tombstones, which would otherwise suppress
-    legitimate ids of the NEW corpus) and write the flat
-    ``path/signatures`` artifact. Holds the writer lock like every
-    other mutator. Same contract as the ANN builds: an overwrite-build
-    defines a fresh index and is out of contract for concurrent
-    readers (they fail loudly mid-rebuild); compaction — not build —
-    is the reader-safe promoted rewrite."""
+    """(Re)build the signature index: write ``signatures`` into a fresh
+    generation and promote it (``generations.promote_generation``)
+    under the writer lock, like every other mutator. An overwrite-build
+    is safe for concurrent readers: one pinned to the previous
+    generation keeps it until retention (keep 2) releases it."""
     spark = docs.sparkSession
     with maintenance_lock(path, operation="dedup-build"):
-        reset_generations(path)
-        for stale in (_TOMBSTONES,):
-            d = os.path.join(path, stale)
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-                spark.catalog.refreshByPath(d)
-        # a rebuild over a PRE-round-12 flat-file index: its parquet
-        # files sit directly under path and would shadow the new
-        # layout in the legacy-detection guard — an overwrite-build
-        # owns the index identity, so clear them
-        for f in os.listdir(path):
-            fp = os.path.join(path, f)
-            if os.path.isfile(fp) and f != ".maintenance.lock":
-                os.remove(fp)
-        sig_dir = os.path.join(path, _SIGNATURES)
-        banded_signatures(docs, id_col=id_col).write.mode(
-            "overwrite"
-        ).parquet(sig_dir)
-        spark.catalog.refreshByPath(sig_dir)
-
-
-def migrate_dedup_index(spark, path: str) -> dict:
-    """One-time, in-place upgrade of a pre-round-12 index (parquet
-    files directly under ``path``, tombstones under ``_tombstones``)
-    to the generation layout (``path/signatures`` + ``tombstones``).
-    Run OFFLINE: the per-file moves expose a concurrent legacy reader
-    to a partial row subset mid-migration (the migration is the last
-    time that seam exists — every later rewrite is a promoted
-    generation). Idempotent: a second call is a counted no-op."""
-    # guard BEFORE taking the lock (whose makedirs would create a junk
-    # dir at a typo'd path): either the new layout is RESOLVABLE — a
-    # signatures dir at the CURRENT root, which after a couple of
-    # compactions lives under g<N> with the flat root GC'd, so the
-    # flat-path check alone would misread "already migrated" as
-    # "nothing to migrate" — or legacy parquet files must be present
-    migrated = os.path.isdir(os.path.join(resolve_root(path), _SIGNATURES))
-    if not migrated and not (
-        os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        raise ValueError(f"no dedup index at {path}: nothing to migrate")
-    with maintenance_lock(path, operation="dedup-migrate"):
-        # re-check under the lock (the pre-lock read was advisory)
-        if os.path.isdir(os.path.join(resolve_root(path), _SIGNATURES)):
-            return {"migrated_files": 0, "already_migrated": True}
-        sig_dir = os.path.join(path, _SIGNATURES)
-        os.makedirs(sig_dir)
-        moved = 0
-        for f in os.listdir(path):
-            fp = os.path.join(path, f)
-            # everything the legacy parquet write produced (part files,
-            # _SUCCESS, checksum files) moves; the lock file stays
-            if os.path.isfile(fp) and f != ".maintenance.lock":
-                os.rename(fp, os.path.join(sig_dir, f))
-                moved += 1
-        legacy_tomb = os.path.join(path, "_tombstones")
-        if os.path.isdir(legacy_tomb):
-            os.rename(legacy_tomb, os.path.join(path, _TOMBSTONES))
-        spark.catalog.refreshByPath(path)
-        spark.catalog.refreshByPath(sig_dir)
-        return {"migrated_files": moved, "already_migrated": False}
+        promote_generation(
+            spark,
+            path,
+            lambda root: banded_signatures(docs, id_col=id_col).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(root, _SIGNATURES)),
+            keep=2,
+        )
 
 
 def incremental_dedup(

@@ -55,11 +55,9 @@ __all__ = [
 
 
 def export_root(path: str) -> str:
-    """Directory holding the CURRENT export's ``shard=K/`` dirs:
-    ``path/g<N>`` once an overwrite has promoted a generation,
-    ``path`` itself for an append-only (never-overwritten) export —
-    the same one-line pinning contract as the ANN/dedup indexes
-    (``generations.resolve_root``). A trainer resolves ONCE at run
+    """Directory holding the CURRENT export's ``shard=K/`` dirs,
+    ``path/g<N>`` — the same one-line pinning contract as the ANN/dedup
+    indexes (``generations.resolve_root``). A trainer resolves ONCE at run
     start and reads that root for the whole run; retention (keep 2)
     guarantees the pinned root survives one subsequent overwrite."""
     from sparktrends_spark.similarity.generations import resolve_root
@@ -149,19 +147,6 @@ def shard_manifest(
     return assigned.groupBy("shard").agg(*aggs)
 
 
-def _is_commit_marker(name: str) -> bool:
-    """Root-level files Spark's FileOutputCommitter (v1/v2, plus the
-    DBIO-style committers) leaves next to partition dirs — the ONLY
-    files the legacy-flat-root GC may sweep. Anything else at the
-    export root is user data."""
-    return (
-        name == "_SUCCESS"
-        or (name.startswith(".") and name.endswith(".crc"))
-        or name.startswith("_committed_")
-        or name.startswith("_started_")
-    )
-
-
 def _existing_layout(path: str) -> str | None:
     """Partition depth of the export already on disk: ``"plain"``
     (shard=K/*.parquet), ``"batched"`` (shard=K/ingest_batch=J/...),
@@ -225,31 +210,28 @@ def write_training_shards(
     route re-deliverable feeds through ``batch_id`` (or the
     incremental dedup index).
 
-    ``mode="overwrite"`` of an existing export is crash-safe AND
-    object-store-ready: the new export lands in a fresh GENERATION
-    directory (``path/g<N+1>/shard=K/...``) and is promoted with one
-    atomic ``CURRENT`` pointer rename — the same discipline as the
-    ANN/dedup indexes (``similarity/generations.py``). A mid-write
-    failure (including the NULL-id guard firing) rmtree's the partial
+    ``mode="overwrite"`` is crash-safe AND object-store-ready: the new
+    export lands in a fresh GENERATION directory
+    (``path/g<N+1>/shard=K/...``) and is promoted with one atomic
+    ``CURRENT`` pointer rename — the same discipline as the ANN/dedup
+    indexes (``generations.promote_generation``). A mid-write failure
+    (including the NULL-id guard firing) rmtree's the partial
     generation and leaves the previous export intact and still
     CURRENT; the export path is NEVER briefly absent, and a trainer
     that pinned ``export_root(path)`` at run start keeps reading its
     generation until retention (``keep_generations``, default 2:
     current + previous) releases it. Readers go through
-    ``read_training_shards`` / ``export_root``; a legacy append-only
-    export (shard dirs directly under ``path``) resolves to ``path``
-    itself, and its first overwrite migrates it onto generations
-    (the flat shard dirs are retained as the previous root, then
-    GC'd by the next overwrite).
+    ``read_training_shards`` / ``export_root``. The first append to a
+    fresh path promotes an empty ``g000001`` and appends into it, so
+    ``path`` only ever holds ``CURRENT`` and generation directories.
 
-    Concurrent OVERWRITE exports serialize on the same
-    ``maintenance_lock`` as the index maintainers (the dot-prefixed
-    lock file is invisible to parquet readers): two unserialized
-    promotions could otherwise interleave generation numbering and
-    GC. The append paths deliberately do NOT take the lock: a crash
-    mid-batch would leave a stale lock file that blocks the
-    checkpoint REPLAY ``batch_id`` exists for (the restarted query
-    is the same single writer, not a concurrent one — Structured
+    OVERWRITE exports serialize on the same ``maintenance_lock`` as
+    the index maintainers: two unserialized promotions could otherwise
+    interleave generation numbering and GC. An append holds the lock
+    only for that first promotion, never across its Spark job: a crash
+    mid-batch would otherwise leave a stale lock file that blocks the
+    checkpoint REPLAY ``batch_id`` exists for (the restarted query is
+    the same single writer, not a concurrent one — Structured
     Streaming already serializes one writer per checkpointed sink).
     Two genuinely concurrent append JOBS to one path remain the
     caller's contract violation (they can collide in Spark's shared
@@ -304,7 +286,38 @@ def write_training_shards(
         # task-local sort yields files in canonical order.
         .sortWithinPartitions("shard", "order_key")
     )
-    if mode == "append":
+    from sparktrends_spark.similarity.generations import (
+        maintenance_lock,
+        promote_generation,
+        read_current,
+    )
+
+    spark = df.sparkSession
+    if mode == "overwrite":
+        # crash-safe overwrite = generation promotion: a job failure
+        # (including the NULL-id guard firing, which a static overwrite
+        # onto the live path would discover only AFTER deleting the old
+        # export) removes the partial generation and the previous
+        # export stays CURRENT
+        with maintenance_lock(path, operation="shard-export-overwrite"):
+            promote_generation(
+                spark,
+                path,
+                lambda root: staged.write.mode("overwrite")
+                .partitionBy("shard")
+                .parquet(root),
+                keep_generations,
+            )
+    else:
+        if read_current(path) is None:
+            # the first write to a fresh path promotes an empty
+            # generation; re-checked under the lock, which covers only
+            # this pointer write
+            with maintenance_lock(path, operation="shard-export-append"):
+                if read_current(path) is None:
+                    promote_generation(
+                        spark, path, lambda root: None, keep_generations
+                    )
         # appends land in the CURRENT generation (the root a reader of
         # this export resolves); resolved once per call — the
         # streaming writer is the single writer per sink, so a
@@ -328,75 +341,23 @@ def write_training_shards(
                 "mixed partition depths under shard= break every "
                 "subsequent read — use one layout per export path"
             )
-    if batch_id is not None:
-        # replace-my-own-partition idempotence: dynamic overwrite
-        # touches ONLY the (shard, ingest_batch) partitions this
-        # batch produces — other batches' files are never read or
-        # rewritten, and the replacement happens at COMMIT time (no
-        # upfront delete), so a mid-job crash leaves prior batches
-        # untouched. No lock (see the docstring's locking note): the
-        # crash-replay path must not be blocked by the crash's own
-        # stale lock file.
-        (
-            staged.withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("shard", "ingest_batch")
-            .parquet(root)
-        )
-    elif mode == "append":
-        # additive: task files stage under _temporary and commit
-        staged.write.mode("append").partitionBy("shard").parquet(root)
-    else:
-        # crash-safe overwrite = generation promotion (the ANN/dedup
-        # index discipline, object-store ready): the new export lands
-        # complete in path/g<N+1>/ and ONE atomic CURRENT rename
-        # promotes it — a job failure (including the NULL-id guard
-        # firing, which a static overwrite onto the live path would
-        # discover only AFTER deleting the old export) rmtree's the
-        # partial generation and the previous export stays CURRENT.
-        # The path is never briefly absent; pinned readers keep their
-        # root until retention releases it.
-        import os
-        import shutil
-
-        from sparktrends_spark.similarity.generations import (
-            FLAT_ROOT,
-            gc_generations,
-            maintenance_lock,
-            next_generation,
-            write_current,
-        )
-
-        spark = df.sparkSession
-        with maintenance_lock(path, operation="shard-export-overwrite"):
-            new_gen = next_generation(path)
-            gen_dir = os.path.join(path, new_gen)
-            try:
-                staged.write.mode("overwrite").partitionBy("shard").parquet(
-                    gen_dir
-                )
-            except BaseException:
-                # never leave a partial never-promoted generation
-                shutil.rmtree(gen_dir, ignore_errors=True)
-                raise
-            write_current(path, new_gen)
-            # a legacy flat export's "artifacts" are its shard dirs —
-            # enumerated at GC time (the names are data-dependent)
-            flat = tuple(
-                d for d in os.listdir(path) if d.startswith("shard=")
+        if batch_id is not None:
+            # replace-my-own-partition idempotence: dynamic overwrite
+            # touches ONLY the (shard, ingest_batch) partitions this
+            # batch produces — other batches' files are never read or
+            # rewritten, and the replacement happens at COMMIT time (no
+            # upfront delete), so a mid-job crash leaves prior batches
+            # untouched
+            (
+                staged.withColumn("ingest_batch", F.lit(int(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("shard", "ingest_batch")
+                .parquet(root)
             )
-            removed = gc_generations(path, flat, keep_generations)
-            if FLAT_ROOT in removed:
-                # the flat parquet write also left root-level
-                # job-commit markers — sweep ONLY those (an unrelated
-                # file a user co-located at the export root, e.g. a
-                # README or a manifest dump, is not ours to delete)
-                for f in os.listdir(path):
-                    fp = os.path.join(path, f)
-                    if os.path.isfile(fp) and _is_commit_marker(f):
-                        os.remove(fp)
-            spark.catalog.refreshByPath(path)
+        else:
+            # additive: task files stage under _temporary and commit
+            staged.write.mode("append").partitionBy("shard").parquet(root)
     return {
         "n_docs": int(obs.get["n_docs"]),
         "n_shards": n_shards,

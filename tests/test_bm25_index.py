@@ -215,10 +215,13 @@ def test_append_canonicalizes_types_and_guards_id_name(
     )
     append_bm25_index(batch, idx)
     # every file in every bucket reads back under one schema
-    post = spark.read.parquet(f"{idx}/postings")
+    from sparktrends_spark.similarity.generations import resolve_root
+
+    root = resolve_root(idx)
+    post = spark.read.parquet(f"{root}/postings")
     assert post.schema["doc_id"].dataType.simpleString() == "bigint"
     assert post.filter("doc_id = 25").count() > 0
-    dl = spark.read.parquet(f"{idx}/doclens")
+    dl = spark.read.parquet(f"{root}/doclens")
     assert dl.schema["doc_id"].dataType.simpleString() == "bigint"
     assert dl.count() == 21
 

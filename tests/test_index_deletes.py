@@ -225,31 +225,32 @@ def test_gc_retention_ignores_unpromoted_orphans(spark, sf_dir, tmp_path):
     """The r10 ADVICE medium: a retrain that crashed between creating
     path/g<N> and promoting the pointer leaves an orphan dir. The next
     successful retrain must (a) NOT count the orphan toward retention
-    — the flat root that was serving until that very promotion stays
+    — the root that was serving until that very promotion stays
     retained for its pinned readers — and (b) clean the orphan up."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "orph")
     build_ivfpq_index(emb, idx, dim=_DIM, store_vectors=True)
+    built = resolve_index_root(idx)
 
     # simulate the crashed retrain: a partial generation dir that was
     # never promoted (no CURRENT write happened)
-    orphan = os.path.join(idx, "g000001")
+    orphan = os.path.join(idx, "g000002")
     os.makedirs(os.path.join(orphan, "codes"))
     with open(os.path.join(orphan, "codes", "part-junk.parquet"), "wb") as fh:
         fh.write(b"not a real parquet file")
 
-    # a reader pinned to the flat root before the next retrain
+    # a reader pinned to the built root before the next retrain
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     pinned = ivfpq_index_topk(spark, idx, q, dim=_DIM, k_neighbors=3)
 
     info = retrain_ivfpq_index(spark, idx, dim=_DIM)
-    assert info["generation"] == "g000002"  # orphan still numbered past
-    assert "g000001 (unpromoted)" in info["gc_removed"], info
+    assert info["generation"] == "g000003"  # orphan still numbered past
+    assert "g000002 (unpromoted)" in info["gc_removed"], info
     assert not os.path.isdir(orphan)
-    # the flat root (the actually-serving predecessor) is retained
-    assert os.path.isdir(os.path.join(idx, "codes"))
+    # the built root (the actually-serving predecessor) is retained
+    assert os.path.isdir(os.path.join(built, "codes"))
     # and the pinned reader's FIRST execution — after the promotion —
     # still reads its retained complete generation
     assert len(pinned.collect()) == 9
@@ -314,45 +315,6 @@ def test_delete_lands_mid_streaming_ingest(spark, sf_dir, tmp_path):
     ), served
 
 
-def test_legacy_current_without_history_keeps_promoted_generations(tmp_path):
-    """A pre-round-11 CURRENT file has no promotion history. The next
-    promotion must RECONSTRUCT it as everything-on-disk-was-promoted
-    (the legacy retention behavior) — collapsing it to just the flat
-    root would hand legacy promoted generations to the orphan GC
-    regardless of the keep count, failing readers pinned to them."""
-    import json
-
-    from sparktrends_spark.similarity.generations import (
-        FLAT_ROOT,
-        gc_generations,
-        write_current,
-    )
-
-    p = str(tmp_path / "legacy")
-    # fabricate a legacy index: flat root + two promoted generations,
-    # CURRENT in the pre-history format
-    for root in ("codes", "g000001/codes", "g000002/codes"):
-        os.makedirs(os.path.join(p, root))
-    with open(os.path.join(p, "CURRENT"), "w") as fh:
-        json.dump({"generation": "g000002"}, fh)
-
-    # the next retrain promotes g000003 ...
-    os.makedirs(os.path.join(p, "g000003/codes"))
-    write_current(p, "g000003")
-    removed = gc_generations(p, ("codes",), keep=3)
-    # ... and with keep=3 the retention window is [g1, g2, g3]: only
-    # the flat root ages out; g000001 is NOT '(unpromoted)' junk
-    assert removed == [FLAT_ROOT], removed
-    assert os.path.isdir(os.path.join(p, "g000001"))
-    assert os.path.isdir(os.path.join(p, "g000002"))
-    # and the rewritten history is pruned to live roots only (the
-    # pointer doc must not accrete dead names forever)
-    with open(os.path.join(p, "CURRENT")) as fh:
-        doc = json.load(fh)
-    assert doc["generation"] == "g000003"
-    assert doc["history"] == ["g000001", "g000002"], doc
-
-
 def test_lock_timeout_reports_holder(tmp_path):
     """The lock file carries {pid, host, operation}; a timed-out waiter
     sees WHO holds it instead of an evidence-free 'verify no job is
@@ -370,13 +332,15 @@ def test_lock_timeout_reports_holder(tmp_path):
 
 
 def _needs_an_index():
-    """Every delete and maintenance policy, called on a path with no
-    index."""
+    """Every append, delete and maintenance policy, called on a path
+    with no index."""
     from sparktrends_spark.similarity.cosine import (
+        append_ivf_index,
         delete_from_ivf_index,
         maybe_retrain_ivf_index,
     )
     from sparktrends_spark.text.bm25_index import (
+        append_bm25_index,
         delete_from_bm25_index,
         maybe_compact_bm25_index,
     )
@@ -385,12 +349,26 @@ def _needs_an_index():
         maybe_compact_dedup_index,
     )
 
-    def labeled(spark):  # never executed: no threshold is reached
+    def labeled(spark):  # never executed: the index check comes first
         return spark.createDataFrame(
             [], "vec_id long, embedding array<double>, label int"
         )
 
+    def docs(spark):
+        return spark.createDataFrame(
+            [(1, "an appended document")], "doc_id long, text string"
+        )
+
     return {
+        "append_ivf_index": lambda spark, p: append_ivf_index(
+            labeled(spark), p
+        ),
+        "append_ivfpq_index": lambda spark, p: append_ivfpq_index(
+            labeled(spark), p, dim=_DIM
+        ),
+        "append_bm25_index": lambda spark, p: append_bm25_index(
+            docs(spark), p
+        ),
         "delete_from_ivf_index": lambda spark, p: delete_from_ivf_index(
             spark, p, [1, 2]
         ),
@@ -560,10 +538,10 @@ def test_ivf_index_compact_merges_and_reclaims(spark, sf_dir, tmp_path):
     assert before and all(r[1] % 9 != 5 for r in before)
 
     info = compact_ivf_index(spark, idx, files_per_cell=1)
-    assert info["generation"] == "g000001"
+    assert info["generation"] == "g000002"
     assert info["files_after"] < info["files_before"], info
     assert info["rows_before"] - info["rows_after"] == n_del, info
-    root = os.path.join(idx, "g000001")
+    root = os.path.join(idx, "g000002")
     assert not os.path.isdir(os.path.join(root, "tombstones"))
     # one file per cell dir in the compacted vectors table
     vdir = os.path.join(root, "vectors")
@@ -634,8 +612,8 @@ def test_dedup_index_delete_stops_suppressing_and_compact_reclaims(
     assert cinfo["n_reclaimed"] == 1, cinfo
     # compaction promoted a generation (the pointer layout, not a dir
     # swap) and the promoted root's tombstone set starts clean
-    assert cinfo["generation"] == "g000001", cinfo
-    assert resolve_root(idx) == os.path.join(idx, "g000001")
+    assert cinfo["generation"] == "g000002", cinfo
+    assert resolve_root(idx) == os.path.join(idx, "g000002")
     assert (
         read_dedup_index(spark, idx).filter(F.col("doc_id") == 1).count()
         == 0
@@ -744,7 +722,7 @@ def test_dedup_index_generation_lifecycle(spark, tmp_path):
     g<N> via CURRENT, a reader pinned to the pre-compact root keeps
     serving after the promotion (retention keeps the previous root),
     appends land in the CURRENT generation, an unpromoted orphan dir
-    is GC'd without counting toward retention, and the flat root is
+    is GC'd without counting toward retention, and the built root is
     reclaimed once it falls out of the keep-2 window."""
     from sparktrends_spark.similarity.generations import (
         promoted_roots,
@@ -766,21 +744,21 @@ def test_dedup_index_generation_lifecycle(spark, tmp_path):
         ),
         idx,
     )
-    assert resolve_root(idx) == idx  # flat until first promotion
-    assert os.path.isdir(os.path.join(idx, "signatures"))
+    assert resolve_root(idx) == os.path.join(idx, "g000001")
+    assert os.path.isdir(os.path.join(idx, "g000001", "signatures"))
 
     # a crashed writer's never-promoted generation dir must be junk
     # to the next locked writer's GC, not a retention candidate
-    os.makedirs(os.path.join(idx, "g000001", "signatures"))
+    os.makedirs(os.path.join(idx, "g000002", "signatures"))
 
     pinned = read_dedup_index(spark, idx)  # pre-compact reader
     delete_from_dedup_index(spark, idx, [2])
     c1 = compact_dedup_index(spark, idx, target_files=1)
-    assert c1["generation"] == "g000002", c1
-    assert "g000001 (unpromoted)" in c1["gc_removed"], c1
-    assert resolve_root(idx) == os.path.join(idx, "g000002")
-    # flat root survives the first promotion (keep 2: current + prev),
-    # so the pinned pre-compact reader still serves its full view
+    assert c1["generation"] == "g000003", c1
+    assert "g000002 (unpromoted)" in c1["gc_removed"], c1
+    assert resolve_root(idx) == os.path.join(idx, "g000003")
+    # the built root survives the first promotion (keep 2: current +
+    # prev), so the pinned pre-compact reader still serves its full view
     assert pinned.count() == 2
     assert read_dedup_index(spark, idx).count() == 1
 
@@ -792,89 +770,15 @@ def test_dedup_index_generation_lifecycle(spark, tmp_path):
     incremental_dedup(fresh, idx, append=True)
     assert (
         spark.read.parquet(
-            os.path.join(idx, "g000002", "signatures")
+            os.path.join(idx, "g000003", "signatures")
         ).count()
         == 2
     )
 
-    # second promotion pushes the flat root out of the keep-2 window
+    # second promotion pushes the built root out of the keep-2 window
     c2 = compact_dedup_index(spark, idx, target_files=1)
-    assert c2["generation"] == "g000003", c2
-    assert "<flat>" in c2["gc_removed"], c2
-    assert not os.path.isdir(os.path.join(idx, "signatures"))
-    assert promoted_roots(idx) == ["g000002", "g000003"]
+    assert c2["generation"] == "g000004", c2
+    assert "g000001" in c2["gc_removed"], c2
+    assert not os.path.isdir(os.path.join(idx, "g000001"))
+    assert promoted_roots(idx) == ["g000003", "g000004"]
     assert read_dedup_index(spark, idx).count() == 2
-
-
-def test_dedup_index_legacy_migration(spark, tmp_path):
-    """A pre-round-12 index (parquet files directly under the path,
-    tombstones in _tombstones) is refused with a migration hint, and
-    migrate_dedup_index upgrades it in place: same rows, tombstones
-    carried over, second call a no-op."""
-    import pytest
-
-    from sparktrends_spark.text.dedup_index import (
-        banded_signatures,
-        incremental_dedup,
-        migrate_dedup_index,
-        read_dedup_index,
-    )
-
-    idx = str(tmp_path / "legacy")
-    corpus = spark.createDataFrame(
-        [(1, _BASE), (2, "unrelated corpus text about query engines")],
-        "doc_id long, text string",
-    )
-    # fabricate the legacy layout: signature parquet at the root,
-    # tombstones under the old underscore-hidden name
-    banded_signatures(corpus).write.parquet(idx)
-    spark.createDataFrame([(2,)], "doc_id long").write.parquet(
-        os.path.join(idx, "_tombstones")
-    )
-
-    near = spark.createDataFrame(
-        [(11, _BASE.replace("river bank", "river bend"))],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="migrate_dedup_index"):
-        incremental_dedup(near, idx, append=False)
-
-    info = migrate_dedup_index(spark, idx)
-    assert not info["already_migrated"] and info["migrated_files"] > 0
-    assert read_dedup_index(spark, idx).count() == 2
-    # the carried-over tombstone still suppresses at match time
-    hit = incremental_dedup(near, idx, append=False).collect()[0]
-    assert hit["is_dup"] and hit["matched_doc"] == 1  # doc 1 not tombstoned
-    from sparktrends_spark.similarity.generations import read_tombstones
-
-    tomb = read_tombstones(spark, idx, "doc_id")
-    assert tomb is not None and tomb.collect()[0]["doc_id"] == 2
-
-    again = migrate_dedup_index(spark, idx)
-    assert again["already_migrated"], again
-    with pytest.raises(ValueError, match="nothing to migrate"):
-        migrate_dedup_index(spark, str(tmp_path / "nope"))
-
-    # idempotence must survive the flat root's GC: after two
-    # compactions the signatures live ONLY under g<N> and the flat
-    # dir is gone — a guard checking the literal flat path would
-    # misread this as "nothing to migrate" (the round-12 advice item)
-    from sparktrends_spark.text.dedup_index import compact_dedup_index
-
-    compact_dedup_index(spark, idx, target_files=1)
-    # fragment so the second compact actually rewrites (it no-ops on
-    # an already-compact, tombstone-free index) and pushes the flat
-    # root out of the keep-2 window
-    incremental_dedup(
-        spark.createDataFrame(
-            [(31, "entirely fresh text to fragment the index")],
-            "doc_id long, text string",
-        ),
-        idx,
-        append=True,
-    )
-    c2 = compact_dedup_index(spark, idx, target_files=1)
-    assert "<flat>" in c2["gc_removed"], c2
-    assert not os.path.isdir(os.path.join(idx, "signatures"))
-    late = migrate_dedup_index(spark, idx)
-    assert late["already_migrated"], late

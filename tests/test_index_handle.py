@@ -337,7 +337,9 @@ def test_indexes_built_from_two_threads_then_served(spark, sf_dir, tmp_path):
         assert not t.is_alive()
     assert not errors, errors
     for p in (ivf, bm):
-        assert generations._HANDLES[os.path.abspath(p)].root == p
+        assert generations._HANDLES[os.path.abspath(p)].root == (
+            generations.resolve_root(p)
+        )
 
     ivf_q, bm_q = _ivf_queries(spark, emb), _bm25_queries(spark, docs)
     seq_ivf, seq_bm = str(tmp_path / "seq_ivf"), str(tmp_path / "seq_bm")
@@ -355,7 +357,8 @@ def test_append_without_vectors_names_the_root(spark, sf_dir, tmp_path):
     """The append takes the stored element type from the handle's
     pinned schema; a root with no ``vectors`` (never built, or only
     its small artifacts copied) raises a ValueError naming it instead
-    of guessing ``double``."""
+    of guessing ``double``. The check runs before the maintenance
+    lock, so a never-built path is not created."""
     import shutil
 
     emb = _emb(spark, sf_dir)
@@ -363,11 +366,15 @@ def test_append_without_vectors_names_the_root(spark, sf_dir, tmp_path):
     build_ivf_index(emb.filter("vec_id >= 100"), built)
     partial = str(tmp_path / "partial")
     for a in ("centroids", "meta"):
-        shutil.copytree(os.path.join(built, a), os.path.join(partial, a))
+        shutil.copytree(
+            os.path.join(generations.resolve_root(built), a),
+            os.path.join(partial, a),
+        )
     for idx in (partial, str(tmp_path / "never_built")):
         with pytest.raises(ValueError, match=f"no index at {idx}"):
             append_ivf_index(emb.filter("vec_id < 100"), idx)
         assert not os.path.isdir(os.path.join(idx, "vectors"))
+    assert not os.path.isdir(tmp_path / "never_built")
 
 
 def test_handle_cache_under_concurrent_requests(tmp_path):

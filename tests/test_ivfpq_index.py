@@ -14,6 +14,7 @@ from sparktrends_spark.similarity.ivfpq_index import (
     append_ivfpq_index,
     build_ivfpq_index,
     ivfpq_index_topk,
+    resolve_index_root,
 )
 from sparktrends_spark.sources.tables import load_table
 
@@ -66,7 +67,8 @@ def test_ivfpq_index_append_flow(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(emb.filter("vec_id % 2 = 0"), idx, dim=_DIM)
-    books_before = spark.read.parquet(f"{idx}/books").collect()
+    root = resolve_index_root(idx)
+    books_before = spark.read.parquet(f"{root}/books").collect()
 
     planted = emb.filter("vec_id = 0").select(
         F.lit(900000).cast("long").alias("vec_id"),
@@ -76,13 +78,13 @@ def test_ivfpq_index_append_flow(spark, sf_dir, tmp_path):
     append_ivfpq_index(
         emb.filter("vec_id % 2 = 1").unionByName(planted), idx, dim=_DIM
     )
-    codes = spark.read.parquet(f"{idx}/codes")
+    codes = spark.read.parquet(f"{root}/codes")
     assert codes.count() == emb.count() + 1
     assert codes.select("vec_id").distinct().count() == codes.count()
     # codes carry ints + the cell partition column only — never vectors
     assert set(codes.columns) == {"vec_id", "cell", "code_0", "code_1"}
     # quantizers untouched by the append
-    assert sorted(map(tuple, spark.read.parquet(f"{idx}/books").collect())) == sorted(
+    assert sorted(map(tuple, spark.read.parquet(f"{root}/books").collect())) == sorted(
         map(tuple, books_before)
     )
 
@@ -126,12 +128,17 @@ def test_ivfpq_append_batching_invariance(spark, sf_dir, tmp_path):
 
     def codes(idx):
         return sorted(
-            map(tuple, spark.read.parquet(f"{idx}/codes").collect())
+            map(
+                tuple,
+                spark.read.parquet(
+                    f"{resolve_index_root(idx)}/codes"
+                ).collect(),
+            )
         )
 
     assert codes(one) == codes(four)
     for idx in (one, four):
-        n = spark.read.parquet(f"{idx}/vectors").count()
+        n = spark.read.parquet(f"{resolve_index_root(idx)}/vectors").count()
         assert n == emb.count()
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -302,7 +309,7 @@ def test_ivfpq_filtered_search_lifecycle(spark, sf_dir, tmp_path):
         )
     # with it -> appended rows join the filterable candidate set
     append_ivfpq_index(batch, idx, dim=_DIM)
-    codes = spark.read.parquet(f"{idx}/codes")
+    codes = spark.read.parquet(f"{resolve_index_root(idx)}/codes")
     assert codes.count() == emb.count()
     assert "label" in codes.columns
 
@@ -402,9 +409,9 @@ def test_pinned_generation_serve_survives_retrain(spark, sf_dir, tmp_path):
     The immutability contract is precise: a SUPERSEDED generation is
     frozen (appends target CURRENT, retrains create new dirs); the
     root that is still CURRENT can keep growing by appends. So the
-    test pins g000001 AFTER it is superseded, ingests new data (which
-    lands in g000002 only), and requires the pinned serve to be
-    byte-identical to the capture taken when g000001 was current —
+    test pins g000002 AFTER it is superseded, ingests new data (which
+    lands in g000003 only), and requires the pinned serve to be
+    byte-identical to the capture taken when g000002 was current —
     while CURRENT's own answers move."""
     from sparktrends_spark.similarity.generations import resolve_root
     from sparktrends_spark.similarity.ivfpq_index import (
@@ -423,17 +430,17 @@ def test_pinned_generation_serve_survives_retrain(spark, sf_dir, tmp_path):
             spark, path, queries, dim=_DIM, k_neighbors=3, nprobe=2
         ).collect()))
 
-    retrain_ivfpq_index(spark, idx, dim=_DIM)  # promotes g000001
-    assert resolve_root(idx).endswith("g000001")
+    retrain_ivfpq_index(spark, idx, dim=_DIM)  # promotes g000002
+    assert resolve_root(idx).endswith("g000002")
     g1_rows = serve(idx)
 
-    # supersede g000001 (identical corpus — deterministic retrain),
+    # supersede g000002 (identical corpus — deterministic retrain),
     # then ingest near-duplicate neighbors: the append lands in
-    # g000002 (CURRENT) ONLY, so g000001 is now frozen on disk
+    # g000003 (CURRENT) ONLY, so g000002 is now frozen on disk
     retrain_ivfpq_index(spark, idx, dim=_DIM)
-    assert resolve_root(idx).endswith("g000002")
+    assert resolve_root(idx).endswith("g000003")
     g1_codes = spark.read.parquet(
-        os.path.join(idx, "g000001", "codes")
+        os.path.join(idx, "g000002", "codes")
     ).count()
     planted = emb.filter(F.col("vec_id") < 3).select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
@@ -442,20 +449,20 @@ def test_pinned_generation_serve_survives_retrain(spark, sf_dir, tmp_path):
     )
     append_ivfpq_index(planted, idx, dim=_DIM)
     # isolation, on deterministic observables: the append landed in
-    # CURRENT (g000002 grew by the batch) and the superseded root did
+    # CURRENT (g000003 grew by the batch) and the superseded root did
     # not change (serve-VALUE comparisons against CURRENT would be
     # tie-fragile here: the toy 4-code quantizer gives the planted
     # near-dups the same codes as their originals, so they tie on
     # approx_d2 and lose the vec_id tie-break)
     assert (
-        spark.read.parquet(os.path.join(idx, "g000002", "codes")).count()
+        spark.read.parquet(os.path.join(idx, "g000003", "codes")).count()
         == g1_codes + 3
     )
     assert (
-        spark.read.parquet(os.path.join(idx, "g000001", "codes")).count()
+        spark.read.parquet(os.path.join(idx, "g000002", "codes")).count()
         == g1_codes
     )
     # the pinned serve is byte-identical to the capture taken when
-    # g000001 was CURRENT, across a promotion and an ingest
-    assert serve(os.path.join(idx, "g000001")) == g1_rows
+    # g000002 was CURRENT, across a promotion and an ingest
+    assert serve(os.path.join(idx, "g000002")) == g1_rows
     assert len(serve(idx)) == len(g1_rows)  # CURRENT still serves

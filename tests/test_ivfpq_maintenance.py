@@ -160,7 +160,7 @@ def test_recall_decay_staleness_and_retrain_restore(spark, tmp_path):
     decayed = _recall(spark, idx, x, qids, gt)
 
     info = retrain_ivfpq_index(spark, idx, dim=_DIM, iterations=3)
-    assert info["generation"] == "g000001"
+    assert info["generation"] == "g000002"
     assert info["n_vectors"] == _N
     restored = _recall(spark, idx, x, qids, gt)
     assert restored > decayed + 0.2, (decayed, restored)
@@ -196,7 +196,7 @@ def test_maybe_retrain_policy(spark, sf_dir, tmp_path):
     )
     assert stale["retrained"], stale
     assert any("size_ratio" in r for r in stale["reasons"]), stale
-    assert stale["retrain"]["generation"] == "g000001"
+    assert stale["retrain"]["generation"] == "g000002"
     after = maybe_retrain_ivfpq_index(spark, idx, dim=64, max_size_ratio=1.5)
     assert not after["retrained"], after
 
@@ -217,8 +217,8 @@ def test_maybe_retrain_policy_under_streaming_ingest(spark, sf_dir, tmp_path):
     build_ivfpq_index(
         emb.filter("vec_id % 8 = 0"), idx, dim=64, store_vectors=True
     )
-    # pin a reader to the flat (pre-retrain) generation; first executed
-    # only after the mid-stream retrain promotes g000001
+    # pin a reader to the built (pre-retrain) generation; first
+    # executed only after the mid-stream retrain promotes g000002
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -263,7 +263,7 @@ def test_maybe_retrain_policy_under_streaming_ingest(spark, sf_dir, tmp_path):
     # nothing lost across the retrain boundary: every appended row is
     # in the CURRENT generation
     root = resolve_index_root(idx)
-    assert root.endswith("g000001")
+    assert root.endswith("g000002")
     assert spark.read.parquet(f"{root}/codes").count() == n_total
     # the pinned pre-retrain reader finishes on its retained generation
     assert len(pinned.collect()) == 9
@@ -302,7 +302,7 @@ def test_concurrent_policy_runs_retrain_once(spark, sf_dir, tmp_path):
     assert sum(1 for r in results if r["retrained"]) == 1, results
     from sparktrends_spark.similarity.generations import generations
 
-    assert generations(idx) == ["g000001"]
+    assert generations(idx) == ["g000001", "g000002"]
 
 
 def test_compact_merges_small_files_values_unchanged(spark, sf_dir, tmp_path):
@@ -339,10 +339,10 @@ def test_compact_merges_small_files_values_unchanged(spark, sf_dir, tmp_path):
     st_before = ivfpq_index_staleness(spark, idx)
 
     info = compact_ivfpq_index(spark, idx, files_per_cell=1)
-    assert info["generation"] == "g000001"
+    assert info["generation"] == "g000002"
     assert info["files_after"] < info["files_before"], info
     # one file per cell directory in the compacted codes table
-    gen_codes = os.path.join(idx, "g000001", "codes")
+    gen_codes = os.path.join(idx, "g000002", "codes")
     for cell_dir in os.listdir(gen_codes):
         d = os.path.join(gen_codes, cell_dir)
         if os.path.isdir(d):
@@ -372,8 +372,8 @@ def test_compact_merges_small_files_values_unchanged(spark, sf_dir, tmp_path):
     # write): per-cell counts land in [1, 2] with at least one cell
     # split, and serve stays byte-identical
     info2 = compact_ivfpq_index(spark, idx, files_per_cell=2)
-    assert info2["generation"] == "g000002"
-    gen2_codes = os.path.join(idx, "g000002", "codes")
+    assert info2["generation"] == "g000003"
+    gen2_codes = os.path.join(idx, "g000003", "codes")
     counts = []
     for cell_dir in os.listdir(gen2_codes):
         d = os.path.join(gen2_codes, cell_dir)
@@ -430,7 +430,10 @@ def test_maintenance_lock_serializes_writers(spark, sf_dir, tmp_path):
             )
     # lock released: the same append succeeds and nothing was lost
     append_ivfpq_index(emb.filter("vec_id % 2 = 1"), idx, dim=64)
-    assert spark.read.parquet(f"{idx}/codes").count() == emb.count()
+    assert (
+        spark.read.parquet(f"{resolve_index_root(idx)}/codes").count()
+        == emb.count()
+    )
     # serving never takes the lock: serve while a writer holds it
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -476,8 +479,8 @@ def test_ivf_index_retrain_and_staleness(spark, sf_dir, tmp_path):
     assert st1["sim_drop"] > 0, st1
 
     info = retrain_ivf_index(emb, idx)
-    assert info["generation"] == "g000001"
-    assert resolve_index_root(idx) == os.path.join(idx, "g000001")
+    assert info["generation"] == "g000002"
+    assert resolve_index_root(idx) == os.path.join(idx, "g000002")
     served = sorted(
         map(tuple, ivf_index_topk(spark, idx, q, k=3, nprobe=1).collect())
     )
@@ -498,11 +501,12 @@ def test_retrain_generations_pin_readers_and_gc(spark, sf_dir, tmp_path):
     retrain stays pinned to its generation — its FIRST execution after
     the promotion still reads its own (retained) complete generation;
     new serves resolve the new generation; a second retrain GCs the
-    oldest root; an overwrite-build resets the generation history."""
+    oldest root; an overwrite-build promotes one more generation, like
+    every writer."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "gen")
     build_ivfpq_index(emb, idx, dim=64, store_vectors=True)
-    assert resolve_index_root(idx) == idx  # legacy flat layout
+    assert resolve_index_root(idx) == os.path.join(idx, "g000001")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -515,16 +519,16 @@ def test_retrain_generations_pin_readers_and_gc(spark, sf_dir, tmp_path):
         )
     )
     release_persisted()
-    # pinned plan: resolves the flat root NOW, first executed only
-    # AFTER the retrain below promotes g000001 — its scan must read
-    # the retained flat generation, not error and not mix generations
+    # pinned plan: resolves the built root NOW, first executed only
+    # AFTER the retrain below promotes g000002 — its scan must read
+    # the retained built generation, not error and not mix generations
     pinned = ivfpq_index_topk(spark, idx, queries, dim=64, k_neighbors=3)
 
     info1 = retrain_ivfpq_index(spark, idx, dim=64)
-    assert info1["generation"] == "g000001"
-    assert resolve_index_root(idx) == os.path.join(idx, "g000001")
-    # flat root retained (keep_generations=2)
-    assert os.path.isdir(os.path.join(idx, "codes"))
+    assert info1["generation"] == "g000002"
+    assert resolve_index_root(idx) == os.path.join(idx, "g000002")
+    # built root retained (keep_generations=2)
+    assert os.path.isdir(os.path.join(idx, "g000001", "codes"))
     assert sorted(map(tuple, pinned.collect())) == before
     release_persisted()
     # the retrained corpus is unchanged, so the new generation serves
@@ -541,22 +545,22 @@ def test_retrain_generations_pin_readers_and_gc(spark, sf_dir, tmp_path):
     release_persisted()
 
     info2 = retrain_ivfpq_index(spark, idx, dim=64)
-    assert info2["generation"] == "g000002"
-    assert info2["gc_removed"] == ["<flat>"]
-    assert not os.path.isdir(os.path.join(idx, "codes"))
-    assert os.path.isdir(os.path.join(idx, "g000001"))
+    assert info2["generation"] == "g000003"
+    assert info2["gc_removed"] == ["g000001"]
+    assert not os.path.isdir(os.path.join(idx, "g000001"))
     assert os.path.isdir(os.path.join(idx, "g000002"))
+    assert os.path.isdir(os.path.join(idx, "g000003"))
     # a reclaimed root is GONE — a reader trying to re-list it fails
     # loudly rather than silently reading stale or mixed data
     with pytest.raises(Exception):
-        spark.read.parquet(os.path.join(idx, "codes")).collect()
+        spark.read.parquet(os.path.join(idx, "g000001", "codes")).collect()
     release_persisted()
 
-    # a fresh OVERWRITE build resets the generation history entirely
+    # a fresh OVERWRITE build promotes the next generation, and
+    # retention reclaims the oldest
     build_ivfpq_index(emb, idx, dim=64)
-    assert resolve_index_root(idx) == idx
-    assert not os.path.exists(os.path.join(idx, "CURRENT"))
-    assert not os.path.isdir(os.path.join(idx, "g000001"))
+    assert resolve_index_root(idx) == os.path.join(idx, "g000004")
+    assert not os.path.isdir(os.path.join(idx, "g000002"))
     rows = ivfpq_index_topk(
         spark, idx, queries, dim=64, k_neighbors=3
     ).collect()

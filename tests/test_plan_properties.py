@@ -325,6 +325,26 @@ def test_tombstones_are_written_in_generations_only():
     assert hits == ["similarity/generations.py"], hits
 
 
+def test_generations_are_promoted_in_generations_only():
+    """One write path: every index build, retrain, compaction and the
+    shard export promote a generation through
+    ``generations.promote_generation``. A ``write_current(`` or
+    ``next_generation(`` call elsewhere would be a second promotion
+    that can skip its cleanup, GC or refresh."""
+    from pathlib import Path
+
+    import sparktrends_spark
+
+    root = Path(sparktrends_spark.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "write_current(" in p.read_text()
+        or "next_generation(" in p.read_text()
+    )
+    assert hits == ["similarity/generations.py"], hits
+
+
 def test_no_fixed_tmp_paths_in_package():
     """Query scratch tables live under ``plans.registry.scratch_root()``
     (per-process, removed at exit). A fixed ``/tmp/...`` root is shared

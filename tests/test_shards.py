@@ -151,12 +151,12 @@ def test_batch_id_replay_is_exactly_once(spark, sf_dir, tmp_path):
     # simulate a partial batch-1 write followed by a full replay
     write_training_shards(b1.limit(5), out, batch_id=1, **kw)
     write_training_shards(b1, out, batch_id=1, **kw)
-    back = spark.read.parquet(out)
+    back = read_training_shards(spark, out)
     assert back.count() == d.count()
     assert back.select("doc_id").distinct().count() == d.count()
     # shard stays the outermost partition dir; pruning still applies
     assert sorted(
-        p for p in os.listdir(out) if p.startswith("shard=")
+        p for p in os.listdir(export_root(out)) if p.startswith("shard=")
     ) == [f"shard={k}" for k in range(4)]
 
 
@@ -226,39 +226,6 @@ def test_failed_overwrite_preserves_previous_export(spark, sf_dir, tmp_path):
     write_training_shards(d, out, n_shards=4, salt="v3")
     assert not os.path.isdir(pinned)
     assert promoted_roots(out) == ["g000002", "g000003"]
-
-
-def test_legacy_flat_export_migrates_on_first_overwrite(spark, sf_dir, tmp_path):
-    """A pre-generation export (shard dirs directly under the path —
-    what append-only exports still produce) resolves to itself; its
-    first OVERWRITE promotes g000001 while retaining the flat dirs as
-    the previous root for pinned readers, and the next overwrite GCs
-    them including the flat writer's root-level _SUCCESS marker."""
-    d = _docs(spark, sf_dir)
-    out = str(tmp_path / "legacy")
-    # fabricate the legacy layout via the (still-flat) append path
-    write_training_shards(d, out, n_shards=4, salt="L", mode="append")
-    assert export_root(out) == out
-    assert os.path.isdir(os.path.join(out, "shard=0"))
-
-    # a user file co-located at the export root must SURVIVE the
-    # flat-root GC sweep (it only sweeps Spark job-commit markers)
-    readme = os.path.join(out, "README.txt")
-    with open(readme, "w") as fh:
-        fh.write("user notes about this export\n")
-
-    write_training_shards(d, out, n_shards=4, salt="L2")
-    assert export_root(out) == os.path.join(out, "g000001")
-    # flat root retained for pinned readers (keep-2)
-    assert os.path.isdir(os.path.join(out, "shard=0"))
-    assert spark.read.parquet(out + "/shard=0").count() > 0
-
-    write_training_shards(d, out, n_shards=4, salt="L3")
-    assert export_root(out) == os.path.join(out, "g000002")
-    assert not any(p.startswith("shard=") for p in os.listdir(out))
-    assert not os.path.isfile(os.path.join(out, "_SUCCESS"))
-    assert os.path.isfile(readme), "GC swept a user file at the root"
-    assert read_training_shards(spark, out).count() == d.count()
 
 
 # ---------------------------------------------------------------------------

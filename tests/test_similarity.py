@@ -13,6 +13,7 @@ from sparktrends_spark.similarity.cosine import (
     label_centroids,
     lsh_topk,
 )
+from sparktrends_spark.similarity.generations import resolve_root
 from sparktrends_spark.sources.tables import load_table
 
 
@@ -218,7 +219,7 @@ def test_ivf_index_append_flow(spark, sf_dir, tmp_path):
         emb.filter("vec_id % 2 = 1").unionByName(planted), idx
     )
 
-    ids = spark.read.parquet(f"{idx}/vectors").select("vec_id")
+    ids = spark.read.parquet(f"{resolve_root(idx)}/vectors").select("vec_id")
     assert ids.count() == emb.count() + 1
     assert ids.distinct().count() == ids.count()
 
@@ -283,7 +284,7 @@ def test_ivf_filtered_search_lifecycle(spark, sf_dir, tmp_path):
         append_ivf_index(batch.select("vec_id", "embedding"), idx)
     # with it -> appended rows join the filterable candidate set
     append_ivf_index(batch, idx)
-    stored = spark.read.parquet(f"{idx}/vectors")
+    stored = spark.read.parquet(f"{resolve_root(idx)}/vectors")
     assert stored.count() == emb.count() and "src" in stored.columns
 
     # retrain inherits payloads: a corpus missing them is refused, a
@@ -291,8 +292,6 @@ def test_ivf_filtered_search_lifecycle(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="payload"):
         retrain_ivf_index(emb.drop("src"), idx)
     retrain_ivf_index(emb, idx)
-    from sparktrends_spark.similarity.generations import resolve_root
-
     gen = spark.read.parquet(f"{resolve_root(idx)}/vectors")
     assert "src" in gen.columns and gen.count() == emb.count()
     post = serve().collect()
@@ -454,7 +453,8 @@ def test_ivf_index_append_canonicalizes_element_type(spark, sf_dir, tmp_path):
     )
     append_ivf_index(doubled, idx)
 
-    vecs = spark.read.parquet(f"{idx}/vectors")
+    root = resolve_root(idx)
+    vecs = spark.read.parquet(f"{root}/vectors")
     assert isinstance(vecs.schema["_cv"].dataType, ArrayType)
     assert isinstance(vecs.schema["_cv"].dataType.elementType, DoubleType)
     # touch every row of every cell — this is what blew up with
@@ -462,7 +462,7 @@ def test_ivf_index_append_canonicalizes_element_type(spark, sf_dir, tmp_path):
     n = vecs.select("vec_id", "_cv").filter(F.size("_cv") > 0).count()
     assert n == emb.count()
     for cell_row in vecs.select("cell").distinct().collect():
-        spark.read.parquet(f"{idx}/vectors").filter(
+        spark.read.parquet(f"{root}/vectors").filter(
             F.col("cell") == cell_row["cell"]
         ).select("_cv").collect()
     from sparktrends_spark.caching import release_persisted
